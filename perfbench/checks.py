@@ -74,31 +74,3 @@ def check_rankings(hybrid_dir: Path, ranked_dir: Path, rows: int, value_sum: int
     if sh != sr:
         raise CheckFailed(f"rankers disagree on sum(rnk * value): {sh} vs {sr}")
 
-
-def check_components(components_dir: Path, kept_dir: Path, membership: dict[int, int]) -> None:
-    """Every component lies inside one planted chain, there is exactly one
-    component per chain, and the kept documents are the unique ones plus
-    the minimum id of each chain."""
-    comp = read_parts(components_dir, ["node", "component"])
-    kept = read_parts(kept_dir, ["doc_id"])["doc_id"]
-    chain_ids = {c for c in membership.values() if c >= 0}
-    chain_of_component: dict[int, int] = {}
-    for node, root in zip(comp["node"].tolist(), comp["component"].tolist()):
-        chain = membership.get(node, -1)
-        if chain < 0:
-            raise CheckFailed(f"corpus_dedup: document {node} is not in a planted chain")
-        if chain_of_component.setdefault(root, chain) != chain:
-            raise CheckFailed(f"corpus_dedup: component {root} spans two planted chains")
-    if len(chain_of_component) != len(chain_ids):
-        raise CheckFailed(
-            f"corpus_dedup: {len(chain_of_component)} components, expected {len(chain_ids)} chains"
-        )
-    expect = {d for d, c in membership.items() if c < 0}
-    first: dict[int, int] = {}
-    for d, c in membership.items():
-        if c >= 0 and (c not in first or d < first[c]):
-            first[c] = d
-    expect.update(first.values())
-    got = kept.tolist()
-    if len(got) != len(set(got)) or set(got) != expect:
-        raise CheckFailed("corpus_dedup: kept documents are not one per chain plus every unique one")

@@ -37,7 +37,6 @@ class Span:
     group: str
     start_ms: float
     end_ms: float
-    parent: str | None = None
 
     def as_dict(self) -> dict:
         return {
@@ -45,7 +44,6 @@ class Span:
             "group": self.group,
             "start_ms": self.start_ms,
             "end_ms": self.end_ms,
-            "parent": self.parent,
         }
 
 

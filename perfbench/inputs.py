@@ -1,7 +1,7 @@
 """Seeded input generators for the benchmark.
 
 Inputs are made with numpy and pyarrow only, written once as parquet per
-(workload, seed, size) and reused from a cache directory. The program under
+(seed, size) and reused from a cache directory. The program under
 test only ever sees the parquet files.
 """
 
@@ -18,96 +18,19 @@ import pyarrow.parquet as pq
 
 INT_MODULUS = 1_000_000  # the reference's `rand() % 1000000` distribution
 
-_ALPHABET = np.array(list("abcdefghijklmnopqrstuvwxyz"))
 
-
-def write_ints(path: Path, seed: int, rows: int, modulus: int = INT_MODULUS) -> None:
+def write_ints(path: Path, seed: int, rows: int) -> None:
     """``(id, value)`` int64 rows: ids 0..rows-1, values uniform in
-    [0, modulus), so each value repeats about rows/modulus times."""
+    [0, INT_MODULUS), so each value repeats about rows/INT_MODULUS times."""
     rng = np.random.default_rng([seed, 1])
     table = pa.table(
         {
             "id": np.arange(rows, dtype=np.int64),
-            "value": rng.integers(0, modulus, rows, dtype=np.int64),
+            "value": rng.integers(0, INT_MODULUS, rows, dtype=np.int64),
         }
     )
     # 16 row groups so a local[4] scan splits into balanced tasks
     pq.write_table(table, path / "ints.parquet", row_group_size=max(1, -(-rows // 16)))
-
-
-def _vocabulary(rng: np.random.Generator, size: int) -> list[str]:
-    lengths = rng.integers(3, 10, size)
-    letters = rng.choice(_ALPHABET, int(lengths.sum()))
-    words, at = [], 0
-    for n in lengths:
-        words.append("".join(letters[at : at + n]))
-        at += n
-    return words
-
-
-def write_corpus(
-    path: Path,
-    seed: int,
-    unique_docs: int,
-    chains: int,
-    chain_len: int,
-    blocks: int = 4,
-    doc_chars: int = 2000,
-    vocab_size: int = 200_000,
-) -> None:
-    """A corpus of unique documents plus ``chains`` planted chains of
-    ``chain_len`` near-duplicates each.
-
-    A document is ``blocks`` contiguous runs of words. Link k of a chain
-    rewrites block (k - 1) mod ``blocks`` of link k - 1 with fresh words, so
-    links one apart share all blocks but one and links two apart all but
-    two. With four blocks the char 8-gram Jaccard similarity is about 0.6
-    between adjacent links and about 0.33 two apart: at a 0.5 threshold a
-    chain is a path, not a clique, and connected components needs about
-    log2(chain_len) rounds to collapse it.
-
-    Writes ``corpus.parquet`` ``(doc_id, text)`` for the program and
-    ``membership.parquet`` ``(doc_id, chain)`` for the checks, where chain
-    is -1 for a unique document. Doc ids are a permutation, so chain
-    members are scattered through the id space."""
-    rng = np.random.default_rng([seed, 2])
-    vocab = _vocabulary(rng, vocab_size)
-    words_per_doc = doc_chars // 7  # mean word length 6 plus a space
-    edges = np.linspace(0, words_per_doc, blocks + 1).astype(int)
-
-    def fresh(n: int = words_per_doc) -> np.ndarray:
-        return rng.integers(0, len(vocab), n)
-
-    docs: list[np.ndarray] = []
-    chain_of: list[int] = []
-    for c in range(chains):
-        doc = fresh()
-        for k in range(chain_len):
-            if k:
-                doc = doc.copy()
-                lo, hi = edges[(k - 1) % blocks], edges[(k - 1) % blocks + 1]
-                doc[lo:hi] = fresh(hi - lo)
-            docs.append(doc)
-            chain_of.append(c)
-    for _ in range(unique_docs):
-        docs.append(fresh())
-        chain_of.append(-1)
-
-    # The id layout comes from a fixed generator, not from the seed: how many
-    # rounds connected components needs depends on where the minimum id sits
-    # on each chain, and that work should not change from seed to seed.
-    ids = np.random.default_rng(0).permutation(len(docs)).astype(np.int64)
-    texts = [" ".join(vocab[w] for w in doc) for doc in docs]
-    order = np.argsort(ids)
-    pq.write_table(
-        pa.table({"doc_id": ids[order], "text": [texts[i] for i in order]}),
-        path / "corpus.parquet",
-        row_group_size=max(1, -(-len(docs) // 16)),
-    )
-    pq.write_table(
-        pa.table({"doc_id": ids[order], "chain": np.asarray(chain_of, dtype=np.int64)[order]}),
-        path / "membership.parquet",
-    )
 
 
 def _touch(path: Path) -> None:

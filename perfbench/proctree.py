@@ -73,7 +73,7 @@ def tree(root: int | None = None) -> list[Proc]:
 class Snapshot:
     """CPU seconds by role: the driver (this process), the JVM (the java
     child), and Python workers (everything under the JVM, plus what the JVM
-    reaped). ``total`` is the whole tree."""
+    reaped). ``cpu_s`` is the whole tree."""
 
     driver_s: float
     jvm_s: float
@@ -85,10 +85,6 @@ class Snapshot:
     @property
     def cpu_s(self) -> float:
         return self.driver_s + self.jvm_s + self.pyworker_s
-
-    @property
-    def rss_mb(self) -> float:
-        return self.driver_mb + self.jvm_mb + self.pyworker_mb
 
     def __sub__(self, other: "Snapshot") -> "Snapshot":
         return Snapshot(

@@ -1,12 +1,13 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload sort_write --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload sort_write --seed 1 --seconds 20 --trace 0
 
 Runs one workload in a single driver process (one closed-loop client) on a
-local Spark session with at most four task slots. The session is set up
-three times (get_spark plus a warm-up pass, the first one cold); setup_s
-is the median. Then warm passes run for ``--seconds``, each after Spark's
-caches are cleared, each checked outside the timed region.
+local Spark session with at most four task slots and every other setting
+as ``get_spark`` ships it. setup_s runs from process start, less input
+generation, through ``get_spark`` and the cold warm-up pass. Then warm
+passes run for ``--seconds``, each after Spark's caches are cleared, each
+checked outside the timed region.
 
 With ``--trace 0`` it prints the end-to-end metrics. With ``--trace 1`` it
 also runs traced windows with Spark's event log on and prints the
@@ -20,13 +21,25 @@ directory, removed on exit, SIGTERM included.
 
 from __future__ import annotations
 
+import os
 import time
 
-PROCESS_START = time.time()
+
+def _process_start() -> float:
+    """Epoch time at which this process started, from its start time in
+    ``/proc/self/stat`` (clock ticks since boot) and ``/proc/uptime``."""
+    with open("/proc/self/stat") as f:
+        stat = f.read()
+    with open("/proc/uptime") as f:
+        uptime = float(f.read().split()[0])
+    ticks = int(stat[stat.rindex(")") + 2 :].split()[19])  # field 22, starttime
+    return time.time() - (uptime - ticks / os.sysconf("SC_CLK_TCK"))
+
+
+PROCESS_START = _process_start()
 
 import argparse  # noqa: E402
 import json  # noqa: E402
-import os  # noqa: E402
 import shutil  # noqa: E402
 import signal  # noqa: E402
 import statistics  # noqa: E402
@@ -43,20 +56,16 @@ if str(ROOT) not in sys.path:
 from perfbench import proctree  # noqa: E402
 from perfbench.eventlog import COUNTERS, Span, read_events, window_counters  # noqa: E402
 
-SETUPS = 3  # session set-ups per run; setup_s is their median
-# The driver JVM's heap cap, set through get_spark's own environment knob.
-# With its 16g default G1 grew the heap to whatever its pacing picked, so
-# VmHWM differed by a third between runs and reached 6 GB on a 15 GB host.
-DRIVER_MEM = "1g"
 MIN_PASSES = 3
+CALIBRATION_REPEATS = 3
 # Per window, the event-log counters an optimisation is most likely to move;
-# all of COUNTERS are also reported summed over a traced pass.
+# all of COUNTERS are also reported summed over a traced pass. GC time is
+# left to the sum: in the short read and local-sort windows it is 0 s.
 WINDOW_COUNTERS = (
     "jobs",
     "tasks",
     "task_cpu_s",
     "task_wait_s",
-    "gc_s",
     "shuffle_write_mb",
     "shuffle_read_mb",
     "driver_idle_s",
@@ -68,9 +77,6 @@ ALL_WINDOWS = (
     "write",
     "hybrid_ranked",
     "ranked",
-    "shingles",
-    "pairs",
-    "cc",
 )
 
 
@@ -84,7 +90,7 @@ def _unit(name: str) -> str:
     return "count"
 
 
-END_TO_END = ("setup_s", "job_s", "cpu_s", "peak_rss_mb")
+END_TO_END = ("setup_s", "job_s", "cpu_s")
 PER_LAYER = (
     "session.start_s",
     "session.warmup_s",
@@ -98,12 +104,6 @@ PER_LAYER = (
     "sorting.jobs",
     "hybrid.ranked_s",
     "hybrid.kernel_s",
-    "dedup.shingles_s",
-    "dedup.pairs_s",
-    "dedup.cc_s",
-    "dedup.cc_jobs",
-    "dedup.pairs",
-    "dedup.components",
     *(f"spark.{c}" for c in COUNTERS),
     *(f"spark.{w}.{c}" for w in ALL_WINDOWS for c in WINDOW_COUNTERS),
     "cpu.driver_s",
@@ -120,11 +120,11 @@ def median(xs):
     return statistics.median(xs) if xs else 0.0
 
 
-def calibration_spin(repeats: int = 3) -> float:
+def calibration_spin() -> float:
     """Seconds for a fixed pure-Python loop: a host-health reading that
     shows when the machine itself was slow, reported beside the metrics."""
     times = []
-    for _ in range(repeats):
+    for _ in range(CALIBRATION_REPEATS):
         t0 = time.perf_counter()
         acc = 0
         for i in range(2_000_000):
@@ -286,15 +286,15 @@ class Bench:
         shutil.rmtree(out, ignore_errors=True)
         return sample
 
-    def setup(self, since: float) -> dict:
-        """Start a session and run the warm-up pass. ``since`` is when this
-        set-up began: process start (less input generation) for the first,
-        the call itself for later ones."""
-        pre_s = time.time() - since
+    def setup(self, excluded_s: float) -> dict:
+        """Start the session and run the cold warm-up pass. setup_s counts
+        from process start until the first timed pass can begin, so it
+        includes the warm-up pass's output check, less the ``excluded_s``
+        spent on the calibration spin and input generation."""
         start_s = self.start()
         warm = self.one_pass()
         return {
-            "setup_s": pre_s + start_s + warm["wall_s"],
+            "setup_s": time.time() - PROCESS_START - excluded_s,
             "start_s": start_s,
             "warmup_s": warm["wall_s"],
             "ok": warm["ok"],
@@ -325,7 +325,7 @@ class Bench:
                 finally:
                     end = time.time()
                     times[name] = end - start
-                    self.spans.append(Span(name, group, start * 1e3, end * 1e3, parent=f"pass#{k}"))
+                    self.spans.append(Span(name, group, start * 1e3, end * 1e3))
 
             self._attempt(run)
             self.group(None)
@@ -333,31 +333,29 @@ class Bench:
         return times
 
 
-def end_to_end(bench: Bench, setups: list[dict], samples: list[dict]) -> dict[str, float]:
+def end_to_end(setup: dict, samples: list[dict]) -> dict[str, float]:
     good = [s for s in samples if s["ok"]]
     if not good:
         raise RuntimeError("every timed pass failed")
     return {
-        "setup_s": median([s["setup_s"] for s in setups]),
+        "setup_s": setup["setup_s"],
         "job_s": median([s["wall_s"] for s in good]),
         "cpu_s": median([s["cpu"].cpu_s for s in good]),
-        "peak_rss_mb": proctree.snapshot().rss_mb,
     }
 
 
-def traced(bench: Bench, setups: list[dict], seconds: float, eventlog_dir: Path) -> dict[str, float]:
+def traced(bench: Bench, setup: dict, seconds: float, eventlog_dir: Path) -> dict[str, float]:
     """The traced run: untraced plain passes first, then a session with the
     event log on, running window passes and traced plain passes in turn."""
     wl = bench.wl
-    m = dict.fromkeys(PER_LAYER, 0.0)
-    m["session.start_s"] = setups[0]["start_s"]
-    m["session.warmup_s"] = setups[0]["warmup_s"]
+    m: dict[str, float] = {}
+    m["session.start_s"] = setup["start_s"]
+    m["session.warmup_s"] = setup["warmup_s"]
 
     plain = bench.timed_passes(seconds / 2)
     good = [s for s in plain if s["ok"]]
     if not good:
         raise RuntimeError("every untraced pass failed")
-    untraced_job_s = median([s["wall_s"] for s in good])
     m["cpu.driver_s"] = median([s["cpu"].driver_s for s in good])
     m["cpu.jvm_s"] = median([s["cpu"].jvm_s for s in good])
     m["cpu.pyworker_s"] = median([s["cpu"].pyworker_s for s in good])
@@ -385,12 +383,10 @@ def traced(bench: Bench, setups: list[dict], seconds: float, eventlog_dir: Path)
         bench.group(f"plain#{k}")
         traced_plain.append(bench.one_pass())
         bench.group(None)
-    extras: dict[str, float] = {}
-    out = bench.scratch / "extras"
-    bench._attempt(lambda: extras.update(wl.extras(bench.spark, bench.inp, out, bench.cpus)))
-    shutil.rmtree(out, ignore_errors=True)
-    m.update(extras)
     bench.stop()
+    extras: dict[str, float] = {}
+    bench._attempt(lambda: extras.update(wl.extras(bench.inp, bench.cpus)))
+    m.update(extras)
 
     counters = window_counters(read_events(eventlog_dir), bench.spans)
     win_t = {w: median([p[w] for p in windows if w in p]) for w in wl.windows}
@@ -407,11 +403,14 @@ def traced(bench: Bench, setups: list[dict], seconds: float, eventlog_dir: Path)
         for c in WINDOW_COUNTERS:
             m[f"spark.{w}.{c}"] = win_c[w][c]
     traced_good = [s["wall_s"] for s in traced_plain if s["ok"]]
+    # JIT and worker warm-up keep shortening passes through a run, so the
+    # untraced reference is its last passes, as many as were traced
+    untraced_job_s = median([s["wall_s"] for s in good][-len(traced_good) :])
     m["trace.overhead_s"] = median(traced_good) - untraced_job_s
     m["trace.unaccounted_share"] = 1.0 - wl.covered_s(win_t) / untraced_job_s
 
     if set(m) != set(PER_LAYER):
-        raise RuntimeError(f"metrics outside BENCHMARK.json: {sorted(set(m) - set(PER_LAYER))}")
+        raise RuntimeError(f"metrics differ from BENCHMARK.json: {sorted(set(m) ^ set(PER_LAYER))}")
     bench.detail["untraced_passes"] = [_sample_json(s) for s in plain]
     bench.detail["traced_passes"] = [_sample_json(s) for s in traced_plain]
     bench.detail["windows"] = {"seconds": win_t, "counters": win_c}
@@ -461,7 +460,6 @@ def main(argv=None) -> int:
         os.environ["TMPDIR"] = str(scratch / "tmp")
         tempfile.tempdir = None
         os.environ["SPARK_LOCAL_DIRS"] = str(scratch / "local")
-        os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
         os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={scratch / 'tmp'}"
         os.chdir(scratch)
 
@@ -475,22 +473,22 @@ def main(argv=None) -> int:
             "workload": wl.name,
             "seed": args.seed,
             "cpus": cpus,
-            "input_rows": inp.rows,
+            "input_rows": {"sort": inp.sort.rows, "rank": inp.rank.rows},
             "host": {"calib_spin_s": calib, "loadavg_start": os.getloadavg(), "steal_s": -steal_s()},
         }
         bench = Bench(wl, inp, scratch, cpus, detail)
-        setups = []
-        for i in range(SETUPS):
-            if i:
-                bench.stop()
-            setups.append(bench.setup(since=PROCESS_START + excluded if i == 0 else time.time()))
-        detail["setups"] = setups
+        setup = bench.setup(excluded)
+        detail["setup"] = setup
 
         if args.trace:
-            metrics = traced(bench, setups, args.seconds, scratch / "eventlog")
+            metrics = traced(bench, setup, args.seconds, scratch / "eventlog")
         else:
             samples = bench.timed_passes(args.seconds)
-            metrics = end_to_end(bench, setups, samples)
+            metrics = end_to_end(setup, samples)
+            snap = proctree.snapshot()
+            # not a metric: under get_spark's 16g heap default the JVM's
+            # high-water RSS follows G1's heap sizing and spreads by a third
+            detail["rss_mb"] = {"driver": snap.driver_mb, "jvm": snap.jvm_mb, "pyworker": snap.pyworker_mb}
             detail["passes"] = [_sample_json(s) for s in samples]
         graceful = True
     finally:

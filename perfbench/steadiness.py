@@ -87,7 +87,6 @@ def main(argv=None) -> int:
                     "metrics": {n: m["value"] for n, m in result["metrics"].items()},
                     "host": detail["host"],
                     "pass_s": [x["wall_s"] for x in detail["passes"]],
-                    "setup_s": [x["setup_s"] for x in detail["setups"]],
                 }
             )
             print(json.dumps({"workload": wl, **runs[-1]}), file=sys.stderr, flush=True)

@@ -87,34 +87,3 @@ def test_rankings_corruption_fails(tmp_path, corruption):
     with pytest.raises(checks.CheckFailed):
         checks.check_rankings(tmp_path / "h", tmp_path / "r", len(values), int(values.sum()))
 
-
-def _dedup_case():
-    # chains {10, 3, 7} and {5, 1}; unique docs 2, 4
-    membership = {10: 0, 3: 0, 7: 0, 5: 1, 1: 1, 2: -1, 4: -1}
-    comp = {"node": np.array([10, 3, 7, 5, 1]), "component": np.array([3, 3, 3, 1, 1])}
-    kept = {"doc_id": np.array([3, 1, 2, 4])}
-    return membership, comp, kept
-
-
-def test_components_pass(tmp_path):
-    membership, comp, kept = _dedup_case()
-    _write_parts(tmp_path / "c", comp, [2])
-    _write_parts(tmp_path / "k", kept, [])
-    checks.check_components(tmp_path / "c", tmp_path / "k", membership)
-
-
-@pytest.mark.parametrize("corruption", ["merged_chains", "split_chain", "unique_in_component", "wrong_kept"])
-def test_components_corruption_fails(tmp_path, corruption):
-    membership, comp, kept = _dedup_case()
-    if corruption == "merged_chains":
-        comp["component"] = np.array([1, 1, 1, 1, 1])
-    elif corruption == "split_chain":
-        comp["component"] = np.array([7, 3, 7, 1, 1])
-    elif corruption == "unique_in_component":
-        comp = {"node": np.append(comp["node"], 2), "component": np.append(comp["component"], 1)}
-    else:
-        kept["doc_id"] = np.array([3, 5, 2, 4])
-    _write_parts(tmp_path / "c", comp, [])
-    _write_parts(tmp_path / "k", kept, [])
-    with pytest.raises(checks.CheckFailed):
-        checks.check_components(tmp_path / "c", tmp_path / "k", membership)

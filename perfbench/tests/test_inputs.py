@@ -23,57 +23,12 @@ def test_ints_same_seed_byte_identical(tmp_path):
 
 
 def test_ints_modulus_and_ids(tmp_path):
-    inputs.write_ints(tmp_path, 3, 10_000, modulus=100)
+    inputs.write_ints(tmp_path, 3, 10_000)
     t = pq.read_table(tmp_path / "ints.parquet")
     assert t.column("id").to_pylist() == list(range(10_000))
     values = t.column("value").to_numpy()
-    assert values.min() >= 0 and values.max() < 100
-
-
-def test_corpus_same_seed_byte_identical(tmp_path):
-    args = (11, 20, 3, 4)
-    a = _make(tmp_path, "a", inputs.write_corpus, *args)
-    b = _make(tmp_path, "b", inputs.write_corpus, *args)
-    c = _make(tmp_path, "c", inputs.write_corpus, 12, *args[1:])
-    assert set(a) == {"corpus.parquet", "membership.parquet"}
-    assert a == b
-    assert a["corpus.parquet"] != c["corpus.parquet"]
-
-
-def _shingles(text, n=8):
-    return {text[i : i + n] for i in range(len(text) - n + 1)}
-
-
-def test_corpus_chains_are_paths_at_half_jaccard(tmp_path):
-    inputs.write_corpus(tmp_path, 5, unique_docs=10, chains=3, chain_len=6)
-    docs = pq.read_table(tmp_path / "corpus.parquet").to_pydict()
-    member = pq.read_table(tmp_path / "membership.parquet").to_pydict()
-    assert docs["doc_id"] == member["doc_id"]
-    assert sorted(docs["doc_id"]) == list(range(28))
-    sh = {d: _shingles(t) for d, t in zip(docs["doc_id"], docs["text"])}
-    assert all(1900 <= len(t) <= 2100 for t in docs["text"])
-    chain = dict(zip(member["doc_id"], member["chain"]))
-    assert sum(c < 0 for c in chain.values()) == 10
-    edges = {}
-    for a in sh:
-        for b in sh:
-            if a < b and len(sh[a] & sh[b]) >= 0.5 * len(sh[a] | sh[b]):
-                assert chain[a] == chain[b] >= 0
-                edges.setdefault(chain[a], []).append((a, b))
-    for c in range(3):
-        # every chain is one connected component, far from a clique
-        root = {}
-
-        def find(x):
-            while root.get(x, x) != x:
-                x = root[x]
-            return x
-
-        for a, b in edges[c]:
-            root[find(a)] = find(b)
-        members = [d for d, k in chain.items() if k == c]
-        assert len({find(d) for d in members}) == 1
-        assert len(edges[c]) == 5  # adjacent links only: a path
+    assert values.min() >= 0 and values.max() < inputs.INT_MODULUS
+    assert len(set(values.tolist())) > 9_900  # ties are rare at this size
 
 
 def test_cache_generates_once_and_evicts(tmp_path):

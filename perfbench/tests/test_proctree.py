@@ -37,7 +37,7 @@ def test_roles_of_jvm_and_its_workers():
         assert live.jvm_s >= 0.25  # the fake JVM's own burn
         assert live.pyworker_s >= 0.25  # the worker it reaped
         assert live.driver_s < 0.25
-        assert live.jvm_mb > 0 and live.rss_mb >= live.jvm_mb
+        assert live.jvm_mb > 0 and live.driver_mb > 0
     finally:
         child.stdin.close()
         child.wait(timeout=30)

@@ -1,25 +1,24 @@
 """The workloads, driven only through the package's public functions.
 
-Each workload has a plain pass (what ``job_s`` times), an untimed check of
-that pass's output, and a list of windows for the traced run. Window k runs
-the first k public calls of the pass and materialises the result with the
-``noop`` sink, so a layer's time is the difference between consecutive
-windows (the reference's sort-only / total-order / with-sink method).
+Each workload has a plain pass (what ``job_s`` times) and an untimed check
+of that pass's output. Both share one list of windows for the traced run:
+window k runs the first k public calls of the total sort and materialises
+the result with the ``noop`` sink, so a layer's time is the difference
+between consecutive windows (the reference's sort-only / total-order /
+with-sink method); the two rankers get a window each.
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import functions as F
 
 from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark import io as sio
 from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.operators import (
-    dedup,
     hybrid,
     sorting,
 )
@@ -27,62 +26,52 @@ from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.o
 from . import checks, inputs
 
 SORT_KEYS = ["value", "id"]
+KERNEL_REPEATS = 3
+
+
+@dataclass
+class Ints:
+    path: Path
+    rows: int
+    value_sum: int
 
 
 @dataclass
 class Input:
-    path: Path
-    rows: int = 0
-    value_sum: int = 0
-    rank_path: Path | None = None  # the smaller ints input the rankers use
-    rank_rows: int = 0
-    rank_value_sum: int = 0
-    membership: dict[int, int] = field(default_factory=dict)
+    sort: Ints  # what the total sort and its windows read
+    rank: Ints  # what the two rankers read
 
 
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _ints(cache: Path, seed: int, rows: int) -> tuple[Path, int, int]:
+def _ints(cache: Path, seed: int, rows: int) -> Ints:
     path = inputs.cached(cache, f"ints-{seed}-{rows}", lambda p: inputs.write_ints(p, seed, rows))
     values = pq.read_table(path / "ints.parquet", columns=["value"]).column("value")
-    return path / "ints.parquet", len(values), pc.sum(values).as_py()
+    return Ints(path / "ints.parquet", len(values), pc.sum(values).as_py())
 
 
-class SortWrite:
-    """Read ints, write them globally sorted on (value, id) as parquet.
+class IntsWorkload:
+    """Shared by both workloads: seeded ints inputs, the traced windows and
+    the layer times derived from them."""
 
-    The plain pass is the reference's whole capability on the pure-JVM
-    path. The traced run also times the two rankers, the Python hybrid
-    quick+insertion kernel behind ``zipWithIndex`` and the
-    persist-count-broadcast ``sorting.ranked``, on a smaller input of the
-    same kind, and checks their output once."""
-
-    name = "sort_write"
-    rows = 4_000_000
-    rank_rows = 300_000
+    name: str
+    sort_rows: int
+    rank_rows: int
     windows = ("read", "local_sort", "total_sort", "write", "hybrid_ranked", "ranked")
 
     def prepare(self, cache: Path, seed: int) -> Input:
-        path, rows, value_sum = _ints(cache, seed, self.rows)
-        rank_path, rank_rows, rank_value_sum = _ints(cache, seed, self.rank_rows)
-        return Input(path, rows, value_sum, rank_path, rank_rows, rank_value_sum)
-
-    def run(self, spark, inp: Input, out: Path) -> None:
-        sio.write_sorted(sio.read_table(spark, str(inp.path)), str(out / "sorted"), SORT_KEYS)
-
-    def check(self, inp: Input, out: Path) -> None:
-        checks.check_sorted(out / "sorted", inp.rows, inp.value_sum)
+        return Input(_ints(cache, seed, self.sort_rows), _ints(cache, seed, self.rank_rows))
 
     def window(self, spark, inp: Input, name: str, out: Path) -> None:
         if name == "hybrid_ranked":
-            _noop(hybrid.hybrid_ranked(sio.read_table(spark, str(inp.rank_path))))
+            _noop(hybrid.hybrid_ranked(sio.read_table(spark, str(inp.rank.path))))
             return
         if name == "ranked":
-            _noop(sorting.ranked(sio.read_table(spark, str(inp.rank_path)), SORT_KEYS))
+            _noop(sorting.ranked(sio.read_table(spark, str(inp.rank.path)), SORT_KEYS))
             return
-        df = sio.read_table(spark, str(inp.path))
+        df = sio.read_table(spark, str(inp.sort.path))
         if name == "read":
             _noop(df)
         elif name == "local_sort":
@@ -103,99 +92,61 @@ class SortWrite:
             "sorting.ranked_s": t["ranked"],
         }
 
-    def covered_s(self, t: dict[str, float]) -> float:
-        return t["write"]
-
-    def extras(self, spark, inp: Input, out: Path, cpus: int) -> dict[str, float]:
-        """Check both rankers once, then time the hybrid kernel alone."""
-        df = sio.read_table(spark, str(inp.rank_path))
-        sio.write_table(hybrid.hybrid_ranked(df), str(out / "hybrid"))
-        sio.write_table(sorting.ranked(df, SORT_KEYS), str(out / "ranked"))
-        checks.check_rankings(out / "hybrid", out / "ranked", inp.rank_rows, inp.rank_value_sum)
-        return {"hybrid.kernel_s": self._kernel_s(inp, cpus)}
-
-    def _kernel_s(self, inp: Input, partitions: int, repeats: int = 3) -> float:
-        """One partition's worth of rows through the hybrid kernel, called
-        in this process; the median of ``repeats`` calls."""
-        n = inp.rank_rows // partitions
-        values = pq.read_table(inp.rank_path, columns=["value"]).column("value")[:n].to_pylist()
+    def extras(self, inp: Input, cpus: int) -> dict[str, float]:
+        """One partition's worth of rank rows through the hybrid kernel,
+        called in this process; the median of ``KERNEL_REPEATS`` calls."""
+        n = inp.rank.rows // cpus
+        values = pq.read_table(inp.rank.path, columns=["value"]).column("value")[:n].to_pylist()
         expect = sorted(values)
         times = []
-        for _ in range(repeats):
+        for _ in range(KERNEL_REPEATS):
             arr = list(values)
             t0 = time.perf_counter()
             hybrid.hybrid_quickinsertion_sort(arr)
             times.append(time.perf_counter() - t0)
             if arr != expect:
                 raise checks.CheckFailed("hybrid_quickinsertion_sort returned unsorted values")
-        return sorted(times)[len(times) // 2]
+        return {"hybrid.kernel_s": sorted(times)[len(times) // 2]}
 
 
-class CorpusDedup:
-    """Exact char 8-gram Jaccard pairs over a corpus with planted
-    near-duplicate chains, connected components over the pairs, and keep
-    the minimum id of each component."""
+class SortWrite(IntsWorkload):
+    """Read ints, write them globally sorted on (value, id) as parquet: the
+    reference's whole capability on the pure-JVM path. The traced run also
+    times the two rankers on a smaller input of the same kind."""
 
-    name = "corpus_dedup"
-    unique_docs = 60
-    chains = 12
-    chain_len = 8
-    windows = ("read", "shingles", "pairs", "cc")
-
-    def prepare(self, cache: Path, seed: int) -> Input:
-        key = f"corpus-{seed}-{self.unique_docs}-{self.chains}x{self.chain_len}"
-        path = inputs.cached(
-            cache,
-            key,
-            lambda p: inputs.write_corpus(p, seed, self.unique_docs, self.chains, self.chain_len),
-        )
-        m = pq.read_table(path / "membership.parquet")
-        membership = dict(zip(m.column("doc_id").to_pylist(), m.column("chain").to_pylist()))
-        return Input(path / "corpus.parquet", rows=len(membership), membership=membership)
+    name = "sort_write"
+    sort_rows = 8_000_000
+    rank_rows = 300_000
 
     def run(self, spark, inp: Input, out: Path) -> None:
-        docs = sio.read_table(spark, str(inp.path))
-        comp = dedup.connected_components(dedup.jaccard_pairs(docs))
-        sio.write_table(comp, str(out / "components"))
-        merged = comp.where(F.col("node") != F.col("component")).select(F.col("node").alias("doc_id"))
-        sio.write_table(docs.select("doc_id").join(merged, "doc_id", "left_anti"), str(out / "kept"))
+        sio.write_sorted(sio.read_table(spark, str(inp.sort.path)), str(out / "sorted"), SORT_KEYS)
 
     def check(self, inp: Input, out: Path) -> None:
-        checks.check_components(out / "components", out / "kept", inp.membership)
-
-    def window(self, spark, inp: Input, name: str, out: Path) -> None:
-        docs = sio.read_table(spark, str(inp.path))
-        if name == "read":
-            _noop(docs)
-        elif name == "shingles":
-            _noop(dedup.shingles(docs))
-        elif name == "pairs":
-            _noop(dedup.jaccard_pairs(docs))
-        else:
-            _noop(dedup.connected_components(dedup.jaccard_pairs(docs)))
-
-    def layers(self, t: dict[str, float], jobs: dict[str, float]) -> dict[str, float]:
-        return {
-            "io.read_s": t["read"],
-            "dedup.shingles_s": t["shingles"] - t["read"],
-            "dedup.pairs_s": t["pairs"] - t["shingles"],
-            "dedup.cc_s": t["cc"] - t["pairs"],
-            "dedup.cc_jobs": jobs["cc"] - jobs["pairs"],
-        }
+        checks.check_sorted(out / "sorted", inp.sort.rows, inp.sort.value_sum)
 
     def covered_s(self, t: dict[str, float]) -> float:
-        return t["cc"]
-
-    def extras(self, spark, inp: Input, out: Path, cpus: int) -> dict[str, float]:
-        """Result sizes that depend only on the input: any change to them
-        is a change of behaviour, not of speed."""
-        pairs = dedup.jaccard_pairs(sio.read_table(spark, str(inp.path)))
-        n_pairs = pairs.count()
-        comp = dedup.connected_components(pairs)
-        return {
-            "dedup.pairs": float(n_pairs),
-            "dedup.components": float(comp.select("component").distinct().count()),
-        }
+        return t["write"]
 
 
-WORKLOADS = {w.name: w for w in (SortWrite(), CorpusDedup())}
+class RankHybrid(IntsWorkload):
+    """Rank ints twice and write both rankings as parquet: the Python hybrid
+    quick+insertion kernel behind ``zipWithIndex``, and the
+    persist-count-broadcast ``sorting.ranked``. The traced run's sort
+    windows read the same input."""
+
+    name = "rank_hybrid"
+    sort_rows = rank_rows = 1_000_000
+
+    def run(self, spark, inp: Input, out: Path) -> None:
+        df = sio.read_table(spark, str(inp.rank.path))
+        sio.write_table(hybrid.hybrid_ranked(df), str(out / "hybrid"))
+        sio.write_table(sorting.ranked(df, SORT_KEYS), str(out / "ranked"))
+
+    def check(self, inp: Input, out: Path) -> None:
+        checks.check_rankings(out / "hybrid", out / "ranked", inp.rank.rows, inp.rank.value_sum)
+
+    def covered_s(self, t: dict[str, float]) -> float:
+        return t["hybrid_ranked"] + t["ranked"]
+
+
+WORKLOADS = {w.name: w for w in (SortWrite(), RankHybrid())}
