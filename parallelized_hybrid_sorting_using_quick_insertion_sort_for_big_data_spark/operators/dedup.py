@@ -14,13 +14,14 @@ Scale design (the whole point of these at 100 TB):
 - SimHash reduces each doc to one 64-bit int; near-dup = small Hamming
   distance, bucketed by bit-chunks for join-based candidate generation.
 
-Each approximate pipeline comes in two hash families: the fast path uses
-``xxhash64`` (JVM built-in, vectorized; rows-only in the oracle harness,
-property-tested against exact Jaccard in tests/test_text_dedup.py), and a
-``portable=True`` md5-prefix family whose DuckDB oracle SQL is GENERATED
-from the same constants (``minhash_lsh_oracle_sql``,
-``simhash_pairs_oracle_sql``) — the near-dup decision is then auditable
-bit-for-bit by any SQL engine over the same lake.
+MinHash has one hash family: an md5-prefix base hash and per-slot
+permutations drawn from the seed with stdlib hashlib, so its DuckDB oracle
+SQL is GENERATED from the same constants (``minhash_lsh_oracle_sql``,
+``minhash_sketch_oracle_sql``) and the near-dup decision is auditable
+bit-for-bit by any SQL engine over the same lake. SimHash keeps two: the
+``xxhash64`` path (rows-only in the oracle harness, property-tested in
+tests/test_text_dedup.py) and ``simhash_pairs_portable``, whose oracle is
+``simhash_pairs_oracle_sql``.
 
 The candidate-pair operators ``persist()`` their signature/band relations
 for the duration of the returned DataFrame's consumption (both join sides
@@ -161,17 +162,32 @@ def jaccard_pairs(
 # MinHash + LSH banding
 # ---------------------------------------------------------------------------
 
-# 31-bit Mersenne prime: keeps a*h+b within int64 under ANSI overflow checks
-# (h < 2^31, a < 2^31 would overflow — a stays < 2^7 here).
+# 31-bit Mersenne prime. a, h and b are all below 2^31, so a*h + b stays
+# below 2^63 and ANSI overflow checks can never fire.
 _MH_PRIME = (1 << 31) - 1
 
 
-def _portable_shingle_hash(seed: int):
+def _shingle_hash(seed: int):
     """32-bit base hash from the md5 hex prefix — bit-identical in any
-    engine with md5 (DuckDB: CAST('0x'||substr(md5(s),1,8) AS BIGINT)),
-    unlike xxhash64 whose 64-bit value DuckDB cannot reproduce."""
+    engine with md5 (DuckDB: CAST('0x'||substr(md5(s),1,8) AS BIGINT))."""
     h32 = F.conv(F.substring(F.md5(F.col("shingle")), 1, 8), 16, 10).cast("long")
     return F.pmod(h32 + F.lit(seed), F.lit(_MH_PRIME))
+
+
+def _minhash_permutations(num_hashes: int, seed: int) -> list[tuple[int, int]]:
+    """(a_j, b_j) of slot j's permutation h_j(x) = (a_j*x + b_j) mod p, with
+    a_j uniform in [1, p) and b_j uniform in [0, p), drawn from md5 of
+    (seed, j) like ``similarity.make_planes`` draws its planes. Independent
+    uniform draws are what MinHash's min-wise independence assumes (Broder
+    et al., STOC'98): with small structured multipliers, a document's
+    smallest base hash never wraps mod p and wins most slots at once."""
+    import hashlib
+
+    def draw(tag: str, j: int, mod: int) -> int:
+        return int(hashlib.md5(f"{seed}|{tag}|{j}".encode()).hexdigest()[:16], 16) % mod
+
+    p = _MH_PRIME
+    return [(1 + draw("a", j, p - 1), draw("b", j, p)) for j in range(num_hashes)]
 
 
 def minhash_signatures(
@@ -181,36 +197,26 @@ def minhash_signatures(
     n: int = 8,
     num_hashes: int = 32,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """k-permutation MinHash signatures as (id, array<long>[k]).
 
-    h_j(s) = (a_j * base(s) + b_j) mod p, with (a_j, b_j) derived
-    deterministically from the seed. One aggregation over the shingle
-    relation computes all k mins at once (map-side partial min — the shuffle
-    carries k longs per doc, not the shingles).
-
-    ``portable=False`` (default): base = xxhash64 — fastest JVM path.
-    ``portable=True``: base = md5-prefix (see ``_portable_shingle_hash``) —
-    slightly slower per shingle, but the ENTIRE signature is reproducible
-    in any SQL engine, which makes the near-dup decision auditable outside
-    Spark (and DuckDB-oracle-checkable here)."""
-    base = (
-        _portable_shingle_hash(seed)
-        if portable
-        else F.pmod(F.xxhash64(F.col("shingle"), F.lit(seed)), F.lit(_MH_PRIME))
-    )
+    h_j(s) = (a_j * base(s) + b_j) mod p, with base = the md5-prefix
+    shingle hash and (a_j, b_j) from ``_minhash_permutations``. One
+    aggregation over the shingle relation computes all k mins at once
+    (map-side partial min — the shuffle carries k longs per doc, not the
+    shingles). Every signature value is reproducible in any SQL engine
+    with md5 (``minhash_sketch_oracle_sql``)."""
     # distinct=False (r14, guide §2.4): min is duplicate-insensitive, so the
     # shingle relation never shuffles at all — the only exchange left in the
     # signature stage is the k-longs-per-doc partial-min aggregation. The
     # former .distinct() was a full shuffle of the corpus-sized (id, shingle)
     # relation purely to drop rows the min ignores.
-    sh = shingles(df, text_col, id_col, n, distinct=False).withColumn("__h", base)
+    sh = shingles(df, text_col, id_col, n, distinct=False).withColumn(
+        "__h", _shingle_hash(seed)
+    )
     mins = [
-        F.min(
-            (F.col("__h") * F.lit(2 * j + 1) + F.lit(seed * 31 + j)) % F.lit(_MH_PRIME)
-        ).alias(f"h{j}")
-        for j in range(num_hashes)
+        F.min((F.col("__h") * F.lit(a) + F.lit(b)) % F.lit(_MH_PRIME)).alias(f"h{j}")
+        for j, (a, b) in enumerate(_minhash_permutations(num_hashes, seed))
     ]
     agg = sh.groupBy(id_col).agg(*mins)
     return agg.select(F.col(id_col), F.array(*[f"h{j}" for j in range(num_hashes)]).alias("signature"))
@@ -225,7 +231,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding: signature → ``bands`` bands of
     r = num_hashes/bands rows; docs colliding on any (band, band-slice) are
@@ -233,20 +238,17 @@ def minhash_lsh_pairs(
     agreement fraction) and filtered at ``threshold``.
 
     Only (band-key → id) pairs are joined — never documents, never a cross
-    join; this is the 100 TB near-dup path. ``portable=True`` switches both
-    the base hash and the band key to engine-portable forms (md5-prefix
-    base, plain concatenated band key) so the result is exactly
-    reproducible in DuckDB — see ``minhash_lsh_oracle_sql``."""
+    join; this is the 100 TB near-dup path. The band key is the band's
+    values as a comma-joined decimal string, which any engine concatenates
+    identically, so the result is exactly reproducible in DuckDB — see
+    ``minhash_lsh_oracle_sql``."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed, portable)
+    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed)
 
     def band_key(bi: int):
-        joined = F.concat_ws(",", *[F.col("signature")[bi * r + j] for j in range(r)])
-        # non-portable: compact the key to a long (cheaper shuffle); portable:
-        # ship the decimal string, which any engine concatenates identically
-        return joined if portable else F.xxhash64(joined)
+        return F.concat_ws(",", *[F.col("signature")[bi * r + j] for j in range(r)])
 
     band_rows = sig.select(
         F.col(id_col),
@@ -305,7 +307,7 @@ def minhash_lsh_oracle_sql(
     threshold: float = 0.5,
     seed: int = 42,
 ) -> str:
-    """DuckDB SQL reproducing ``minhash_lsh_pairs(..., portable=True)``
+    """DuckDB SQL reproducing ``minhash_lsh_pairs``
     EXACTLY: same shingles, same md5-prefix base hash, same (a_j, b_j)
     permutations, same band keys, same candidate join and agreement score.
     Generated, not handwritten, so the constants can never drift from the
@@ -313,8 +315,8 @@ def minhash_lsh_oracle_sql(
     p = _MH_PRIME
     r = num_hashes // bands
     mins = ",\n         ".join(
-        f"min((h0 * {2 * j + 1} + {seed * 31 + j}) % {p}) AS h{j}"
-        for j in range(num_hashes)
+        f"min((h0 * {a} + {b}) % {p}) AS h{j}"
+        for j, (a, b) in enumerate(_minhash_permutations(num_hashes, seed))
     )
     band_selects = "\n  UNION ALL\n  ".join(
         f"SELECT {id_col}, {bi} AS band, concat_ws(',', "
@@ -540,14 +542,14 @@ def minhash_sketch_oracle_sql(
     num_hashes: int = 32,
     seed: int = 42,
 ) -> str:
-    """DuckDB SQL reproducing ``minhash_signatures(..., portable=True)``
+    """DuckDB SQL reproducing ``minhash_signatures``
     exploded to (id, sig_idx, minhash) rows — the sketch-materialization
     oracle. Shares every constant with ``minhash_lsh_oracle_sql`` by
     construction (same shingle CTE, base hash, and permutations)."""
     p = _MH_PRIME
     mins = ",\n         ".join(
-        f"min((h0 * {2 * j + 1} + {seed * 31 + j}) % {p}) AS h{j}"
-        for j in range(num_hashes)
+        f"min((h0 * {a} + {b}) % {p}) AS h{j}"
+        for j, (a, b) in enumerate(_minhash_permutations(num_hashes, seed))
     )
     sig_list = ", ".join(f"h{j}" for j in range(num_hashes))
     return f"""

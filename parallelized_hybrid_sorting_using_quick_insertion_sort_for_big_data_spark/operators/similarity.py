@@ -8,10 +8,10 @@ Scale design:
   shuffle, no driver collect. Right answer for "a handful of queries against
   100 TB of vectors".
 - the ANN path reduces each vector to an nbits-bit random-hyperplane
-  signature (sign of dot with deterministic pseudo-random planes, built from
-  pure column arithmetic — no Python in the loop) and equi-joins on bucket;
-  candidates are re-ranked exactly. Probe radius 1 (flip each bit) trades
-  recall vs cost without ever going quadratic.
+  signature (sign of dot with a shared literal plane table, ``make_planes``
+  — the same literals the generated DuckDB oracle embeds) and equi-joins on
+  bucket; candidates are re-ranked exactly. Probe radius 1 (flip each bit)
+  trades recall vs cost without ever going quadratic.
 - all vector math is built-in higher-order functions (zip_with/aggregate/
   transform) on array<double> — JVM-side, no UDF.
 """
@@ -363,54 +363,19 @@ def exact_near_dup_pairs_contracted(
 # ---------------------------------------------------------------------------
 
 
-def _plane_component(plane: int, dim_idx: Column, seed: int) -> Column:
-    """Deterministic pseudo-random N(0,1)-ish plane component from pure
-    column arithmetic: two xxhash64 draws → uniform(0,1] pair → Box-Muller.
-    Entirely JVM-side; identical on every executor with no broadcast."""
-    h1 = F.pmod(F.xxhash64(F.lit(seed), F.lit(plane), dim_idx), F.lit(1 << 30))
-    h2 = F.pmod(F.xxhash64(F.lit(seed + 1), F.lit(plane), dim_idx), F.lit(1 << 30))
-    u1 = (h1 + 1).cast("double") / F.lit(float(1 << 30))
-    u2 = (h2 + 1).cast("double") / F.lit(float(1 << 30))
-    return F.sqrt(-2.0 * F.log(u1)) * F.cos(F.lit(2.0 * math.pi) * u2)
-
-
-def lsh_signature(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    nbits: int = 12,
-    seed: int = 42,
-) -> DataFrame:
-    """Append an nbits-bit random-hyperplane signature column ``bucket``:
-    bit p = sign(v · plane_p). Same-bucket vectors are cosine-close with
-    probability rising in cos — the standard SimHash-for-angles scheme."""
-    from ..sources.tables import spread_scan
-
-    df = spread_scan(df)
-    v = _as_double(F.col(vec_col))
-    idx = F.sequence(F.lit(0), F.size(v) - 1)
-
-    bucket = F.lit(0).cast("long")
-    for p in range(nbits):
-        proj = F.aggregate(
-            F.zip_with(v, idx, lambda x, i: x * _plane_component(p, i, seed)),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
-        bucket = bucket.bitwiseOR(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    return df.withColumn("bucket", bucket)
-
-
 def make_planes(nbits: int, dim: int, seed: int = 42) -> list[list[float]]:
     """Deterministic hyperplane table (md5 → Box-Muller) as plain floats.
 
     Unlike the shingle hashes in ``dedup`` — which hash DATA and therefore
     must be recomputed by whatever engine audits the result — hyperplanes
-    are data-independent, so the portable form is a SHARED LITERAL table:
+    are data-independent, so the signature uses a SHARED LITERAL table:
     both the Spark plan and the generated oracle SQL embed these exact
-    binary64 values. That removes the two cross-engine hazards of deriving
-    planes in-engine (libm ``log``/``cos`` differing in the last ulp, and a
-    per-row hash cost), while staying reproducible: anyone can regenerate
-    the table from (seed, nbits, dim) with stdlib hashlib."""
+    binary64 values. That removes the two hazards of deriving planes
+    in-engine (libm ``log``/``cos`` differing in the last ulp across
+    engines, and two hashes plus ``log``/``cos`` per row, plane and
+    dimension), while staying reproducible: anyone can regenerate the
+    table from (seed, nbits, dim) with stdlib hashlib. Row p depends only
+    on (seed, p), so ``make_planes(24)[:8] == make_planes(8)``."""
     import hashlib
 
     planes: list[list[float]] = []
@@ -429,9 +394,12 @@ def make_planes(nbits: int, dim: int, seed: int = 42) -> list[list[float]]:
 def lsh_signature_planes(
     df: DataFrame, planes: list[list[float]], vec_col: str = "embedding"
 ) -> DataFrame:
-    """``lsh_signature`` over an explicit literal plane table; projections
-    are rounded to 9 digits before the sign test so any engine summing the
-    same products in a different order lands on the same bit."""
+    """Append an nbits-bit random-hyperplane signature column ``bucket``,
+    one bit per row of the literal plane table: bit p = sign(v · plane_p).
+    Same-bucket vectors are cosine-close with probability rising in cos —
+    the standard SimHash-for-angles scheme. Projections are rounded to 9
+    digits before the sign test so any engine summing the same products in
+    a different order lands on the same bit."""
     from ..sources.tables import spread_scan
 
     df = spread_scan(df)
@@ -447,24 +415,6 @@ def lsh_signature_planes(
         )
         bucket = bucket.bitwiseOR(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
     return df.withColumn("bucket", bucket)
-
-
-def lsh_portable_near_dup_pairs(
-    df: DataFrame,
-    planes: list[list[float]],
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int | None = 9,
-) -> DataFrame:
-    """``lsh_near_dup_pairs`` with a shared literal plane table — candidate
-    generation and re-rank are identical; only the signature derivation
-    changes, making the whole pipeline reproducible by the generated DuckDB
-    oracle (``lsh_portable_oracle_sql``)."""
-    sig = lsh_signature_planes(df, planes, vec_col)
-    return _multiprobe_fold_pairs(
-        sig, len(planes), threshold, id_col, vec_col, round_digits
-    )
 
 
 def plane_bits_sql(
@@ -487,32 +437,31 @@ def plane_bits_sql(
     return " + ".join(parts)
 
 
-def portable_nbits(
+def choose_nbits(
     n_rows: int,
-    target_bucket_size: int = 4,
+    target_bucket_size: int = 32,
     min_bits: int = 6,
-    max_bits: int = 16,
+    max_bits: int = 24,
 ) -> int:
-    """Signature width for the PORTABLE (literal-plane, oracle-replayable)
-    LSH pipeline: the smallest b with 2^b buckets ≥ ceil(n / target),
-    clamped to [min_bits, max_bits].
+    """Signature width that keeps the EXPECTED bucket population near
+    ``target_bucket_size``: the smallest b with 2^b buckets ≥
+    ceil(n / target), clamped to [min_bits, max_bits].
 
-    Same scale dial as ``choose_nbits`` (fixed width ⇒ bucket population —
-    and therefore candidate pairs — grows linearly/quadratically with the
-    corpus; width ∝ log2(n) keeps per-bucket work constant), but computed
-    with INTEGER arithmetic only: ceil-divide then bit-length, no float
-    ``log2`` whose last-ulp behavior could differ between engines at exact
-    powers of two. The generated oracle (``lsh_adaptive_oracle_sql``)
-    recomputes the identical value from ``count(*)`` with the same integer
-    ops, so Spark and DuckDB can never disagree on the width.
+    This is the scale dial for ``lsh_near_dup_pairs`` /
+    ``bucketed_near_dup_pairs``: a fixed nbits caps the bucket count, so at
+    100× the corpus each bucket is 100× larger and the in-bucket re-rank
+    goes quadratic (the r09 finding: a fixed 8-bit table grew candidate
+    pairs ~7.96× per 10× rows). Scaling nbits with log2(n) keeps
+    per-bucket work constant; the multi-probe join fans out by (nbits+1),
+    i.e. only logarithmically in corpus size. Above ``max_bits`` (16M
+    buckets) single-bit probing starts missing too much — switch to banded
+    LSH (``dedup.minhash`` style multi-table) beyond that.
 
-    ``max_bits`` defaults to 16 (65k buckets ≈ 260k vectors at target 4):
-    the literal-plane form exists to be oracle-replayable, not to be the
-    production path — beyond that, use ``lsh_near_dup_pairs`` (in-engine
-    xxhash signatures, unbounded width). This was the r09 scale finding:
-    the portable query's FIXED 8-bit table made candidate pairs grow
-    ~quadratically (slope 7.96×/10× rows, SCALE_CHECK_r09); adaptive width
-    restores the log-growth design of the in-engine path."""
+    Computed with INTEGER arithmetic only (ceil-divide then bit-length, no
+    float ``log2`` whose last ulp could differ between engines at exact
+    powers of two): the generated oracle recomputes the identical value
+    from ``count(*)`` (``nbits_sql``), so Spark and DuckDB can never
+    disagree on the width."""
     if n_rows <= 0:
         return min_bits
     need_buckets = (n_rows + target_bucket_size - 1) // target_bucket_size
@@ -522,11 +471,11 @@ def portable_nbits(
 
 def nbits_sql(
     corpus_rel: str = "corpus",
-    target_bucket_size: int = 4,
+    target_bucket_size: int = 32,
     min_bits: int = 6,
-    max_bits: int = 16,
+    max_bits: int = 24,
 ) -> str:
-    """DuckDB CTE body computing ``portable_nbits(count(*))`` with the same
+    """DuckDB CTE body computing ``choose_nbits(count(*))`` with the same
     integer arithmetic (ceil-divide; smallest b with 1<<b ≥ need; clamp) —
     one scalar row named ``nbits``."""
     t = target_bucket_size
@@ -537,30 +486,6 @@ def nbits_sql(
   FROM (SELECT count(*) AS cnt FROM {corpus_rel}) p"""
 
 
-def lsh_portable_oracle_sql(
-    planes: list[list[float]],
-    threshold: float,
-    corpus_sql: str,
-    id_col: str = "vec_id",
-) -> str:
-    """DuckDB SQL reproducing ``lsh_portable_near_dup_pairs`` EXACTLY over
-    ``corpus_sql`` (any SELECT yielding (id, v DOUBLE[])): same literal
-    planes, same rounded-projection sign bits, candidates = bucket Hamming
-    distance ≤ 1 (the multi-probe set), same rounded-cosine re-rank.
-    Generated from the same plane table the Spark plan embeds."""
-    plane_bits = plane_bits_sql(planes)
-    return f"""
-WITH corpus AS ({corpus_sql}),
-sig AS (SELECT {id_col}, v, {plane_bits} AS bucket FROM corpus)
-SELECT a.{id_col} AS id_a, b.{id_col} AS id_b,
-       round(list_cosine_similarity(a.v, b.v), 9) AS sim
-FROM sig a JOIN sig b
-  ON a.{id_col} < b.{id_col}
- AND bit_count(xor(a.bucket, b.bucket)) <= 1
-WHERE round(list_cosine_similarity(a.v, b.v), 9) >= {threshold}
-"""
-
-
 def lsh_adaptive_oracle_sql(
     planes: list[list[float]],
     threshold: float,
@@ -568,16 +493,20 @@ def lsh_adaptive_oracle_sql(
     id_col: str = "vec_id",
     target_bucket_size: int = 4,
     min_bits: int = 6,
-    max_bits: int = 16,
+    max_bits: int = 24,
 ) -> str:
-    """``lsh_portable_oracle_sql`` with ADAPTIVE signature width: the oracle
-    recomputes ``portable_nbits(count(*))`` in SQL (integer-exact, see
-    ``nbits_sql``) and gates each literal plane's bit on ``p < nbits`` —
-    the exact mirror of the Spark side taking ``planes[:nbits]``. The
-    candidate predicate (bucket Hamming distance ≤ 1) needs no gating:
-    bits ≥ nbits are zero on both sides by construction. ``planes`` must
-    carry at least ``max_bits`` rows (``make_planes`` rows are
-    prefix-stable in nbits, so one max-width table serves every width)."""
+    """DuckDB SQL reproducing ``lsh_near_dup_pairs`` (and the candidate set
+    of ``bucketed_near_dup_pairs``) EXACTLY over ``corpus_sql`` (any SELECT
+    yielding (id, v DOUBLE[])), generated from the same plane table the
+    Spark plan embeds: the oracle recomputes ``choose_nbits(count(*))`` in
+    SQL (integer-exact, see ``nbits_sql``) and gates each literal plane's
+    bit on ``p < nbits`` — the exact mirror of the Spark side taking
+    ``planes[:nbits]``. Candidates are bucket pairs at Hamming distance ≤ 1
+    (the multi-probe set; bits ≥ nbits are zero on both sides, so the
+    predicate needs no gating), re-ranked by the same rounded cosine.
+    ``planes`` must carry at least ``max_bits`` rows (``make_planes`` rows
+    are prefix-stable in nbits, so one max-width table serves every
+    width)."""
     if len(planes) < max_bits:
         raise ValueError(f"need ≥{max_bits} planes, got {len(planes)}")
     plane_bits = plane_bits_sql(planes[:max_bits], gate_expr="nb.nbits")
@@ -595,40 +524,13 @@ WHERE round(list_cosine_similarity(a.v, b.v), 9) >= {threshold}
 """
 
 
-def choose_nbits(
-    n_rows: int,
-    target_bucket_size: int = 32,
-    min_bits: int = 6,
-    max_bits: int = 24,
-) -> int:
-    """Signature width that keeps the EXPECTED bucket population near
-    ``target_bucket_size``: nbits = ceil(log2(n / target)), clamped.
-
-    This is the scale dial for ``lsh_near_dup_pairs`` /
-    ``bucketed_near_dup_pairs``: a fixed nbits caps the bucket count, so at
-    100× the corpus each bucket is 100× larger and the in-bucket re-rank
-    goes quadratic. Scaling nbits with log2(n) keeps per-bucket work
-    constant; the multi-probe join fans out by (nbits+1), i.e. only
-    logarithmically in corpus size. The 32-vector target suits the
-    per-pair ``zip_with`` re-rank, whose cost is linear in candidate pairs
-    (~(nbits+1)·bucket/2 per vector); the per-bucket GEMM re-rank
-    amortizes better and can pass a larger target (128+). Above
-    ``max_bits`` (16M buckets) single-bit probing starts missing too much —
-    switch to banded LSH (``dedup.minhash`` style multi-table) beyond
-    that."""
-    if n_rows <= 0:
-        return min_bits
-    need = math.ceil(math.log2(max(1.0, n_rows / float(target_bucket_size))))
-    return max(min_bits, min(max_bits, need))
-
-
 def lsh_near_dup_pairs(
     df: DataFrame,
+    planes: list[list[float]],
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     nbits: int | None = None,
-    seed: int = 42,
     round_digits: int | None = 9,
     n_rows: int | None = None,
     target_bucket_size: int = 8,
@@ -637,6 +539,9 @@ def lsh_near_dup_pairs(
     at Hamming distance 1 (multi-probe), re-ranked by exact cosine. Never
     quadratic in corpus size; bucket-key join only.
 
+    The signature takes the first ``nbits`` rows of the literal plane table
+    ``planes`` (``make_planes``), so the whole pipeline is reproducible by
+    the generated DuckDB oracle (``lsh_adaptive_oracle_sql``).
     ``nbits=None`` auto-selects via ``choose_nbits`` so bucket population
     stays ~constant as the corpus grows (pass ``n_rows`` to avoid the
     sizing count; for a plain parquet scan the count is metadata-only).
@@ -646,33 +551,16 @@ def lsh_near_dup_pairs(
     not codegen'd — so shrinking buckets buys back far more re-rank time
     than the extra probe fanout costs (fanout grows only with log2 n).
     The GEMM re-rank (``bucketed_near_dup_pairs``) inverts that trade."""
-    from pyspark.storagelevel import StorageLevel
-
     if nbits is None:
-        if n_rows is None:
-            n_rows = df.count()
-        nbits = choose_nbits(n_rows, target_bucket_size)
-
-    sig = lsh_signature(df, vec_col, nbits, seed)
-    return _multiprobe_fold_pairs(sig, nbits, threshold, id_col, vec_col, round_digits)
-
-
-def _multiprobe_fold_pairs(
-    sig: DataFrame,
-    nbits: int,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    round_digits: int | None,
-) -> DataFrame:
-    """Candidate join (same bucket or 1-bit flip) + per-pair exact cosine
-    re-rank over a relation that already carries a ``bucket`` column."""
+        nbits = choose_nbits(df.count() if n_rows is None else n_rows, target_bucket_size)
+    if nbits > len(planes):
+        raise ValueError(f"need ≥{nbits} planes, got {len(planes)}")
     from pyspark.storagelevel import StorageLevel
 
     # both join sides read the signature relation; persist so the nbits
     # hyperplane projections (and the per-vector norm — computed once HERE,
     # never per candidate pair) run once per vector
-    sig = sig.select(
+    sig = lsh_signature_planes(df, planes[:nbits], vec_col).select(
         F.col(id_col),
         F.col(vec_col),
         "bucket",
@@ -711,16 +599,15 @@ def _multiprobe_fold_pairs(
 
 def bucketed_near_dup_pairs(
     df: DataFrame,
+    planes: list[list[float]],
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     nbits: int | None = None,
-    seed: int = 42,
     sub_blocks: int = 1,
     round_digits: int | None = 9,
     n_rows: int | None = None,
     target_bucket_size: int = 128,
-    planes: list[list[float]] | None = None,
 ) -> DataFrame:
     """Near-dup pairs: LSH-bucketed candidate generation + per-bucket blocked
     GEMM re-rank — the composition ``exact_near_dup_pairs_blocked``'s
@@ -744,13 +631,10 @@ def bucketed_near_dup_pairs(
     path): a matrix product amortizes per-pair cost to ~nothing, so bigger
     buckets mean fewer probe-replicated rows and fewer tiny numpy calls.
     Note the candidate set equals ``lsh_near_dup_pairs``'s only at equal
-    nbits — pass the same explicit nbits/target to compare the two.
-
-    ``planes``: an explicit literal plane table (``make_planes``) switches
-    signature derivation to ``lsh_signature_planes`` — same bucket/GEMM
-    topology, but the whole pipeline becomes reproducible by the generated
-    DuckDB oracle (``lsh_portable_oracle_sql``): candidates are exactly the
-    Hamming-distance-≤1 bucket pairs, re-rank is the same rounded cosine.
+    nbits — pass the same explicit nbits/target to compare the two. The
+    signature takes the same ``planes[:nbits]`` prefix, so the generated
+    DuckDB oracle (``lsh_adaptive_oracle_sql``) replays the candidates
+    exactly: Hamming-distance-≤1 bucket pairs, same rounded cosine.
 
     Oracle-equality caveat: the numpy GEMM sums float64 products in a
     different association order than a sequential engine's per-pair fold
@@ -765,15 +649,11 @@ def bucketed_near_dup_pairs(
 
     from pyspark.storagelevel import StorageLevel
 
-    if planes is not None:
-        nbits = len(planes)
-        signed = lsh_signature_planes(df, planes, vec_col)
-    else:
-        if nbits is None:
-            if n_rows is None:
-                n_rows = df.count()
-            nbits = choose_nbits(n_rows, target_bucket_size)
-        signed = lsh_signature(df, vec_col, nbits, seed)
+    if nbits is None:
+        nbits = choose_nbits(df.count() if n_rows is None else n_rows, target_bucket_size)
+    if nbits > len(planes):
+        raise ValueError(f"need ≥{nbits} planes, got {len(planes)}")
+    signed = lsh_signature_planes(df, planes[:nbits], vec_col)
     S = max(1, sub_blocks)
 
     sig = (

@@ -166,41 +166,31 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 5. MinHash + LSH banding (rows-only: xxhash64 isn't portable to DuckDB;
-#    property-tested against exact Jaccard in tests/test_text_dedup.py)
+# 5. MinHash + LSH banding (md5-prefix base hash, generated oracle)
 # ---------------------------------------------------------------------------
 
 
-@query("dedup_minhash_lsh", sql=None)
+_MINHASH_ORACLE = dedup.minhash_lsh_oracle_sql(
+    n=_NGRAM_N, num_hashes=32, bands=8, threshold=_JACCARD_T, seed=42
+)
+
+
+@query("dedup_minhash_lsh", sql=_MINHASH_ORACLE)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32 perms)+LSH(8 bands) near-dup candidates at est-Jaccard ≥
-    0.5 — the sublinear near-dup path for corpus scale (xxhash64 base hash:
-    fastest JVM path, rows-only here; the portable variant below is the
-    oracle-checked twin)."""
+    0.5 — the sublinear near-dup path for corpus scale. Every signature
+    value is reproducible in DuckDB, so the FULL approximate pipeline —
+    shingles → signatures → banding → candidate join → agreement score —
+    is value-hash-checked against DuckDB, not just property-tested."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
-        docs, n=_NGRAM_N, num_hashes=32, bands=8, threshold=_JACCARD_T
+        docs, n=_NGRAM_N, num_hashes=32, bands=8, threshold=_JACCARD_T, seed=42
     )
 
 
-@query(
-    "dedup_minhash_portable",
-    sql=dedup.minhash_lsh_oracle_sql(
-        n=_NGRAM_N, num_hashes=32, bands=8, threshold=_JACCARD_T, seed=42
-    ),
-)
-def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH with the engine-portable hash family (md5-prefix base,
-    modular permutations, concatenated band keys): identical topology to
-    ``dedup_minhash_lsh`` but every signature bit is reproducible in DuckDB,
-    so the FULL approximate pipeline — shingles → signatures → banding →
-    candidate join → agreement score — is value-hash-checked by the driver,
-    not just property-tested."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(
-        docs, n=_NGRAM_N, num_hashes=32, bands=8, threshold=_JACCARD_T,
-        seed=42, portable=True,
-    )
+# Registry slot kept from when this was the oracle-checked twin of an
+# xxhash64 fast path; both names now run the one MinHash implementation.
+query("dedup_minhash_portable", sql=_MINHASH_ORACLE)(dedup_minhash_lsh)
 
 
 _BATCH_SHIFT = 2_000_000
@@ -236,7 +226,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = docs.unionAll(batch)
     pairs = dedup.minhash_lsh_pairs(
-        corpus, num_hashes=32, bands=8, threshold=0.5, seed=42, portable=True
+        corpus, num_hashes=32, bands=8, threshold=0.5, seed=42
     )
     return pairs.where(
         (F.col("id_a") < _BATCH_SHIFT) & (F.col("id_b") >= _BATCH_SHIFT)
@@ -252,16 +242,14 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql=dedup.minhash_sketch_oracle_sql(n=_NGRAM_N, num_hashes=32, seed=42),
 )
 def text_minhash_doc_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized per-document MinHash sketch: the portable 32-permutation
+    """Materialized per-document MinHash sketch: the 32-permutation
     signature exploded to (doc_id, sig_idx, minhash) rows — the artifact a
     pipeline persists so later corpora can be deduped AGAINST this one
     without re-shingling it (cross-corpus / incremental dedup). One shuffle
     (the per-doc min aggregation, map-side partial); every signature value
     is hash-checked against the generated DuckDB mirror."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = dedup.minhash_signatures(
-        docs, n=_NGRAM_N, num_hashes=32, seed=42, portable=True
-    )
+    sig = dedup.minhash_signatures(docs, n=_NGRAM_N, num_hashes=32, seed=42)
     return sig.select(
         "doc_id", F.posexplode("signature").alias("sig_idx", "minhash")
     ).select("doc_id", F.col("sig_idx").cast("bigint").alias("sig_idx"), "minhash")
@@ -1723,7 +1711,7 @@ FROM counts
 
 @query("dedup_lsh_recall", sql=_LSH_RECALL_ORACLE)
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall and precision of the portable MinHash-LSH near-dup path
+    """Recall and precision of the MinHash-LSH near-dup path
     against the exact capped-shingle Jaccard pair set, on a corpus with
     deterministically planted suffix-perturbed near-dups — one row
     (n_exact, n_lsh, n_hit, recall, est_precision), every leg and the
@@ -1767,7 +1755,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = (
         dedup.minhash_lsh_pairs(
             corpus, n=_NGRAM_N, num_hashes=32, bands=8, threshold=_JACCARD_T,
-            seed=42, portable=True,
+            seed=42,
         )
         .select("id_a", "id_b")
         .withColumn("__l", F.lit(1))

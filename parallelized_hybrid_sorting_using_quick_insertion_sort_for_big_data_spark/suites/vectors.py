@@ -90,64 +90,69 @@ def vec_exact_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("vec_lsh_near_dup", sql=None)
-def vec_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs via random-hyperplane LSH buckets + multi-probe +
-    exact re-rank — the non-quadratic corpus-scale path. nbits auto-scales
-    with corpus size (choose_nbits: ~8 vectors/bucket — the fold re-rank
-    pays per pair, so small buckets win). Rows-only in the oracle harness;
-    recall vs the exact query is asserted in tests."""
-    corpus, n = _dup_corpus(spark, sf_dir)
-    return similarity.lsh_near_dup_pairs(
-        corpus, threshold=_NEARDUP_T, nbits=None, n_rows=n
-    )
-
-
 # Max-width literal plane table; every query takes a prefix. make_planes
-# rows depend only on (seed, p, i), so make_planes(16)[:8] == make_planes(8)
-# — one table serves every width.
-_PORTABLE_MAX_BITS = 16
-_PORTABLE_PLANES = similarity.make_planes(nbits=_PORTABLE_MAX_BITS, dim=64, seed=42)
+# rows depend only on (seed, p, i), so make_planes(24)[:8] == make_planes(8)
+# — one table serves every width up to choose_nbits' 24-bit clamp.
+_PLANES = similarity.make_planes(nbits=24, dim=64, seed=42)
 # vec_ann_recall measures recall at a PINNED 8-bit configuration (a
 # measurement query: the config under test is part of the question).
-_ANN_PLANES = _PORTABLE_PLANES[:8]
+_ANN_PLANES = _PLANES[:8]
 
-# Adaptive-width portable LSH (r09 scale fix): the r09 fixed-8-bit table
-# capped the bucket count at 256, so bucket population — and candidate
-# pairs — grew ~quadratically with the corpus (SCALE_CHECK_r09 slope
-# 7.96×/10× rows with tight reps). Width now scales as portable_nbits(n)
-# ≈ log2(n/4), recomputed integer-exactly by the oracle from count(*), so
-# per-bucket work stays constant and the probe fanout grows only
-# logarithmically — the same design the in-engine path (choose_nbits) has
-# had since r04. target=4 keeps the sf0.01 corpus (1000 vectors) at
-# exactly 8 bits, so driver-history result sets are unchanged.
-_LSH_PORTABLE_ORACLE = similarity.lsh_adaptive_oracle_sql(
-    _PORTABLE_PLANES,
-    threshold=0.95,
-    corpus_sql=f"""
+_DUP_CORPUS_SQL = f"""
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
   UNION ALL
   SELECT vec_id + {_VEC_SHIFT} AS vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-""",
+"""
+
+
+@query(
+    "vec_lsh_near_dup",
+    sql=similarity.lsh_adaptive_oracle_sql(
+        _PLANES, threshold=_NEARDUP_T, corpus_sql=_DUP_CORPUS_SQL, target_bucket_size=8
+    ),
+)
+def vec_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs (sim ≥ 0.98) via random-hyperplane LSH buckets +
+    multi-probe + exact re-rank — the non-quadratic corpus-scale path.
+    nbits auto-scales with corpus size (choose_nbits: ~8 vectors/bucket —
+    the fold re-rank pays per pair, so small buckets win). Oracle-checked
+    end to end: DuckDB recomputes the width, the literal-plane signatures,
+    the multi-probe candidates and the rounded cosine."""
+    corpus, n = _dup_corpus(spark, sf_dir)
+    return similarity.lsh_near_dup_pairs(
+        corpus, _PLANES, threshold=_NEARDUP_T, n_rows=n, target_bucket_size=8
+    )
+
+
+# Adaptive width (r09 scale fix): the r09 fixed-8-bit table capped the
+# bucket count at 256, so bucket population — and candidate pairs — grew
+# ~quadratically with the corpus (SCALE_CHECK_r09 slope 7.96×/10× rows
+# with tight reps). Width now scales as choose_nbits(n) ≈ log2(n/4),
+# recomputed integer-exactly by the oracle from count(*), so per-bucket
+# work stays constant and the probe fanout grows only logarithmically.
+# target=4 keeps the sf0.01 corpus (1000 vectors) at exactly 8 bits, so
+# previously recorded result sets are unchanged.
+_LSH_PORTABLE_ORACLE = similarity.lsh_adaptive_oracle_sql(
+    _PLANES, threshold=0.95, corpus_sql=_DUP_CORPUS_SQL
 )
 
 
 @query("vec_lsh_portable", sql=_LSH_PORTABLE_ORACLE)
 def vec_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LSH near-dup pipeline with a SHARED LITERAL plane table (md5 →
-    Box-Muller, regenerable from the seed): end-to-end oracle-checked —
-    DuckDB recomputes signatures, multi-probe candidates, and the rounded
-    cosine re-rank from the same literals. Threshold 0.95 (vs 0.98 on the
-    xxhash64 path) so the check also exercises non-twin matches.
+    """The LSH near-dup pipeline at threshold 0.95 (vs 0.98 in
+    ``vec_lsh_near_dup``, so the check also exercises non-twin matches)
+    and ~4 vectors per bucket: end-to-end oracle-checked — DuckDB
+    recomputes signatures, multi-probe candidates, and the rounded cosine
+    re-rank from the same plane literals (md5 → Box-Muller, regenerable
+    from the seed).
 
-    Signature width is ``portable_nbits(n)`` — integer-exact, recomputed
+    Signature width is ``choose_nbits(n, 4)`` — integer-exact, recomputed
     by the oracle from count(*) — and the corpus count n comes from parquet
     footer metadata (no data job), so the plan embeds only the active
     prefix of the plane table."""
     corpus, n = _dup_corpus(spark, sf_dir)
-    nbits = similarity.portable_nbits(n, max_bits=_PORTABLE_MAX_BITS)
-    return similarity.lsh_portable_near_dup_pairs(
-        corpus, _PORTABLE_PLANES[:nbits], threshold=0.95
+    return similarity.lsh_near_dup_pairs(
+        corpus, _PLANES, threshold=0.95, n_rows=n, target_bucket_size=4
     )
 
 
@@ -162,10 +167,7 @@ def vec_bucketed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     therefore the same generated SQL) as ``vec_lsh_portable``: the two
     queries are independent physical strategies (per-pair fold re-rank vs
     per-bucket GEMM) that must produce the identical pair set and rounded
-    sims — the strongest equivalence check the harness can express. The
-    auto-scaled in-engine-signature form (``nbits=None``) remains the
-    production entry point and is exercised by ``vec_lsh_near_dup`` +
-    pytest pair-set/recall assertions.
+    sims — the strongest equivalence check the harness can express.
 
     Known oracle fragility (ADVICE r04): the GEMM side sums float64
     products in parallel order, DuckDB's ``list_cosine_similarity``
@@ -174,20 +176,15 @@ def vec_bucketed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata regeneration. See ``bucketed_near_dup_pairs``'s docstring;
     a flap here means float association, not a real pair-set bug."""
     corpus, n = _dup_corpus(spark, sf_dir)
-    nbits = similarity.portable_nbits(n, max_bits=_PORTABLE_MAX_BITS)
     return similarity.bucketed_near_dup_pairs(
-        corpus, threshold=0.95, planes=_PORTABLE_PLANES[:nbits]
+        corpus, _PLANES, threshold=0.95, n_rows=n, target_bucket_size=4
     )
 
 
 _ANN_RECALL_T = 0.95
 
 _ANN_RECALL_ORACLE = f"""
-WITH corpus AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-  UNION ALL
-  SELECT vec_id + {_VEC_SHIFT} AS vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
+WITH corpus AS ({_DUP_CORPUS_SQL}),
 sig AS (SELECT vec_id, v, {similarity.plane_bits_sql(_ANN_PLANES)} AS bucket FROM corpus),
 exact AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -215,7 +212,7 @@ FROM counts
 def vec_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality measurement — the pipeline-health query every ANN
     deployment runs: exact near-dup pairs (blocked GEMM baseline) vs the
-    portable-LSH approximate pairs at the same threshold, reduced to one
+    LSH approximate pairs at the same threshold, reduced to one
     row (n_exact, n_ann, n_hit, recall). Both sides and the set
     intersection are recomputed independently by the DuckDB oracle. At
     corpus scale the exact side runs on a SAMPLE; here the full corpus is
@@ -247,8 +244,8 @@ def vec_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__e", F.lit(1))
     )
     ann = (
-        similarity.lsh_portable_near_dup_pairs(
-            corpus, _ANN_PLANES, threshold=_ANN_RECALL_T
+        similarity.lsh_near_dup_pairs(
+            corpus, _ANN_PLANES, threshold=_ANN_RECALL_T, nbits=len(_ANN_PLANES)
         )
         .select("id_a", "id_b")
         .withColumn("__a", F.lit(1))

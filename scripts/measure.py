@@ -15,9 +15,11 @@ from __future__ import annotations
 
 import argparse
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 
 def main() -> None:

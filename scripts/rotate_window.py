@@ -50,10 +50,10 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 
-# The three documented partitioner-dependent xxhash64 fast paths the DuckDB
-# oracle cannot replay; permanently pinned OUT of the window (COVERAGE.md,
+# The one xxhash64 fast path the DuckDB oracle cannot replay; permanently
+# pinned OUT of the window (COVERAGE.md,
 # test_rows_only_set_is_exactly_the_documented_three).
-ROWS_ONLY = {"dedup_minhash_lsh", "dedup_simhash", "vec_lsh_near_dup"}
+ROWS_ONLY = {"dedup_simhash"}
 
 
 def _strings(node) -> list[str]:

@@ -54,7 +54,7 @@ QUERIES = (
     "vec_semantic_dedup",
     "vec_lsh_portable",
     # round-10: the GEMM twin of the portable path shares the adaptive
-    # width fix (portable_nbits) — its own slope row proves the bucketed
+    # width fix (choose_nbits) — its own slope row proves the bucketed
     # re-rank inherits the log-growth design
     "vec_bucketed_near_dup",
     # round-8 (VERDICT r07 item 7): the two multi-operator pipeline

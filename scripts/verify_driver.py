@@ -9,8 +9,10 @@ Usage:  python scripts/verify_driver.py [query-name ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import duckdb
 import pandas as pd

@@ -9,6 +9,9 @@ import __spark_entry__ as entrymod
 from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.operators import (
     similarity,
 )
+from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.suites.vectors import (
+    _PLANES as PLANES,
+)
 from tests.conftest import SF_DIR, assert_matches_oracle
 
 ORACLE_QUERIES = [
@@ -16,6 +19,7 @@ ORACLE_QUERIES = [
     "vec_exact_near_dup",
     "vec_label_centroids",
     "vec_lsh_portable",
+    "vec_lsh_near_dup",
     "vec_kmeans_centroids",
     "vec_ann_recall",
     "search_hybrid_rrf",
@@ -161,7 +165,9 @@ def test_lsh_recall_vs_exact_on_perturbed(spark, emb):
     }
     approx = {
         (r["id_a"], r["id_b"])
-        for r in similarity.lsh_near_dup_pairs(corpus, threshold=0.95, nbits=10).collect()
+        for r in similarity.lsh_near_dup_pairs(
+            corpus, PLANES, threshold=0.95, nbits=10
+        ).collect()
     }
     assert len(exact) >= 150, f"expected ~200 planted pairs, got {len(exact)}"
     recall = len(exact & approx) / len(exact)
@@ -238,8 +244,8 @@ def test_recall_leg_pairs_are_distinct(spark):
     exact = similarity.exact_near_dup_pairs_blocked(
         corpus, threshold=V._ANN_RECALL_T, n_rows=n
     )
-    ann = similarity.lsh_portable_near_dup_pairs(
-        corpus, V._ANN_PLANES, threshold=V._ANN_RECALL_T
+    ann = similarity.lsh_near_dup_pairs(
+        corpus, V._ANN_PLANES, threshold=V._ANN_RECALL_T, nbits=len(V._ANN_PLANES)
     )
     for label, leg in (("exact", exact), ("ann", ann)):
         worst = (
@@ -336,8 +342,11 @@ def test_kmeans_improves_on_init_and_is_deterministic(spark, emb):
 
 
 def test_lsh_signature_deterministic(spark, emb):
-    a = sorted(similarity.lsh_signature(emb.limit(30)).select("vec_id", "bucket").collect())
-    b = sorted(similarity.lsh_signature(emb.limit(30)).select("vec_id", "bucket").collect())
+    def buckets():
+        sig = similarity.lsh_signature_planes(emb.limit(30), PLANES[:12])
+        return sorted(sig.select("vec_id", "bucket").collect())
+
+    a, b = buckets(), buckets()
     assert a == b
 
 
@@ -373,25 +382,27 @@ def test_choose_nbits_tracks_corpus_size():
     assert n / 2**nb <= 32 <= 2 * (n / 2**nb) + 32
 
 
-def test_portable_nbits_matches_sql_mirror():
-    """The portable LSH width (r09 scale fix) must be CROSS-ENGINE EXACT:
-    the integer-arithmetic Python form and the generated DuckDB form
+def test_choose_nbits_matches_sql_mirror():
+    """The LSH width (r09 scale fix) must be CROSS-ENGINE EXACT: the
+    integer-arithmetic Python form and the generated DuckDB form
     (``nbits_sql``) agree at every count, including exact powers of two
-    where a float log2 could flip the last ulp."""
+    where a float log2 could flip the last ulp — at the defaults and at
+    the ~4-vectors-per-bucket, 16-bit setting."""
     import duckdb
 
     counts = [0, 1, 4, 5, 255, 256, 257, 999, 1000, 1001, 1023, 1024,
               1025, 4000, 40000, 262143, 262144, 262145, 10**7]
-    sql = similarity.nbits_sql("c")
-    for n in counts:
-        got = duckdb.sql(f"WITH c AS (SELECT * FROM range({n})) {sql}").fetchone()[0]
-        assert similarity.portable_nbits(n) == got, n
+    for kw in ({}, {"target_bucket_size": 4, "max_bits": 16}):
+        sql = similarity.nbits_sql("c", **kw)
+        for n in counts:
+            got = duckdb.sql(f"WITH c AS (SELECT * FROM range({n})) {sql}").fetchone()[0]
+            assert similarity.choose_nbits(n, **kw) == got, (n, kw)
     # clamp floor / ceiling and monotonicity
-    assert similarity.portable_nbits(0) == 6
-    assert similarity.portable_nbits(10**12) == 16
-    assert similarity.portable_nbits(1_000) == 8  # sf0.01 corpus: unchanged vs r09
+    assert similarity.choose_nbits(0, 4) == 6
+    assert similarity.choose_nbits(10**12, 4, max_bits=16) == 16
+    assert similarity.choose_nbits(1_000, 4) == 8  # sf0.01 corpus: unchanged vs r09
     for small, big in ((1_000, 40_000), (40_000, 200_000)):
-        assert similarity.portable_nbits(small) < similarity.portable_nbits(big)
+        assert similarity.choose_nbits(small, 4) < similarity.choose_nbits(big, 4)
 
 
 def test_make_planes_prefix_stable():
@@ -423,13 +434,13 @@ def test_bucketed_gemm_equals_lsh_path(spark, emb):
         lsh = {
             (r["id_a"], r["id_b"], r["sim"])
             for r in similarity.lsh_near_dup_pairs(
-                corpus, threshold=0.95, nbits=None, n_rows=n, target_bucket_size=16
+                corpus, PLANES, threshold=0.95, n_rows=n, target_bucket_size=16
             ).collect()
         }
         bucketed = {
             (r["id_a"], r["id_b"], r["sim"])
             for r in similarity.bucketed_near_dup_pairs(
-                corpus, threshold=0.95, nbits=None, n_rows=n, target_bucket_size=16
+                corpus, PLANES, threshold=0.95, n_rows=n, target_bucket_size=16
             ).collect()
         }
         assert bucketed == lsh, f"limit={limit}"
@@ -449,13 +460,13 @@ def test_bucketed_gemm_sub_blocks_invariant(spark, emb):
     base = {
         tuple(r)
         for r in similarity.bucketed_near_dup_pairs(
-            corpus, threshold=0.95, nbits=6, sub_blocks=1
+            corpus, PLANES, threshold=0.95, nbits=6, sub_blocks=1
         ).collect()
     }
     split = {
         tuple(r)
         for r in similarity.bucketed_near_dup_pairs(
-            corpus, threshold=0.95, nbits=6, sub_blocks=3
+            corpus, PLANES, threshold=0.95, nbits=6, sub_blocks=3
         ).collect()
     }
     assert base == split and len(base) >= 40
@@ -576,7 +587,8 @@ def test_zero_norm_vectors_never_raise(spark):
         qs, df, k=2, query_id="q_id", query_vec="q_emb"
     ).collect()
     assert len(topk) == 2 and all(r["sim"] is None for r in topk)
-    lsh = similarity.lsh_near_dup_pairs(df, threshold=0.5, nbits=4).collect()
+    planes = similarity.make_planes(4, 2, 42)
+    lsh = similarity.lsh_near_dup_pairs(df, planes, threshold=0.5, nbits=4).collect()
     assert {(r["id_a"], r["id_b"]) for r in lsh} <= {(0, 2)}
 
 
