@@ -8,7 +8,7 @@ re-expresses that capability Spark-first:
 
 - fidelity layer (``operators.sorting``, ``operators.hybrid``,
   ``sources.datagen``, ``io``): total sort / partition sort / top-k / ranked
-  output, a reference-faithful hybrid-sort ``mapPartitions`` demo, seeded
+  output, a reference-faithful hybrid-sort ``mapInArrow`` demo, seeded
   deterministic generators, ordered sinks, and a three-window benchmark
   harness mirroring the reference's timing methodology.
 - extension layer (``operators.dedup``, ``operators.similarity``,

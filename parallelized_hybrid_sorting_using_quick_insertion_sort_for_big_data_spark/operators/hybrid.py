@@ -16,9 +16,13 @@ algorithmic semantics —
 
 — but written from scratch in idiomatic Python against public PySpark APIs
 (no code is translated from the reference; the C sources only define the
-semantics). The production path for total sort remains ``operators.sorting``
-(native ``orderBy``): this module exists to prove semantic parity and to
-benchmark the reference topology against the Spark-native plan.
+semantics). ``hybrid_ranked`` runs the kernel in one Arrow-batched
+``mapInArrow`` stage per range partition and ranks its output with the same
+count-offset tail as ``sorting.ranked`` (``sorting.rank_arranged``), so the
+only Python in the plan is the kernel itself. The production path for total
+sort remains ``operators.sorting`` (native ``orderBy``): this module exists
+to prove semantic parity and to benchmark the reference topology against the
+Spark-native plan.
 
 Deliberate divergences from the reference (SURVEY.md §7.4):
   - no INT_MAX sentinel padding (Spark partitions are variable-length),
@@ -34,8 +38,11 @@ from __future__ import annotations
 import heapq
 from typing import Iterable, Iterator, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import sorting
 
 DEFAULT_THRESHOLD = 25  # mirrors QuickInsertionHeap.c:7
 
@@ -119,10 +126,17 @@ def hybrid_ranked(
     """The reference's full MPI topology, Spark-distributed, with rank output:
 
       range-partition exchange (≈ MPI_Scatterv, but key-ranged so partition i
-      wholly precedes partition i+1) → per-partition hybrid quick+insertion
-      sort in Python (≈ per-rank quicksort, QuickInsertionHeap.c:208) →
-      zipWithIndex (count-pass + offset, preserving partition order — the
-      distributed replacement for gather + rank-0 k-way merge).
+      wholly precedes partition i+1) → one ``mapInArrow`` stage running the
+      hybrid quick+insertion sort on each partition's values (≈ per-rank
+      quicksort, QuickInsertionHeap.c:208) → ``sorting.rank_arranged``
+      (per-partition count + broadcast offsets over the persisted output —
+      the distributed replacement for gather + rank-0 k-way merge).
+
+    The Arrow stage gathers the partition's values with ``to_pylist()``,
+    sorts the non-null ones with ``hybrid_quickinsertion_sort`` and emits
+    the partition's nulls after them (nulls last, as ``sorting.ranked``
+    orders them; the range exchange also puts nulls last). Output batches
+    keep the sizes of the input batches Spark handed the stage.
 
     Output schema: ``(rnk BIGINT, value BIGINT)``, globally ascending by
     value. Ties carry identical rows, so the result is deterministic as a
@@ -130,22 +144,23 @@ def hybrid_ranked(
     stable. Scale note: the Python kernel caps throughput — this is the
     fidelity demo; production sorts use ``sorting.total_sort``.
     """
-    spark = df.sparkSession
-    n = num_partitions or max(1, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+    n = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     arranged = df.select(F.col(value_col).cast("long").alias("value")).repartitionByRange(
-        n, F.col("value")
+        max(1, n), F.col("value").asc_nulls_last()
     )
 
-    def sort_partition(rows: Iterator) -> Iterator[int]:
-        vals = [r[0] for r in rows]
-        hybrid_quickinsertion_sort(vals, threshold)
-        return iter(vals)
+    def sort_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = list(batches)
+        column = pa.chunked_array([b.column(0) for b in batches], type=pa.int64())
+        vals = hybrid_quickinsertion_sort(column.drop_null().to_pylist(), threshold)
+        out = pa.array(vals + [None] * column.null_count, type=pa.int64())
+        start = 0
+        for b in batches:
+            yield pa.RecordBatch.from_arrays([out.slice(start, b.num_rows)], names=["value"])
+            start += b.num_rows
 
-    # cache before zipWithIndex: it runs a count job then the data job, and
-    # range-boundary sampling must not be recomputed between them
-    sorted_rdd = arranged.rdd.mapPartitions(sort_partition).cache()
-    indexed = sorted_rdd.zipWithIndex().map(lambda t: (t[1] + 1, t[0]))
-    return spark.createDataFrame(indexed, schema="rnk long, value long")
+    sorted_values = arranged.mapInArrow(sort_partition, "value long")
+    return sorting.rank_arranged(sorted_values, "rnk").select("rnk", "value")
 
 
 def scatter_sort_merge_collect(

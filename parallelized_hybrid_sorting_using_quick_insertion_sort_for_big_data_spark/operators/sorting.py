@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from typing import Iterable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -118,6 +119,57 @@ def _rank_offsets(counts: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return offsets
 
 
+def rank_arranged(arranged: DataFrame, rank_col: str = "rnk") -> DataFrame:
+    """Global 1-based rank of a frame that is already in total order: its
+    partitions range-ordered (partition i wholly precedes partition i+1) and
+    each partition iterated in sorted order. The shared count-offset tail of
+    ``ranked`` and ``hybrid.hybrid_ranked``:
+
+      1. tag each row with its partition id and partition-local ordinal —
+         ``monotonically_increasing_id``'s low 33 bits (the id is
+         partition_index << 33 + local ordinal, assigned in iteration order),
+      2. persist, and count rows per partition (a P-row aggregate),
+      3. broadcast-join the running offsets back: rank = offset + ordinal + 1.
+
+    No window and no re-sort. The tagged frame is persisted between the
+    count pass and the output pass because range-boundary sampling is not
+    deterministic across jobs, and the ordinal must be assigned over the
+    identical partition iteration both times; the persist sits after
+    everything that produced ``arranged``, so the sampling and any Python
+    stage run once. At cluster scale use StorageLevel.DISK_ONLY or
+    checkpoint instead. Partition size bound: 2^33 rows per partition —
+    range partitions sized to task memory are orders of magnitude smaller,
+    and the count pass ENFORCES the bound (see ``_rank_offsets``). Output:
+    ``arranged``'s columns plus ``rank_col``.
+    """
+    spark = arranged.sparkSession
+    tagged = (
+        arranged.withColumn(_PID, F.spark_partition_id())
+        .withColumn(_LRN, F.monotonically_increasing_id().bitwiseAND(F.lit(_LRN_BOUND - 1)))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+    counts = sorted(
+        (r[_PID], r["cnt"])
+        for r in tagged.groupBy(_PID).agg(F.count(F.lit(1)).alias("cnt")).collect()
+    )
+    offsets = _rank_offsets(counts)
+    if not offsets:  # empty input
+        return arranged.withColumn(rank_col, F.lit(None).cast("bigint")).limit(0)
+
+    pids, offs = zip(*offsets)
+    # from an Arrow table, the offsets are a local relation: no Python RDD
+    # to parallelize, and broadcasting it runs no job
+    offsets_df = spark.createDataFrame(
+        pa.table({_PID: pa.array(pids, pa.int32()), _OFF: pa.array(offs, pa.int64())})
+    )
+    return (
+        tagged.join(F.broadcast(offsets_df), _PID)
+        .withColumn(rank_col, (F.col(_OFF) + F.col(_LRN) + 1).cast("bigint"))
+        .drop(_PID, _LRN, _OFF)
+    )
+
+
 def ranked(
     df: DataFrame,
     keys: Iterable[str | Column],
@@ -130,54 +182,16 @@ def ranked(
 
     A bare ``row_number() OVER (ORDER BY …)`` collapses to one partition —
     fine at 6k rows, fatal at 100 TB. Instead (the classic distributed
-    zip-with-index):
-
-      1. range-partition + sort within partitions on the full key
-         (deterministic because callers pass unique tiebreaker keys),
-      2. count rows per partition (a P-row aggregate),
-      3. broadcast-join the running offsets back and add the partition-local
-         row index — taken from ``monotonically_increasing_id``'s low 33
-         bits (the id is partition_index << 33 + local ordinal, assigned in
-         iteration order = the sorted order of the persisted frame), so NO
-         window and NO re-sort: the per-partition sort from step 1 is the
-         only sort in the whole plan.
-
-    The sorted frame is persisted between the count pass and the output pass
-    because range-boundary sampling is not deterministic across jobs (and
-    the local ordinal must be assigned over the identical partition
-    iteration both times); at cluster scale use StorageLevel.DISK_ONLY or
-    checkpoint instead. Partition size bound: 2^33 rows per partition —
-    range partitions sized to task memory are orders of magnitude smaller,
-    and the count pass ENFORCES the bound (a partition at 2^33 would alias
-    the masked ordinal and silently repeat ranks; see ``_rank_offsets``).
+    zip-with-index): range-partition + sort within partitions on the full
+    key (deterministic because callers pass unique tiebreaker keys), then
+    ``rank_arranged`` counts rows per partition and adds the running
+    offsets to each row's partition-local ordinal. The per-partition sort
+    is the only sort in the whole plan.
     """
-    spark = df.sparkSession
     sort_cols = _sort_columns(keys, ascending)
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    n = max(1, n)
-
-    arranged = (
-        df.repartitionByRange(n, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .withColumn(_LRN, F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    counts = sorted(
-        (r[_PID], r["cnt"])
-        for r in arranged.groupBy(_PID).agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    offsets = _rank_offsets(counts)
-    if not offsets:  # empty input
-        return df.withColumn(rank_col, F.lit(None).cast("bigint")).limit(0)
-
-    offsets_df = spark.createDataFrame(offsets, schema=f"{_PID} int, {_OFF} long")
-    return (
-        arranged.join(F.broadcast(offsets_df), _PID)
-        .withColumn(rank_col, (F.col(_OFF) + F.col(_LRN) + 1).cast("bigint"))
-        .drop(_PID, _LRN, _OFF)
-    )
+    n = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    arranged = df.repartitionByRange(max(1, n), *sort_cols).sortWithinPartitions(*sort_cols)
+    return rank_arranged(arranged, rank_col)
 
 
 def ranked_small(

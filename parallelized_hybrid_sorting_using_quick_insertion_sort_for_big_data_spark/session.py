@@ -7,6 +7,7 @@ are cluster-appropriate defaults, not local hacks.
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import zipfile
@@ -67,14 +68,15 @@ def ship_package(spark: SparkSession) -> None:
 
     cloudpickle serializes module-level functions by reference (module name +
     qualname), so every operator that ships Python to workers — the hybrid
-    demo's ``mapPartitions``, ``applyInPandasWithState``, the GEMM
+    demo's ``mapInArrow`` kernel, ``applyInPandasWithState``, the GEMM
     ``applyInPandas`` blocks — needs the package on the workers' import path.
     That happens for free when the driver process is launched from the repo
     directory, but not when a harness runs from another cwd — and never on a
     real cluster, where the package must ship with the job. This is the local
     analogue of ``spark-submit --py-files pkg.zip``: zip the package once per
     driver process and ``addPyFile`` it, which distributes the archive and
-    prepends it to each worker's ``sys.path``.
+    prepends it to each worker's ``sys.path``. The zip is removed when the
+    driver's interpreter exits.
     """
     sc = spark.sparkContext
     if getattr(sc, _SHIPPED_ATTR, False):
@@ -86,6 +88,7 @@ def ship_package(spark: SparkSession) -> None:
         for p in sorted(pkg_dir.rglob("*.py")):
             zf.write(p, arcname=f"{pkg_dir.name}/{p.relative_to(pkg_dir)}")
     tmp.replace(zpath)
+    atexit.register(zpath.unlink, missing_ok=True)
     sc.addPyFile(str(zpath))
     setattr(sc, _SHIPPED_ATTR, True)
 

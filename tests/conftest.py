@@ -16,6 +16,17 @@ SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MID = "/root/testdata/sf0.01"
 
 
+def pytest_terminal_summary(terminalreporter):
+    """Say so when the default tier left out `slow` tests (pytest.ini
+    deselects them), and how to run them."""
+    deselected = terminalreporter.stats.get("deselected", [])
+    slow = sum(1 for item in deselected if item.get_closest_marker("slow"))
+    if slow:
+        terminalreporter.write_line(
+            f'deselected {slow} slow-marked test(s); run them with: python -m pytest tests/ -m ""'
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("phsqis-tests")

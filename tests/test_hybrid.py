@@ -9,6 +9,7 @@ import random
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.operators import (
     hybrid,
@@ -48,13 +49,64 @@ def test_kway_merge():
     assert list(hybrid.k_way_merge(runs)) == sorted(sum(runs, []))
 
 
-def test_hybrid_ranked_matches_native(spark):
-    """Distributed hybrid pipeline ≡ native orderBy (the production path)."""
-    ints = datagen.seeded_ints(spark, 20_000, num_partitions=8)
-    demo = hybrid.hybrid_ranked(ints, "value", num_partitions=8).orderBy("rnk")
-    native = sorting.total_sort(ints.select("value"), ["value"])
-    assert [r["value"] for r in demo.collect()] == [r["value"] for r in native.collect()]
-    assert [r["rnk"] for r in demo.orderBy("rnk").collect()] == list(range(1, 20_001))
+# the seeded 20k ints plus the shapes where the count-offset tail and the
+# Arrow stage have edges; every case runs on 8 partitions, so the 3-row
+# frame has more partitions than rows
+RANKED_INPUTS = {
+    "seeded_20k": lambda spark: datagen.seeded_ints(spark, 20_000, num_partitions=8),
+    "empty": lambda spark: spark.createDataFrame([], "value long"),
+    "one_row": lambda spark: spark.createDataFrame([(7,)], "value long"),
+    "all_equal": lambda spark: spark.range(1_000).select(F.lit(5).cast("long").alias("value")),
+    "nulls": lambda spark: spark.range(2_000).select(
+        F.when(F.col("id") % 7 == 0, None).otherwise(F.col("id") * 37 % 101).alias("value")
+    ),
+    "more_partitions_than_rows": lambda spark: spark.createDataFrame(
+        [(3,), (1,), (2,)], "value long"
+    ),
+}
+
+
+@pytest.mark.parametrize("case", RANKED_INPUTS)
+def test_hybrid_ranked_matches_native(spark, case):
+    """Distributed hybrid pipeline ≡ the JVM ranker (``sorting.ranked``):
+    the same (rnk, value) rows, nulls last, and ranks exactly 1..N."""
+    df = RANKED_INPUTS[case](spark)
+    demo = hybrid.hybrid_ranked(df, "value", num_partitions=8)
+    native = sorting.ranked(df.select("value"), ["value"])
+    got = [(r["rnk"], r["value"]) for r in demo.orderBy("rnk").collect()]
+    want = [(r["rnk"], r["value"]) for r in native.orderBy("rnk").collect()]
+    assert got == want
+    assert [rnk for rnk, _ in got] == list(range(1, df.count() + 1))
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Names of every physical node under ``plan``, looking inside adaptive
+    plans, query stages and cached relations."""
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif kind == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def test_hybrid_ranked_is_one_arrow_pass(spark):
+    """The kernel runs in exactly one Arrow-batched Python map, and no
+    Python RDD is turned back into a frame (``Scan ExistingRDD``)."""
+    ints = datagen.seeded_ints(spark, 5_000, num_partitions=4)
+    demo = hybrid.hybrid_ranked(ints, "value", num_partitions=4)
+    demo.collect()
+    nodes = _plan_nodes(demo._jdf.queryExecution().executedPlan())
+    assert nodes.count("MapInArrow") == 1, nodes
+    assert not [n for n in nodes if "ExistingRDD" in n], nodes
 
 
 def test_scatter_sort_merge_collect_matches(spark):

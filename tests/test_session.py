@@ -28,6 +28,30 @@ def test_shipped_zip_contains_the_operators(spark, tmp_path):
         assert f"{pkg}/{mod}" in names
 
 
+def test_shipped_zip_is_removed_at_exit(tmp_path):
+    """A driver process leaves no ``phsqis_pkg_*.zip`` in its temp dir once
+    its interpreter exits, even without stopping the session."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import glob, os, sys, tempfile\n"
+        "from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark"
+        ".session import get_spark\n"
+        "get_spark('zip-cleanup', cpus=1)\n"
+        "print(len(glob.glob(os.path.join(tempfile.gettempdir(), 'phsqis_pkg_*.zip'))))\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g")
+    root = S.Path(S.__file__).resolve().parent.parent
+    run = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert run.stdout.split()[-1] == "1"  # the zip existed while the driver ran
+    assert not list(tmp_path.glob("phsqis_pkg_*.zip"))
+
+
 def test_driver_window_is_exactly_the_priority_prefix():
     """The correctness driver checks the FIRST 50 queries() entries, so
     ordering is a public contract: the priority list must hold exactly 50
