@@ -11,10 +11,8 @@ Scale shape (the only one that survives 100 TB):
   (tokenize → n-grams → explode) that pipelines into the parquet scan.
 - The per-doc aggregation (`groupBy doc_id`) shuffles only
   (doc_id, gram-hit) pairs — bounded by corpus n-gram count, linear.
-- N-grams travel as 64-bit ``xxhash64`` values in the fast path
-  (``hash_grams=True``): 8 bytes per gram in the broadcast table and the
-  shuffle instead of the raw string. The portable path keeps raw strings so
-  a SQL oracle can replay the identical computation.
+- N-grams are joined as raw strings, so a SQL oracle
+  (``contamination_stats_sql``) replays the identical computation.
 
 No Python UDFs anywhere: n-gram construction is ``transform`` over
 ``sequence`` + ``slice`` (JVM higher-order functions, whole-stage codegen).
@@ -36,7 +34,6 @@ def contamination_stats(
     text_col: str = "text",
     bench_text_col: str = "text",
     threshold: float = 0.2,
-    hash_grams: bool = True,
     round_digits: int = 9,
 ) -> DataFrame:
     """Per-corpus-document contamination against ``benchmark``: how many of
@@ -46,35 +43,18 @@ def contamination_stats(
     Output: (id_col, n_grams, n_overlap, contamination_frac, contaminated)
     — one row per corpus document, zero-overlap documents included (a
     decontamination pass must emit a verdict for every doc, not only hits).
-
-    ``hash_grams=True`` joins on ``xxhash64(gram)`` (8-byte keys — the
-    production path); ``False`` joins on the raw gram string so an external
-    SQL engine can replay the computation exactly.
+    Grams are joined as raw strings; a document shorter than ``n`` tokens
+    keeps one NULL-gram row, so it reports n_grams = 0.
     """
-    # Hash ONLY non-null grams: ``xxhash64(NULL)`` returns the seed (a
-    # non-null LONG), so the explode_outer NULL marker for a doc shorter
-    # than ``n`` tokens would otherwise turn into a countable, joinable key
-    # — n_grams=1 instead of 0, and a spurious hit if a benchmark gram ever
-    # hashed to the seed. NULL must stay NULL through the key function.
-    key = (
-        (lambda c: F.when(c.isNotNull(), F.xxhash64(c)))
-        if hash_grams
-        else (lambda c: c)
-    )
-
-    bench_grams = (
-        benchmark.select(
-            F.explode(word_ngrams(F.col(bench_text_col), n)).alias("__g")
-        )
-        .select(key(F.col("__g")).alias("__bg"))
-        .distinct()
-    )
+    bench_grams = benchmark.select(
+        F.explode(word_ngrams(F.col(bench_text_col), n)).alias("__bg")
+    ).distinct()
     from ..sources.tables import spread_scan
 
     doc_grams = spread_scan(corpus).select(
         F.col(id_col),
-        F.explode_outer(word_ngrams(F.col(text_col), n)).alias("__g"),
-    ).select(id_col, key(F.col("__g")).alias("__dg")).distinct()
+        F.explode_outer(word_ngrams(F.col(text_col), n)).alias("__dg"),
+    ).distinct()
 
     hits = doc_grams.join(
         F.broadcast(bench_grams), F.col("__dg") == F.col("__bg"), "left"
@@ -104,9 +84,9 @@ def contamination_stats_sql(
     threshold: float = 0.2,
     round_digits: int = 9,
 ) -> str:
-    """DuckDB SQL replaying :func:`contamination_stats` (raw-gram join —
-    pair with ``hash_grams=False``). ``corpus_sql`` / ``benchmark_sql`` are
-    subqueries yielding (doc_id, text)."""
+    """DuckDB SQL replaying :func:`contamination_stats` (the same raw-gram
+    join). ``corpus_sql`` / ``benchmark_sql`` are subqueries yielding
+    (doc_id, text)."""
     grams = word_ngrams_sql("text", n)
     return f"""
 WITH bench_grams AS (

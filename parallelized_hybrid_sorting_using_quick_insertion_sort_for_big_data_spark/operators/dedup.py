@@ -12,7 +12,11 @@ Scale design (the whole point of these at 100 TB):
   equi-joins on (band, band-hash) — candidate count is controlled by the
   banding parameters, independent of corpus size;
 - SimHash reduces each doc to one 64-bit int; near-dup = small Hamming
-  distance, bucketed by bit-chunks for join-based candidate generation.
+  distance, bucketed by bit-chunks for join-based candidate generation;
+- substring dedup (``duplicate_spans``, ``span_dedup_rewrite``) shares one
+  L-token window relation keyed by ``xxhash64`` of the token slice
+  (``_span_windows``): 8 bytes per window occurrence in the shuffle,
+  replayed by string-keyed DuckDB oracles.
 
 MinHash has one hash family: an md5-prefix base hash and per-slot
 permutations drawn from the seed with stdlib hashlib, so its DuckDB oracle
@@ -1524,6 +1528,25 @@ WHERE CAST(s.n_shared AS DOUBLE) / (za.n_sh + zb.n_sh - s.n_shared) >= {threshol
 # ---------------------------------------------------------------------------
 
 
+def _span_windows(toks: DataFrame, l: int, id_col: str) -> DataFrame:
+    """(id_col, pos, __h) for every ``l``-token window of the pinned
+    ``__toks`` relation: ``__h`` is ``xxhash64`` of the L-token ARRAY
+    slice, so each occurrence shuffles a fixed 8-byte key and the window
+    string is never assembled. Two distinct windows collide in 64 bits
+    with odds ≈ k²/2⁶⁵ (~3% at 10¹² corpus windows); a collision only
+    over-marks one window as duplicated. Documents shorter than ``l``
+    tokens yield no windows."""
+    return toks.where(F.size("__toks") >= l).select(
+        F.col(id_col),
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.size("__toks") - l),
+                lambda k: F.xxhash64(F.slice("__toks", k + 1, l)),
+            )
+        ).alias("pos", "__h"),
+    )
+
+
 def duplicate_spans(
     docs: DataFrame,
     l: int = 8,
@@ -1543,100 +1566,29 @@ def duplicate_spans(
     standard over-merge of shingle-based substring dedup; the cut
     decision only needs "this text is duplicated material").
 
-    Scale shape: shingling is a map-side projection (one row per token
-    position, the text itself never replicated per shingle — the slice
-    happens inside a per-row transform). The frequency pass is one hash
-    agg on the shingle, the position join one equi-shuffle, the island
-    merge one window keyed by doc. At 100 TB use the implemented twin
-    :func:`duplicate_spans_fast`: same plan, but the shuffled key is the
-    64-bit xxhash64 of the token window (collision odds negligible;
-    this form keeps the exact string so the DuckDB oracle can replay
-    byte-for-byte) plus an optional stop-shingle frequency cap.
+    Scale shape: windowing is a map-side projection (one row per token
+    position, the text itself never replicated per window) keyed by the
+    64-bit window hash from :func:`_span_windows`. The frequency pass is one hash
+    agg on that key, the position join one equi-shuffle, the island
+    merge one window keyed by doc. The DuckDB oracle keys on the window
+    string, so the oracle check value-hashes this plan against a
+    string-keyed replay.
 
-    The tokenized relation is pinned eagerly: the shingle relation feeds
+    The tokenized relation is pinned eagerly: the window relation feeds
     both the frequency agg and the position join, and without the pin
-    each side re-runs tokenization + shingling from the raw text (the
+    each side re-runs tokenization + windowing from the raw text (the
     both-join-sides re-evaluation ahash_near_dup_pairs documents).
     Pinning the token arrays (one row per doc) is far cheaper than
-    pinning the L-times-larger shingle expansion, which recomputes
+    pinning the L-times-larger window expansion, which recomputes
     map-side from the pinned tokens."""
     toks = (
         docs.select(F.col(id_col), T.tokens(F.col(text_col)).alias("__toks"))
         .where(F.size("__toks") >= l)
         .localCheckpoint(eager=True)
     )
-    sh = toks.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - l),
-                lambda k: F.array_join(F.slice("__toks", k + 1, l), " "),
-            )
-        ).alias("pos", "__sh"),
-    )
-    freq = sh.groupBy("__sh").agg(F.count(F.lit(1)).alias("__cnt"))
-    dup = sh.join(freq.where(F.col("__cnt") >= 2), "__sh").select(id_col, "pos")
-    w = Window.partitionBy(id_col).orderBy("pos")
-    isl = dup.withColumn("__g", F.col("pos") - F.row_number().over(w))
-    return (
-        isl.groupBy(id_col, "__g")
-        .agg(
-            F.min("pos").cast("bigint").alias("span_start"),
-            (F.max("pos") + l - 1).cast("bigint").alias("span_end"),
-            (F.max("pos") - F.min("pos") + l).cast("bigint").alias("span_tokens"),
-            F.count(F.lit(1)).cast("bigint").alias("n_dup_shingles"),
-        )
-        .drop("__g")
-    )
-
-
-def duplicate_spans_fast(
-    docs: DataFrame,
-    l: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_shingle_freq: int | None = None,
-) -> DataFrame:
-    """:func:`duplicate_spans` with the 100 TB key representation that
-    function's docstring prescribes (r09 promise, landed r10): the
-    shuffled shingle key is ``xxhash64`` of the L-token ARRAY slice —
-    fixed 8 bytes per occurrence instead of an L-token string, and the
-    string is never even assembled (the hash consumes the array
-    directly). Frequency agg, position join, and island merge are
-    byte-identical to the string path, so the result set is equal
-    unless two distinct windows collide in 64 bits (≈ k²/2⁶⁵ — at 10¹²
-    corpus shingles, odds ~3%, and a collision only over-marks one
-    window as duplicated; pair a second seed if that matters). Parity
-    with the string form is pytest-asserted and the registered query
-    shares the string form's DuckDB oracle, so the driver value-hashes
-    the hash-keyed plan against a string-keyed replay.
-
-    ``max_shingle_freq`` is the stop-shingle cap: shingles hotter than
-    the cap are dropped from span detection (they are boilerplate the
-    pipeline handles with dedicated filters; the same knob the n-gram
-    Jaccard join has). Unlike the pair join there, hot keys here cannot
-    go quadratic — the cap is a skew/semantics dial, not a safety
-    requirement — so the default (None) keeps exact parity with
-    :func:`duplicate_spans`."""
-    toks = (
-        docs.select(F.col(id_col), T.tokens(F.col(text_col)).alias("__toks"))
-        .where(F.size("__toks") >= l)
-        .localCheckpoint(eager=True)
-    )
-    sh = toks.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - l),
-                lambda k: F.xxhash64(F.slice("__toks", k + 1, l)),
-            )
-        ).alias("pos", "__h"),
-    )
+    sh = _span_windows(toks, l, id_col)
     freq = sh.groupBy("__h").agg(F.count(F.lit(1)).alias("__cnt"))
-    keep = freq.where(F.col("__cnt") >= 2)
-    if max_shingle_freq is not None:
-        keep = keep.where(F.col("__cnt") <= max_shingle_freq)
-    dup = sh.join(keep, "__h").select(id_col, "pos")
+    dup = sh.join(freq.where(F.col("__cnt") >= 2), "__h").select(id_col, "pos")
     w = Window.partitionBy(id_col).orderBy("pos")
     isl = dup.withColumn("__g", F.col("pos") - F.row_number().over(w))
     return (
@@ -1654,7 +1606,8 @@ def duplicate_spans_fast(
 def duplicate_spans_oracle_sql(l: int = 8, table: str = "documents") -> str:
     """DuckDB mirror of :func:`duplicate_spans` — same tokenizer regex,
     same 0-based windows, same global >=2 frequency rule, same
-    gaps-and-islands merge."""
+    gaps-and-islands merge. It keys each window on its string where the
+    Spark plan keys on the slice's xxhash64."""
     return f"""
 WITH toks AS (
   SELECT doc_id, regexp_extract_all(lower(text), '{T.TOKEN_RE}') AS t
@@ -1714,31 +1667,25 @@ def span_dedup_rewrite(
     inter-token bytes by design; a production pipeline carries byte
     offsets instead — same plan shape, wider rows).
 
-    Scale: the windows/frequency legs are `duplicate_spans`'s (linear map
-    side, one hash agg, one equi-join); the rebuild adds one per-doc
-    grouped collect of (pos, token) structs — bounded by document length,
-    never by corpus size — and the cut-token anti-join, keyed by
-    (doc, token position). The tokenized relation is pinned eagerly —
-    it feeds the shingle windows, the rebuild rows, AND the before-count,
-    so an unpinned plan re-tokenizes the corpus three times."""
+    Scale: the windows/frequency legs are `duplicate_spans`'s (the same
+    :func:`_span_windows` hash-keyed relation, one hash agg, one
+    equi-join); the rebuild adds one per-doc grouped collect of
+    (pos, token) structs — bounded by document length, never by corpus
+    size — and the cut-token anti-join, keyed by (doc, token position).
+    The tokenized relation (all documents, short ones included, so every
+    doc gets an output row) is pinned eagerly — it feeds the windows, the
+    rebuild rows, AND the before-count, so an unpinned plan re-tokenizes
+    the corpus three times."""
     toks = docs.select(
         F.col(id_col), T.tokens(F.col(text_col)).alias("__toks")
     ).localCheckpoint(eager=True)
-    occ = toks.where(F.size("__toks") >= l).select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - l),
-                lambda k: F.array_join(F.slice("__toks", k + 1, l), " "),
-            )
-        ).alias("pos", "__sh"),
-    )
+    occ = _span_windows(toks, l, id_col)
     packed = F.col(id_col) * F.lit(_SPAN_PACK) + F.col("pos")
-    canon = occ.groupBy("__sh").agg(
+    canon = occ.groupBy("__h").agg(
         F.count(F.lit(1)).alias("__cnt"), F.min(packed).alias("__canon")
     )
     cut_windows = (
-        occ.join(canon.where(F.col("__cnt") >= 2), "__sh")
+        occ.join(canon.where(F.col("__cnt") >= 2), "__h")
         .where(packed != F.col("__canon"))
         .select(F.col(id_col), "pos")
     )

@@ -134,7 +134,6 @@ def exact_near_dup_pairs_blocked(
     block_size: int = 512,
     round_digits: int | None = 9,
     n_rows: int | None = None,
-    cap_blocks: bool = True,
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold — exact, via blocked matrix multiply.
 
@@ -159,11 +158,8 @@ def exact_near_dup_pairs_blocked(
     real scale path). Block count affects only the physical grouping:
     the pair set and every rounded sim are block-layout-independent.
 
-    ``cap_blocks=False`` (r12, ADVICE r11) restores the pre-r11 semantics
-    where ``block_size`` is a hard CAP on rows per block (the divisor):
-    memory-constrained callers who sized ``block_size`` to bound each
-    task's sims matrix get that bound back, at the cost of block
-    replication growing linearly with the corpus.
+    ``n_rows`` (an UPPER bound is fine — blocks just run underfull) skips
+    the sizing count.
     """
     import pandas as pd
 
@@ -173,9 +169,7 @@ def exact_near_dup_pairs_blocked(
         # frames — callers at scale should pass n_rows (or use
         # ``bucketed_near_dup_pairs``, which never needs a corpus-wide B)
         n_rows = df.count()
-    eff_block = (
-        min(max(block_size, -(-n_rows // 64)), 4096) if cap_blocks else block_size
-    )
+    eff_block = min(max(block_size, -(-n_rows // 64)), 4096)
     n_blocks = max(1, -(-n_rows // eff_block))
 
     vecs = df.select(
@@ -238,124 +232,6 @@ def exact_near_dup_pairs_blocked(
         # a pair co-bucketed twice (same-block pair seen from (bi,bi)) can't
         # occur — pair_id is unique per (bi,bj) — so no distinct needed
     )
-
-
-def exact_near_dup_pairs_contracted(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_size: int = 512,
-    round_digits: int | None = 9,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Exact near-dup pairs with bit-identical vectors PRE-CONTRACTED to one
-    representative before the corpus-wide blocked GEMM (the treatment that
-    fixed ``mm_frame_near_dup``'s variance in r10, commit 050ccd2).
-
-    Topology: group by the raw array value (exact duplicates only — no
-    hashing, so no collision risk), keep ``min(id)`` as the representative,
-    run ``exact_near_dup_pairs_blocked`` over the DISTINCT vectors, then
-    union two provably-complete expansions:
-
-    - intra-group pairs: duplicate vectors are pairwise cosine 1.0, so every
-      (id_a < id_b) inside a group is a hit — a plain equi-self-join on the
-      representative, no GEMM flops spent on them;
-    - rep-rep hits expanded to member × member cross pairs, which all share
-      the rep pair's sim exactly (identical vectors by construction).
-
-    The output pair set — and each pair's rounded sim — is identical to the
-    uncontracted GEMM's: cross-group sims depend only on the two vectors,
-    and intra-group sims reduce to round(cos(v, v), digits). Zero-norm
-    vectors drop on both paths (NULL via ``try_divide`` here, 0-by-
-    convention in the GEMM; neither crosses a positive threshold).
-
-    On a corpus with duplicate factor d, GEMM flops shrink by d² and the
-    block-replication shuffle by d. ``n_rows`` (an UPPER bound is fine —
-    blocks just run underfull) skips the sizing job; when omitted the
-    distinct count is a real job over the contraction. At 100 TB the
-    contraction is one hash shuffle on the vector bytes — the same cost
-    class as the exact-dedup operator — and is worth it whenever the corpus
-    carries any material exact-duplicate mass (crawl corpora always do).
-
-    Cache retention (ADVICE r12): the contraction persists the corpus-wide
-    windowed projection (``mem``, MEMORY_AND_DISK) for its five consumers
-    and — like the file's other persists — does NOT unpersist it: the
-    returned DataFrame is lazy, so dropping the pin here would undo it
-    before the caller's action runs. Long multi-query driver sessions
-    should call ``spark.catalog.clearCache()`` (or ``bench.clear_caches``,
-    which the bench/measure harnesses already run between queries) to
-    release it; MEMORY_AND_DISK evicts under executor memory pressure
-    rather than OOMing in the meantime."""
-    from pyspark.storagelevel import StorageLevel
-
-    mem = df.select(
-        F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__v")
-    ).withColumn("__rep", F.min("__id").over(Window.partitionBy("__v")))
-    # mem fans out to five consumers (reps + optional count, two member
-    # join sides, two intra self-join sides); exchange reuse covers only
-    # the shuffle WRITE, so without a pin each consumer re-runs the
-    # corpus-wide window (ADVICE r11). Persist follows the
-    # jaccard_pairs/minhash_lsh_pairs convention.
-    mem = mem.persist(StorageLevel.MEMORY_AND_DISK)
-
-    reps = mem.where(F.col("__id") == F.col("__rep")).select(
-        F.col("__id").alias(id_col), F.col("__v").alias(vec_col)
-    )
-    if n_rows is None:
-        n_rows = reps.count()
-    rep_pairs = exact_near_dup_pairs_blocked(
-        reps,
-        threshold=threshold,
-        id_col=id_col,
-        vec_col=vec_col,
-        block_size=block_size,
-        round_digits=round_digits,
-        n_rows=n_rows,
-    )
-
-    members = mem.select("__rep", "__id")
-    expanded = (
-        rep_pairs.join(
-            members.select(
-                F.col("__rep").alias("id_a"), F.col("__id").alias("__ma")
-            ),
-            "id_a",
-        )
-        .join(
-            members.select(
-                F.col("__rep").alias("id_b"), F.col("__id").alias("__mb")
-            ),
-            "id_b",
-        )
-        .select(
-            F.least("__ma", "__mb").alias("id_a"),
-            F.greatest("__ma", "__mb").alias("id_b"),
-            "sim",
-        )
-    )
-
-    a, b = mem.alias("a"), mem.alias("b")
-    self_sim = F.try_divide(
-        dot(F.col("a.__v"), F.col("a.__v")),
-        norm(F.col("a.__v")) * norm(F.col("a.__v")),
-    )
-    if round_digits is not None:
-        self_sim = F.round(self_sim, round_digits)
-    intra = (
-        a.join(
-            b,
-            (F.col("a.__rep") == F.col("b.__rep"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            self_sim.alias("sim"),
-        )
-        .where(F.col("sim") >= threshold)
-    )
-    return intra.unionAll(expanded)
 
 
 # ---------------------------------------------------------------------------

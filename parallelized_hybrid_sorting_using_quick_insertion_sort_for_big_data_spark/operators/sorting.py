@@ -205,14 +205,3 @@ def ranked_small(
     task, zero extra jobs."""
     w = Window.orderBy(*_sort_columns(keys, ascending))
     return df.withColumn(rank_col, F.row_number().over(w).cast("bigint"))
-
-
-def is_sorted(df: DataFrame, keys: Iterable[str | Column], ascending: bool = True) -> bool:
-    """Distributed sortedness check (test helper): compare each row's key to
-    the previous via a lag window over the materialized rank order."""
-    cols = [c if isinstance(c, Column) else F.col(c) for c in keys]
-    key = F.struct(*cols)
-    w = Window.orderBy(*_sort_columns(keys, ascending))
-    flagged = df.select(key.alias("k")).withColumn("prev", F.lag("k").over(w))
-    bad = flagged.where(F.col("prev").isNotNull() & (F.col("prev") > F.col("k")))
-    return bad.limit(1).count() == 0

@@ -401,36 +401,6 @@ NORMALIZED_SQL = "trim(regexp_replace(lower({t}), '\\s+', ' ', 'g'))"
 FINGERPRINT_SQL = "md5(" + NORMALIZED_SQL + ")"
 
 
-def rolling_hash(text: Column, base: int = 31, mod: int = (1 << 61) - 1) -> Column:
-    """Polynomial rolling hash over characters (Rabin-Karp style) — the
-    reference-style 'document fingerprint' as a single fold, computed with a
-    higher-order aggregate entirely JVM-side. Not oracle-paired (DuckDB's
-    list_reduce disagrees on empty input); property-tested instead."""
-    chars = F.split(normalized_text(text), "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * base + F.coalesce(F.ascii(c), F.lit(0))) % mod,
-    )
-
-
-def annotate(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass text-analysis annotation: every operator above as a column."""
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": token_count(t),
-            "n_chars_computed": char_count(t),
-            "detected_lang": lang_id(t),
-            "punct_ratio": punct_ratio(t),
-            "stopword_ratio": stopword_ratio(t),
-            "mean_token_len": mean_token_len(t),
-            "quality": quality_score(t),
-            "fingerprint": fingerprint_md5(t),
-        }
-    )
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing (redaction) — patterns restricted to the syntax subset Java
 # regex (Spark) and RE2 (DuckDB) interpret identically: character classes,

@@ -99,20 +99,17 @@ _DRIVER_WINDOW = 50
 # fails) identically no matter which CORRECTNESS artifacts are on disk.
 _DRIVER_PRIORITY: tuple[str, ...] = (
     # Output of
-    #   scripts/rotate_window.py --front <9 names>
-    # FRONT (9): every name on the MinHash and hyperplane-LSH code paths,
-    # which now run one hash family each (md5-prefix MinHash with
-    # independent per-slot permutations; literal-plane LSH for
-    # vec_lsh_near_dup). MUST = the full unpinned set (time-invariant
-    # cover), FILL = pinned names oldest-checked-first.
-    "dedup_minhash_lsh",
-    "dedup_minhash_portable",
-    "dedup_incremental_minhash",
-    "text_minhash_doc_sketch",
-    "dedup_lsh_recall",
-    "vec_lsh_near_dup",
-    "vec_lsh_portable",
-    "vec_bucketed_near_dup",
+    #   scripts/rotate_window.py --front <6 names>
+    # FRONT (6): the substring-dedup, decontamination and exact near-dup
+    # queries, whose operators now have one implementation each (hash-keyed
+    # span windows, raw-gram decontam join, blocked GEMM only). MUST = the
+    # full unpinned set (time-invariant cover), FILL = pinned names
+    # oldest-checked-first.
+    "dedup_duplicate_spans",
+    "dedup_duplicate_spans_fast",
+    "pipeline_span_dedup_rewrite",
+    "decontam_ngram_overlap",
+    "pipeline_pretraining_corpus",
     "vec_ann_recall",
     "events_outlier_robust",
     "events_resample_gapfill",
@@ -144,10 +141,12 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "text_bpe_segmentation",
     "text_crossdup_coverage",
     "text_vocab_growth",
+    "vec_bucketed_near_dup",
     "vec_kmeans_ivf_topk",
     "vec_quantize_int8",
     "vec_semantic_dedup",
     "vec_topk_with_metadata",
+    "vec_lsh_near_dup",
     "rel_gini_revenue",
     "rel_groupwise_regression",
     "rel_rfm_segmentation",
@@ -155,6 +154,7 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "rel_winsorized_stats",
     "rel_yoy_revenue",
     "search_hybrid_rrf",
+    "text_bigram_fluency",
 )
 
 

@@ -141,15 +141,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(table_path(sf_dir, "events"))
     return normalize_event_ts(df)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each table as a temp view so ``spark.sql`` can address it."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -212,7 +212,7 @@ def stream_late_drop(
     Scale shape: identical to ``stream_tumbling_agg`` (bounded state,
     partial-agg counts); the drop accounting is driver-side metadata from
     StreamingQueryProgress, not a data collect."""
-    from .sink import read_sink, stream_shuffle_partitions
+    from .sink import _scratch_dir, read_sink, stream_shuffle_partitions
 
     name = f"phsqis_slate_{uuid.uuid4().hex[:8]}"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -246,8 +246,7 @@ def stream_late_drop(
         .select(F.unix_micros(F.col("win.start")).alias("win_start_us"), "n_events")
     )
 
-    out_dir = os.path.join(tempfile.gettempdir(), name + "_out")
-    os.makedirs(out_dir, exist_ok=True)
+    out_dir = _scratch_dir(name + "_out")
     checkpoint = os.path.join(tempfile.gettempdir(), name + "_ckpt")
 
     def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:

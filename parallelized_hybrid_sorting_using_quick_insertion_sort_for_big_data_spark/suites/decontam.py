@@ -55,13 +55,10 @@ def _corpus_and_bench(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Data
 @query("decontam_ngram_overlap", sql=_DECONTAM_ORACLE)
 def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document benchmark contamination: distinct word 5-gram overlap
-    against the broadcast benchmark gram set. Portable raw-gram join here
-    (oracle replays it); production flips ``hash_grams=True`` for 8-byte
-    join keys — same topology, same verdicts."""
+    against the broadcast benchmark gram set, joined on the raw gram
+    strings the DuckDB oracle replays."""
     corpus, bench = _corpus_and_bench(spark, sf_dir)
-    return decontam.contamination_stats(
-        corpus, bench, n=_N, threshold=_THRESH, hash_grams=False
-    )
+    return decontam.contamination_stats(corpus, bench, n=_N, threshold=_THRESH)
 
 
 _BLOOM_N = 8

@@ -451,8 +451,7 @@ def pipeline_pretraining_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = dedup.exact_dedup(corpus)
     bench = docs.where(F.col("doc_id") % 37 == 0)
     stats = _DC.contamination_stats(
-        deduped, bench, n=_PRETRAIN_N, threshold=_PRETRAIN_CONTAM_T,
-        hash_grams=False,
+        deduped, bench, n=_PRETRAIN_N, threshold=_PRETRAIN_CONTAM_T
     )
     ann = deduped.join(stats.select("doc_id", "contaminated"), "doc_id").select(
         "doc_id",
@@ -1789,29 +1788,21 @@ _SPAN_L = 8
 def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal duplicated token spans over the documents corpus: every
     8-token window occurring >= 2 times anywhere, merged per document
-    into maximal runs via gaps-and-islands. One map-side shingle
-    projection, one frequency hash-agg, one position equi-join, one
-    doc-keyed window — see operators/dedup.py duplicate_spans for the
-    100 TB notes (hash-shuffled shingles + stop-shingle cap)."""
+    into maximal runs via gaps-and-islands. One map-side window
+    projection keyed by the xxhash64 of each 8-token array slice, one
+    frequency hash-agg, one position equi-join, one doc-keyed window.
+    The DuckDB oracle keys on the window string, so the oracle check
+    value-hashes the hash-keyed plan against a string-keyed replay."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return dedup.duplicate_spans(docs, l=_SPAN_L)
 
 
-@query(
+# Registry slot kept from when this was the hash-keyed twin of a
+# string-keyed span query; both names now run the one implementation.
+query(
     "dedup_duplicate_spans_fast",
     sql=dedup.duplicate_spans_oracle_sql(l=_SPAN_L),
-)
-def dedup_duplicate_spans_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB key representation of dedup_duplicate_spans (the r09
-    docstring promise, landed r10): the shuffled shingle key is the
-    xxhash64 of the 8-token ARRAY window — 8 bytes per occurrence, the
-    string never assembled — with frequency agg / position join / island
-    merge byte-identical to the string path. Shares the STRING form's
-    DuckDB oracle: the driver value-hashes the hash-keyed plan against a
-    string-keyed replay, and test_duplicate_spans_fast_parity pins the
-    two Spark forms against each other plus the plan's exchange budget."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return dedup.duplicate_spans_fast(docs, l=_SPAN_L)
+)(dedup_duplicate_spans)
 
 
 @query(
@@ -1826,7 +1817,9 @@ def pipeline_span_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned text and before/after token accounting. The clean_text itself
     is value-hashed against the oracle, so the whole rebuild — tokenizer,
     canonical choice, covered-token cut, ordered rejoin — is checked
-    byte-for-byte. See operators/dedup.py span_dedup_rewrite for the
-    100 TB notes."""
+    byte-for-byte. The canonical choice groups on the same xxhash64
+    window key as dedup_duplicate_spans; the oracle groups on the window
+    string. See operators/dedup.py span_dedup_rewrite for the 100 TB
+    notes."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return dedup.span_dedup_rewrite(docs, l=_SPAN_L)

@@ -224,17 +224,10 @@ def vec_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     green, but a flap on regenerated data indicates float association,
     not a recall bug.
 
-    r11 (VERDICT r10 item 1): the prescribed pre-contraction of exact-dup
-    vectors WAS built (``exact_near_dup_pairs_contracted``, pair-set
-    equality pytest-pinned) and measured here — and rejected for this
-    cell: at bench scale the blocked GEMM leg is 1.2 s steady and the
-    contraction's extra window shuffle + expansion joins cost MORE than
-    the flops they save (isolated 2.2 s vs 1.2 s; first rep 7.0 s vs
-    1.9 s). The cell's variance came from the triple-aggregate crossJoin
-    form re-evaluating both legs (fixed below — single-pass now) plus
-    host steal, not GEMM flops. The contracted operator remains the
-    documented choice when the corpus carries real duplicate mass at
-    scale; this corpus's planted dup factor 2 is below its break-even."""
+    Pre-contracting bit-identical vectors before the exact leg measured
+    slower here than the plain blocked GEMM: at this corpus's planted
+    dup factor 2, the extra window shuffle and expansion joins cost more
+    than the flops they save."""
     corpus, n = _dup_corpus(spark, sf_dir)
     exact = (
         similarity.exact_near_dup_pairs_blocked(

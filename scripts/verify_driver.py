@@ -1,13 +1,15 @@
 """Drive the grading-driver contract end-to-end: every queries() entry vs
-its DuckDB oracle at sf0.01, exactly like the driver compares them
-(sorted column names, row count, values sorted by all columns).
+its DuckDB oracle on one scale-factor directory (sf0.01 by default),
+exactly like the driver compares them (sorted column names, row count,
+values sorted by all columns).
 
-Usage:  python scripts/verify_driver.py [query-name ...]
-        (no args = all queries)
+Usage:  python scripts/verify_driver.py [--sf DIR] [query-name ...]
+        (no names = all queries)
 """
 
 from __future__ import annotations
 
+import argparse
 import sys
 from pathlib import Path
 
@@ -20,7 +22,6 @@ import pandas as pd
 import __spark_entry__ as E
 from pyspark.sql import SparkSession
 
-SF = "/root/testdata/sf0.01"
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -50,7 +51,11 @@ def value_hash(df: pd.DataFrame) -> str:
 
 
 def main() -> int:
-    only = set(sys.argv[1:])
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--sf", default="/root/testdata/sf0.01", help="scale-factor directory")
+    ap.add_argument("names", nargs="*", help="query names (default: all)")
+    args = ap.parse_args()
+    sf, only = args.sf, set(args.names)
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
@@ -61,20 +66,24 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     n = E.entry(spark).count()
-    print(f"MARKER entry_rows={n}")
+    print(f"MARKER sf={sf} entry_rows={n}")
     assert n >= 0
 
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
     qs, oracles = E.queries(), E.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"MARKER unknown query names: {unknown}")
+        return 2
     fails, no_oracle = [], []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, SF).toPandas()
+            sdf = fn(spark, sf).toPandas()
         except Exception as ex:  # noqa: BLE001
             fails.append((name, f"SPARK-ERROR {type(ex).__name__}: {ex}"))
             print(f"MARKER {name} SPARK-ERROR {ex}")

@@ -30,17 +30,23 @@ def test_shipped_zip_contains_the_operators(spark, tmp_path):
 
 def test_shipped_zip_is_removed_at_exit(tmp_path):
     """A driver process leaves no ``phsqis_pkg_*.zip`` in its temp dir once
-    its interpreter exits, even without stopping the session."""
+    its interpreter exits, even without stopping the session, and a
+    streaming query run in it leaves no ``phsqis_*`` scratch dir behind."""
     import os
     import subprocess
     import sys
+
+    from tests.conftest import SF_DIR
 
     code = (
         "import glob, os, sys, tempfile\n"
         "from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark"
         ".session import get_spark\n"
-        "get_spark('zip-cleanup', cpus=1)\n"
+        "from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark"
+        ".queries import queries\n"
+        "spark = get_spark('zip-cleanup', cpus=1)\n"
         "print(len(glob.glob(os.path.join(tempfile.gettempdir(), 'phsqis_pkg_*.zip'))))\n"
+        f"queries()['events_stream_late_drop'](spark, {SF_DIR!r}).collect()\n"
     )
     env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g")
     root = S.Path(S.__file__).resolve().parent.parent
@@ -49,7 +55,7 @@ def test_shipped_zip_is_removed_at_exit(tmp_path):
     )
     assert run.returncode == 0, run.stderr[-2000:]
     assert run.stdout.split()[-1] == "1"  # the zip existed while the driver ran
-    assert not list(tmp_path.glob("phsqis_pkg_*.zip"))
+    assert not list(tmp_path.glob("phsqis_*"))
 
 
 def test_driver_window_is_exactly_the_priority_prefix():

@@ -194,41 +194,6 @@ def test_blocked_gemm_matches_naive_exact(spark, emb):
     assert len(blocked) >= 100
 
 
-def test_contracted_gemm_matches_blocked_exact(spark, emb):
-    """Pre-contracting exact-duplicate vectors (r11, VERDICT r10 item 1)
-    returns the identical pair set and round(9) sims as the uncontracted
-    blocked GEMM — on a corpus with triple-duplicate groups (so intra-group
-    expansion emits k(k-1)/2 = 3 pairs per group) AND perturbed near-dups
-    (so cross-group rep-rep expansion is exercised too)."""
-    base = _perturbed_corpus(spark, emb.limit(60))  # 120 rows, cos≈0.998 pairs
-    third = base.select((F.col("vec_id") + 200_000).alias("vec_id"), "embedding")
-    corpus = base.unionAll(third)  # every vector now appears 2×... groups of 2
-    blocked = {
-        (r["id_a"], r["id_b"], r["sim"])
-        for r in similarity.exact_near_dup_pairs_blocked(
-            corpus, threshold=0.95, block_size=64
-        ).collect()
-    }
-    contracted = {
-        (r["id_a"], r["id_b"], r["sim"])
-        for r in similarity.exact_near_dup_pairs_contracted(
-            corpus, threshold=0.95, block_size=64
-        ).collect()
-    }
-    assert contracted == blocked
-    # sanity: intra-group (sim 1.0) and cross-group (≈0.998) pairs both present
-    sims = {s for _, _, s in contracted}
-    assert 1.0 in sims and any(s < 1.0 for s in sims)
-    # n_rows as a loose UPPER bound (full corpus count) must not change results
-    upper = {
-        (r["id_a"], r["id_b"], r["sim"])
-        for r in similarity.exact_near_dup_pairs_contracted(
-            corpus, threshold=0.95, block_size=64, n_rows=240
-        ).collect()
-    }
-    assert upper == blocked
-
-
 def test_recall_leg_pairs_are_distinct(spark):
     """ADVICE r11: vec_ann_recall's single-pass full-outer form assumes both
     pair legs are duplicate-free on (id_a, id_b) — a duplicated row would
@@ -255,27 +220,6 @@ def test_recall_leg_pairs_are_distinct(spark):
             .collect()[0]["m"]
         )
         assert worst == 1, f"{label} leg emits duplicated pairs (max count {worst})"
-
-
-@pytest.mark.slow
-def test_blocked_gemm_cap_blocks_escape_hatch(spark, emb):
-    """cap_blocks=False (ADVICE r11) restores block_size as a hard per-block
-    row cap (the pre-r11 divisor semantics) for memory-constrained callers;
-    the pair set and sims stay block-layout-independent either way."""
-    corpus = _perturbed_corpus(spark, emb.limit(60))  # 120 rows
-    capped = {
-        (r["id_a"], r["id_b"], r["sim"])
-        for r in similarity.exact_near_dup_pairs_blocked(
-            corpus, threshold=0.95, block_size=1
-        ).collect()
-    }
-    uncapped = {
-        (r["id_a"], r["id_b"], r["sim"])
-        for r in similarity.exact_near_dup_pairs_blocked(
-            corpus, threshold=0.95, block_size=1, cap_blocks=False
-        ).collect()
-    }
-    assert uncapped == capped and len(capped) >= 60
 
 
 def test_ivf_full_probe_equals_brute_force(spark, emb):
@@ -715,39 +659,3 @@ def test_nprobe_recall_monotone_in_probes(spark):
     assert by_q
     for q, rec in by_q.items():
         assert rec[1] <= rec[2] <= rec[4], (q, rec)
-
-
-from hypothesis import given, settings
-from hypothesis import strategies as st
-
-_vec3 = st.lists(
-    st.sampled_from([0.0, 0.5, 1.0, -1.0, 2.0]), min_size=3, max_size=3
-)
-
-
-@pytest.mark.slow
-@given(st.lists(_vec3, min_size=2, max_size=18))
-@settings(max_examples=8, deadline=None)
-def test_contracted_equals_naive_exact_property(spark, vecs):
-    """Property pin for the r11 contraction: on ARBITRARY small corpora —
-    including natural exact-duplicate groups of any multiplicity (the tiny
-    component alphabet makes collisions likely) and zero-norm vectors
-    (dropped on both paths) — the contracted pair set equals the naive
-    cross-join exact pair set, pair for pair, with sims agreeing after
-    rounding."""
-    corpus = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
-    )
-    naive = {
-        (r["id_a"], r["id_b"]): r["sim"]
-        for r in similarity.exact_near_dup_pairs(corpus, threshold=0.8).collect()
-    }
-    contracted = {
-        (r["id_a"], r["id_b"]): r["sim"]
-        for r in similarity.exact_near_dup_pairs_contracted(
-            corpus, threshold=0.8, block_size=4
-        ).collect()
-    }
-    assert set(contracted) == set(naive)
-    for pair, sim in contracted.items():
-        assert abs(sim - naive[pair]) < 1e-8, (pair, sim, naive[pair])
