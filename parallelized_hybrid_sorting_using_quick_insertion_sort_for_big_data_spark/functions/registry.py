@@ -10,9 +10,11 @@ exported to SQL in two tiers:
    SQL-body functions): pure Catalyst expressions — inlined into the plan at
    analysis time, fully codegen'd, indistinguishable from writing the
    expression inline. Zero Python anywhere. This tier is the default.
-2. **Python UDFs** only where imperative logic is genuinely required: the
-   reference-faithful hybrid sort kernel over array columns (Arrow-batched;
-   demo/parity tier, not the production sort path — that is ``orderBy``).
+2. **Python UDFs** only where imperative logic is genuinely required:
+   ``phsqis_hybrid_sort``, a Python wrapper over the reference-faithful C
+   hybrid sort kernel for array columns (non-null elements sorted, nulls
+   last, as ``array_sort``; demo/parity tier, not the production sort path —
+   that is ``orderBy``).
 3. **Python UDTF** (table function, Spark 4): ``phsqis_chunks`` — the
    1→N document chunker as a ``LATERAL``-joinable table function. Same
    semantics as :func:`..operators.text.chunk_sliding` (pytest-asserted
@@ -32,7 +34,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.hybrid import DEFAULT_THRESHOLD, hybrid_quickinsertion_sort
+from ..operators.hybrid import DEFAULT_THRESHOLD, build_kernel, hybrid_quickinsertion_sort
 from ..operators.text import TOKEN_RE
 
 #: name → (signature, return type, SQL body). Tier-1: analysis-time inlined
@@ -84,13 +86,17 @@ def register_all(spark: SparkSession) -> None:
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} RETURNS {ret} RETURN {body}"
         )
 
+    build_kernel()
+
     @F.udf(returnType=T.ArrayType(T.LongType()))
     def phsqis_hybrid_sort(arr, threshold):
         if arr is None:
             return None
-        return hybrid_quickinsertion_sort(
-            list(arr), threshold if threshold is not None else DEFAULT_THRESHOLD
+        values = [x for x in arr if x is not None]
+        hybrid_quickinsertion_sort(
+            values, threshold if threshold is not None else DEFAULT_THRESHOLD
         )
+        return values + [None] * (len(arr) - len(values))
 
     spark.udf.register("phsqis_hybrid_sort", phsqis_hybrid_sort)
 

@@ -14,15 +14,17 @@ algorithmic semantics —
   - min-heap k-way merge of sorted runs (QuickInsertionHeap.c:60-136), via
     ``heapq.merge`` — the same P-node min-heap algorithm
 
-— but written from scratch in idiomatic Python against public PySpark APIs
-(no code is translated from the reference; the C sources only define the
-semantics). ``hybrid_ranked`` runs the kernel in one Arrow-batched
+— written independently against public PySpark APIs (no code is translated
+from the reference; the C sources only define the semantics). The kernel
+itself is about 40 lines of C, the reference's own language, compiled on
+first use with the system ``cc`` and called through ``ctypes`` on an int64
+numpy array (``sort_int64``). ``hybrid_ranked`` runs it in one Arrow-batched
 ``mapInArrow`` stage per range partition and ranks its output with the same
 count-offset tail as ``sorting.ranked`` (``sorting.rank_arranged``), so the
-only Python in the plan is the kernel itself. The production path for total
-sort remains ``operators.sorting`` (native ``orderBy``): this module exists
-to prove semantic parity and to benchmark the reference topology against the
-Spark-native plan.
+only Python in the plan is the thin stage around the kernel. The production
+path for total sort remains ``operators.sorting`` (native ``orderBy``): this
+module exists to prove semantic parity and to benchmark the reference
+topology against the Spark-native plan.
 
 Deliberate divergences from the reference (SURVEY.md §7.4):
   - no INT_MAX sentinel padding (Spark partitions are variable-length),
@@ -30,77 +32,154 @@ Deliberate divergences from the reference (SURVEY.md §7.4):
     which concatenation in partition order IS the merge (the driver-side
     ``heapq.merge`` form is provided only as a tiny-scale demo/test helper),
   - the CUDA odd-tail merge data-loss bug and the uninitialized-heap-entry
-    edge (quickThreshold.c:98-100) are NOT replicated.
+    edge (quickThreshold.c:98-100) are NOT replicated,
+  - the pivot is the median of the first, middle and last keys and the
+    split is Hoare-style, both scans stopping on keys equal to the pivot,
+    in place of the reference's Lomuto partition around the last key
+    (QuickInsertionHeap.c:23-38). Lomuto is quadratic on sorted, reversed
+    and all-equal runs, and the range exchange sends every copy of a hot
+    key to one partition; the Hoare split halves an equal run, so every
+    such input stays O(n log n) (Bentley & McIlroy, "Engineering a Sort
+    Function", SP&E 1993).
 """
 
 from __future__ import annotations
 
+import atexit
+import ctypes
+import hashlib
 import heapq
+import os
+import shutil
+import subprocess
+import tempfile
+from pathlib import Path
 from typing import Iterable, Iterator, Sequence
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import sorting
 
-DEFAULT_THRESHOLD = 25  # mirrors QuickInsertionHeap.c:7
+# The reference's THRESHOLD (QuickInsertionHeap.c:7): sub-ranges shorter
+# than this go to insertion sort. In the SCALE.md threshold sweep (1M
+# random ints) 25 sorts about 15% faster than pure quicksort (threshold 1),
+# and 25 to 100 lie within 2% of each other.
+DEFAULT_THRESHOLD = 25
+
+# The kernel, in the reference's own language. It lives here as a string,
+# not a .c file, because ``session.ship_package`` ships only ``*.py`` to the
+# workers. Explicit stack, smaller side first: the stack never holds more
+# than log2(n) ranges.
+_KERNEL_SOURCE = r"""
+#include <stdint.h>
+#define SWAP(x, y) do { int64_t t_ = (x); (x) = (y); (y) = t_; } while (0)
+
+static void insertion_sort(int64_t *a, int64_t lo, int64_t hi) {
+    for (int64_t i = lo + 1; i <= hi; i++) {
+        int64_t key = a[i], j = i - 1;
+        while (j >= lo && a[j] > key) { a[j + 1] = a[j]; j--; }
+        a[j + 1] = key;
+    }
+}
+
+/* Hoare split around the median of a[lo], a[mid], a[hi]. Both scans stop
+   on keys equal to the pivot, so a run of equal keys splits in half.
+   Returns j with a[lo..j] <= pivot <= a[j+1..hi] and lo <= j < hi. */
+static int64_t split(int64_t *a, int64_t lo, int64_t hi) {
+    int64_t mid = lo + (hi - lo) / 2;
+    if (a[mid] < a[lo]) SWAP(a[mid], a[lo]);
+    if (a[hi] < a[lo]) SWAP(a[hi], a[lo]);
+    if (a[hi] < a[mid]) SWAP(a[hi], a[mid]);
+    int64_t pivot = a[mid], i = lo - 1, j = hi + 1;
+    for (;;) {
+        do i++; while (a[i] < pivot);
+        do j--; while (a[j] > pivot);
+        if (i >= j) return j;
+        SWAP(a[i], a[j]);
+    }
+}
+
+void phsqis_sort(int64_t *a, int64_t n, int64_t threshold) {
+    int64_t stack[128], top = 0, lo = 0, hi = n - 1;
+    for (;;) {
+        while (hi > lo && hi - lo + 1 >= threshold) {
+            int64_t p = split(a, lo, hi);
+            if (p - lo < hi - p) { stack[top++] = p + 1; stack[top++] = hi; hi = p; }
+            else { stack[top++] = lo; stack[top++] = p; lo = p + 1; }
+        }
+        if (hi > lo) insertion_sort(a, lo, hi);
+        if (top == 0) return;
+        hi = stack[--top];
+        lo = stack[--top];
+    }
+}
+"""
+
+_lib: ctypes.CDLL | None = None
 
 
-def insertion_sort(arr: list, lo: int, hi: int) -> None:
-    """In-place ascending insertion sort of arr[lo..hi] inclusive —
-    semantics of QuickInsertionHeap.c:10-20."""
-    for i in range(lo + 1, hi + 1):
-        key = arr[i]
-        j = i - 1
-        while j >= lo and arr[j] > key:
-            arr[j + 1] = arr[j]
-            j -= 1
-        arr[j + 1] = key
+def build_kernel() -> Path:
+    """Compile the kernel into the temp dir, once per source version, and
+    return the shared object's path.
+
+    The file is named by the source's hash, so a process that finds it
+    there just uses it; otherwise the process builds it into a per-pid name
+    and ``os.replace``-s it into place (concurrent builds cannot tear it)
+    and removes it at exit. The driver calls this before a plan that runs
+    the kernel, so local-mode workers only ``dlopen`` the file."""
+    digest = hashlib.sha256(_KERNEL_SOURCE.encode()).hexdigest()[:16]
+    path = Path(tempfile.gettempdir()) / f"phsqis_kernel_{digest}.so"
+    if path.exists():
+        return path
+    cc = shutil.which("cc")
+    if cc is None:
+        raise RuntimeError(
+            "the hybrid quick+insertion kernel is C and needs a C compiler: no `cc` on PATH"
+        )
+    tmp = path.with_name(f"{path.name}.{os.getpid()}.tmp")
+    build = subprocess.run(
+        [cc, "-O2", "-shared", "-fPIC", "-x", "c", "-", "-o", str(tmp)],
+        input=_KERNEL_SOURCE,
+        capture_output=True,
+        text=True,
+    )
+    if build.returncode != 0:
+        tmp.unlink(missing_ok=True)
+        raise RuntimeError(f"building the hybrid kernel with {cc} failed:\n{build.stderr}")
+    os.replace(tmp, path)
+    atexit.register(path.unlink, missing_ok=True)
+    return path
 
 
-def _partition(arr: list, lo: int, hi: int) -> int:
-    """Lomuto partition, last-element pivot — semantics of
-    QuickInsertionHeap.c:23-38."""
-    pivot = arr[hi]
-    i = lo - 1
-    for j in range(lo, hi):
-        if arr[j] < pivot:
-            i += 1
-            arr[i], arr[j] = arr[j], arr[i]
-    arr[i + 1], arr[hi] = arr[hi], arr[i + 1]
-    return i + 1
+def _kernel() -> ctypes.CDLL:
+    global _lib
+    if _lib is None:
+        lib = ctypes.CDLL(str(build_kernel()))
+        lib.phsqis_sort.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64]
+        lib.phsqis_sort.restype = None
+        _lib = lib
+    return _lib
 
 
-def hybrid_quickinsertion_sort(
-    arr: list, threshold: int = DEFAULT_THRESHOLD
-) -> list:
-    """In-place hybrid sort: quicksort that hands sub-ranges smaller than
-    ``threshold`` to insertion sort. Iterative with an explicit stack (the
-    device-safe form, QuickInsertionHeap.cu:40-72) so adversarial inputs
-    can't blow Python's recursion limit. Returns ``arr`` for chaining."""
+def sort_int64(values: np.ndarray, threshold: int = DEFAULT_THRESHOLD) -> np.ndarray:
+    """Sort a contiguous, writable ``np.int64`` array in place with the C
+    hybrid kernel: quicksort that hands sub-ranges shorter than
+    ``threshold`` to insertion sort. Returns ``values``."""
     if threshold < 1:
         raise ValueError("threshold must be >= 1")
-    n = len(arr)
-    if n < 2:
-        return arr
-    stack: list[tuple[int, int]] = [(0, n - 1)]
-    while stack:
-        lo, hi = stack.pop()
-        if lo >= hi:
-            continue
-        if hi - lo + 1 < threshold:
-            insertion_sort(arr, lo, hi)
-            continue
-        p = _partition(arr, lo, hi)
-        # push larger side first → stack depth O(log n)
-        left, right = (lo, p - 1), (p + 1, hi)
-        if (p - lo) > (hi - p):
-            stack.append(left)
-            stack.append(right)
-        else:
-            stack.append(right)
-            stack.append(left)
+    if values.dtype != np.int64 or not (values.flags.c_contiguous and values.flags.writeable):
+        raise ValueError("sort_int64 needs a contiguous, writable int64 array")
+    _kernel().phsqis_sort(values.ctypes.data, len(values), threshold)
+    return values
+
+
+def hybrid_quickinsertion_sort(arr: list, threshold: int = DEFAULT_THRESHOLD) -> list:
+    """Sort a list of ints in place with the C kernel (``sort_int64``) and
+    return it, for callers that hold Python lists."""
+    arr[:] = sort_int64(np.array(arr, dtype=np.int64), threshold).tolist()
     return arr
 
 
@@ -132,18 +211,21 @@ def hybrid_ranked(
       (per-partition count + broadcast offsets over the persisted output —
       the distributed replacement for gather + rank-0 k-way merge).
 
-    The Arrow stage gathers the partition's values with ``to_pylist()``,
-    sorts the non-null ones with ``hybrid_quickinsertion_sort`` and emits
-    the partition's nulls after them (nulls last, as ``sorting.ranked``
-    orders them; the range exchange also puts nulls last). Output batches
-    keep the sizes of the input batches Spark handed the stage.
+    The Arrow stage copies the partition's non-null values into one int64
+    numpy array, sorts it in place with the C kernel (``sort_int64``) and
+    emits the partition's nulls after them (nulls last, as
+    ``sorting.ranked`` orders them; the range exchange also puts nulls
+    last). Output batches keep the sizes of the input batches Spark handed
+    the stage. The driver builds the kernel before the plan runs.
 
     Output schema: ``(rnk BIGINT, value BIGINT)``, globally ascending by
     value. Ties carry identical rows, so the result is deterministic as a
     multiset even though the kernel (like the reference's quicksort) is not
-    stable. Scale note: the Python kernel caps throughput — this is the
-    fidelity demo; production sorts use ``sorting.total_sort``.
+    stable. The range exchange sends every copy of a key to one partition;
+    the kernel's equal-key split keeps such a hot partition O(n log n).
+    This is the fidelity demo; production sorts use ``sorting.total_sort``.
     """
+    build_kernel()
     n = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     arranged = df.select(F.col(value_col).cast("long").alias("value")).repartitionByRange(
         max(1, n), F.col("value").asc_nulls_last()
@@ -152,8 +234,14 @@ def hybrid_ranked(
     def sort_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         batches = list(batches)
         column = pa.chunked_array([b.column(0) for b in batches], type=pa.int64())
-        vals = hybrid_quickinsertion_sort(column.drop_null().to_pylist(), threshold)
-        out = pa.array(vals + [None] * column.null_count, type=pa.int64())
+        # one writable int64 copy of the non-null values (a single chunk's
+        # to_numpy() is a read-only view of the Arrow buffer)
+        values = np.concatenate(
+            [np.empty(0, np.int64), *(c.to_numpy() for c in column.drop_null().chunks)]
+        )
+        out = pa.concat_arrays(
+            [pa.array(sort_int64(values, threshold)), pa.nulls(column.null_count, pa.int64())]
+        )
         start = 0
         for b in batches:
             yield pa.RecordBatch.from_arrays([out.slice(start, b.num_rows)], names=["value"])
@@ -175,6 +263,7 @@ def scatter_sort_merge_collect(
     gather-to-driver, driver-side min-heap merge. Deliberately an
     anti-pattern at scale (the rank-0 bottleneck §4.2) — tests use it to
     prove the distributed path computes the same result."""
+    build_kernel()
     arranged = df.select(F.col(value_col).cast("long").alias("value")).repartition(
         num_partitions
     )

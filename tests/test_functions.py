@@ -62,6 +62,16 @@ def test_hybrid_sort_udf(spark):
         assert got == sorted(arr)
 
 
+def test_hybrid_sort_udf_puts_nulls_last(spark):
+    """Nulls inside the array sort after the values, as ``array_sort`` puts
+    them."""
+    row = spark.sql(
+        "SELECT phsqis_hybrid_sort(array(3, NULL, 1, NULL, 2), 25) AS h,"
+        " array_sort(array(3, NULL, 1, NULL, 2)) AS a"
+    ).collect()[0]
+    assert row["h"] == row["a"] == [1, 2, 3, None, None]
+
+
 def test_array_topk(spark):
     got = spark.sql(
         "SELECT phsqis_array_topk(array(5L, 1L, 9L, 7L, 3L), 3) AS t"

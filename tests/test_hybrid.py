@@ -5,6 +5,12 @@ native orderBy, adversarial shapes)."""
 from __future__ import annotations
 
 import random
+import subprocess
+import sys
+import tempfile
+import threading
+import time
+from pathlib import Path
 
 import pytest
 from hypothesis import given, settings
@@ -35,13 +41,56 @@ def test_threshold_invariance(threshold):
     assert hybrid.hybrid_quickinsertion_sort(list(xs), threshold) == sorted(xs)
 
 
-@pytest.mark.slow
-def test_kernel_adversarial_shapes():
-    """Lomuto last-pivot worst cases: pre-sorted, reversed, all-equal —
-    the explicit stack must not blow up (cf. QuickInsertionHeap.cu:40-72)."""
-    n = 20_000
-    for xs in ([*range(n)], [*range(n, 0, -1)], [7] * n, []):
-        assert hybrid.hybrid_quickinsertion_sort(list(xs)) == sorted(xs)
+# The kernel-shape cases run in a child process with a hard timeout, so a
+# quadratic regression fails the test instead of hanging the suite (1M
+# sorted or equal keys take hours at O(n^2)); one threshold takes ~4 s.
+KERNEL_TIMEOUT_S = 120
+
+
+def check_kernel_shapes(threshold: int, n: int = 1_000_000) -> None:
+    """The quicksort worst cases at n keys, each compared with ``sorted()``:
+    sorted, reversed and all-equal (quadratic under the reference's Lomuto
+    last-key pivot), organ pipe (the classic median-of-three trap), a
+    four-key hot mix, and random keys."""
+    rng = random.Random(threshold)
+    half = n // 2
+    shapes = {
+        "random": [rng.randrange(-(2**62), 2**62) for _ in range(n)],
+        "sorted": list(range(n)),
+        "reversed": list(range(n, 0, -1)),
+        "organ_pipe": [*range(half), *range(n - half, 0, -1)],
+        "four_distinct": [rng.randrange(4) for _ in range(n)],
+        "all_equal": [7] * n,
+    }
+    for name, xs in shapes.items():
+        assert hybrid.hybrid_quickinsertion_sort(list(xs), threshold) == sorted(xs), name
+
+
+@pytest.mark.parametrize("threshold", [1, 25, 100])
+def test_kernel_adversarial_shapes(threshold):
+    code = f"from tests.test_hybrid import check_kernel_shapes; check_kernel_shapes({threshold})"
+    root = Path(__file__).resolve().parent.parent
+    run = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
+        timeout=KERNEL_TIMEOUT_S,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+
+
+def test_threshold_below_one_is_rejected():
+    with pytest.raises(ValueError):
+        hybrid.hybrid_quickinsertion_sort([2, 1], 0)
+
+
+def test_missing_compiler_is_a_clear_error(tmp_path, monkeypatch):
+    """With no kernel built yet and no ``cc`` on PATH, the kernel raises a
+    RuntimeError that names the missing compiler, not a ctypes OSError."""
+    monkeypatch.setenv("PATH", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(hybrid, "_lib", None)
+    with pytest.raises(RuntimeError, match="no `cc` on PATH"):
+        hybrid.hybrid_quickinsertion_sort([3, 1, 2])
+    assert not list(tmp_path.glob("phsqis_kernel_*"))
 
 
 def test_kway_merge():
@@ -77,6 +126,44 @@ def test_hybrid_ranked_matches_native(spark, case):
     want = [(r["rnk"], r["value"]) for r in native.orderBy("rnk").collect()]
     assert got == want
     assert [rnk for rnk, _ in got] == list(range(1, df.count() + 1))
+
+
+# 1M rows through hybrid_ranked on 4 partitions: every copy of a hot key
+# lands in one partition, and a sorted input hands each partition a sorted
+# run. Both take a few seconds; a quadratic kernel never finishes, so the
+# jobs are cancelled at the bound and the test fails.
+HOT_BOUND_S = 60
+HOT_INPUTS = {
+    "all_equal_1m": lambda spark: spark.range(1_000_000).select(
+        F.lit(5).cast("long").alias("value")
+    ),
+    "sorted_1m": lambda spark: spark.range(1_000_000).select(F.col("id").alias("value")),
+}
+
+
+@pytest.mark.parametrize("case", HOT_INPUTS)
+def test_hybrid_ranked_hot_key_within_bound(spark, case):
+    df = HOT_INPUTS[case](spark)
+    sc = spark.sparkContext
+    tag = f"hybrid-hot-{case}"
+    sc.addJobTag(tag)
+    timer = threading.Timer(HOT_BOUND_S, sc.cancelJobsWithTag, [tag])
+    timer.start()
+    t0 = time.perf_counter()
+    try:
+        demo = hybrid.hybrid_ranked(df, "value", num_partitions=4)
+        demo.write.format("noop").mode("overwrite").save()
+    except Exception:
+        if time.perf_counter() - t0 >= HOT_BOUND_S:
+            pytest.fail(f"hybrid_ranked on {case} did not finish within {HOT_BOUND_S} s")
+        raise
+    finally:
+        timer.cancel()
+        sc.removeJobTag(tag)
+    native = sorting.ranked(df, ["value"]).select("rnk", "value")
+    assert demo.count() == native.count() == 1_000_000
+    assert demo.exceptAll(native).count() == 0
+    assert native.exceptAll(demo).count() == 0
 
 
 def _plan_nodes(plan) -> list[str]:

@@ -30,8 +30,9 @@ def test_shipped_zip_contains_the_operators(spark, tmp_path):
 
 def test_shipped_zip_is_removed_at_exit(tmp_path):
     """A driver process leaves no ``phsqis_pkg_*.zip`` in its temp dir once
-    its interpreter exits, even without stopping the session, and a
-    streaming query run in it leaves no ``phsqis_*`` scratch dir behind."""
+    its interpreter exits, even without stopping the session; neither a
+    streaming query's ``phsqis_*`` temp dir nor the hybrid kernel's
+    ``phsqis_kernel_*.so`` built by ``hybrid_ranked`` is left behind."""
     import os
     import subprocess
     import sys
@@ -47,6 +48,10 @@ def test_shipped_zip_is_removed_at_exit(tmp_path):
         "spark = get_spark('zip-cleanup', cpus=1)\n"
         "print(len(glob.glob(os.path.join(tempfile.gettempdir(), 'phsqis_pkg_*.zip'))))\n"
         f"queries()['events_stream_late_drop'](spark, {SF_DIR!r}).collect()\n"
+        "from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark"
+        ".operators import hybrid\n"
+        "hybrid.hybrid_ranked(spark.range(5).selectExpr('id AS value'), num_partitions=2).collect()\n"
+        "print(len(glob.glob(os.path.join(tempfile.gettempdir(), 'phsqis_kernel_*.so'))))\n"
     )
     env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g")
     root = S.Path(S.__file__).resolve().parent.parent
@@ -54,7 +59,8 @@ def test_shipped_zip_is_removed_at_exit(tmp_path):
         [sys.executable, "-c", code], cwd=root, env=env, capture_output=True, text=True, timeout=300
     )
     assert run.returncode == 0, run.stderr[-2000:]
-    assert run.stdout.split()[-1] == "1"  # the zip existed while the driver ran
+    # the zip, then the kernel, existed while the driver ran
+    assert run.stdout.split()[-2:] == ["1", "1"]
     assert not list(tmp_path.glob("phsqis_*"))
 
 
