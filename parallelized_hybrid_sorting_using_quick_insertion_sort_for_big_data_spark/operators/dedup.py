@@ -11,21 +11,22 @@ Scale design (the whole point of these at 100 TB):
 - MinHash/LSH reduces each doc to a k-int signature, bands it, and
   equi-joins on (band, band-hash) — candidate count is controlled by the
   banding parameters, independent of corpus size;
-- SimHash reduces each doc to one 64-bit int; near-dup = small Hamming
-  distance, bucketed by bit-chunks for join-based candidate generation;
+- SimHash reduces each doc to one 64-bit signature; near-dup = small
+  Hamming distance, bucketed by the max_hamming + 1 pigeonhole pieces for
+  join-based candidate generation;
 - substring dedup (``duplicate_spans``, ``span_dedup_rewrite``) shares one
   L-token window relation keyed by ``xxhash64`` of the token slice
   (``_span_windows``): 8 bytes per window occurrence in the shuffle,
   replayed by string-keyed DuckDB oracles.
 
-MinHash has one hash family: an md5-prefix base hash and per-slot
-permutations drawn from the seed with stdlib hashlib, so its DuckDB oracle
-SQL is GENERATED from the same constants (``minhash_lsh_oracle_sql``,
-``minhash_sketch_oracle_sql``) and the near-dup decision is auditable
-bit-for-bit by any SQL engine over the same lake. SimHash keeps two: the
-``xxhash64`` path (rows-only in the oracle harness, property-tested in
-tests/test_text_dedup.py) and ``simhash_pairs_portable``, whose oracle is
-``simhash_pairs_oracle_sql``.
+MinHash and SimHash each have one hash family built on the md5 prefix of
+a shingle or token. MinHash draws its per-slot permutations from the seed
+with stdlib hashlib; SimHash votes bit by bit over the two 32-bit halves of
+the token hash. Their DuckDB oracle SQL is GENERATED from the same
+constants and bit layout (``minhash_lsh_oracle_sql``,
+``minhash_sketch_oracle_sql``, ``simhash_pairs_oracle_sql``), so the
+near-dup decision is auditable bit-for-bit by any SQL engine over the same
+lake.
 
 The candidate-pair operators ``persist()`` their signature/band relations
 for the duration of the returned DataFrame's consumption (both join sides
@@ -582,41 +583,13 @@ FROM lists
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash over word tokens: per-bit majority vote of token
-    hashes, entirely with built-in expressions (explode → 64 conditional
-    sums → bit reassembly). Returns (id, simhash BIGINT)."""
-    def mask(b: int) -> int:
-        # bit 63 of a signed long is the sign bit: 1<<63 overflows, use its
-        # two's-complement value
-        return (1 << b) if b < 63 else -(1 << 63)
-
-    from ..sources.tables import spread_scan
-
-    tok = spread_scan(df).select(
-        F.col(id_col), F.explode(T.tokens(F.col(text_col))).alias("tok")
-    ).withColumn("__h", F.xxhash64("tok"))
-    votes = tok.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.col("__h").bitwiseAND(F.lit(mask(b))) != 0, 1).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(64)
-        ]
-    )
-    bits = None
-    for b in range(64):
-        bit = F.when(F.col(f"v{b}") > 0, F.lit(mask(b))).otherwise(F.lit(0))
-        bits = bit if bits is None else bits.bitwiseOR(bit)
-    return votes.select(F.col(id_col), bits.cast("long").alias("simhash"))
-
-
-def simhash_portable(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash carried as TWO 32-bit halves (sim_hi, sim_lo), built
-    from the md5-prefix token hash — every bit reproducible in DuckDB (no
-    xxhash64, no signed-64 assembly; both halves stay non-negative).
-    Same per-bit majority-vote construction as :func:`simhash`."""
+    """64-bit SimHash over word tokens, carried as TWO 32-bit halves
+    (sim_hi, sim_lo) of the md5-prefix token hash, so every bit is
+    reproducible in DuckDB (no signed-64 assembly; both halves stay
+    non-negative). Bit b is the per-bit majority vote of the doc's token
+    hashes: set iff more than half of its n tokens have it, ``2*ones > n``
+    (the ±1 vote ``sum(±1) > 0`` counted as one ``count`` plus 64 bit-sums).
+    """
     from ..sources.tables import spread_scan
 
     md5 = F.md5(F.col("tok"))
@@ -628,19 +601,20 @@ def simhash_portable(
         F.conv(F.substring(md5, 9, 8), 16, 10).cast("long").alias("__lo"),
     )
     votes = tok.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("__n"),
         *[
-            F.sum(
-                F.when(F.shiftright(F.col(part), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v{name}{b}")
+            F.sum(F.shiftright(F.col(part), b).bitwiseAND(F.lit(1))).alias(f"v{name}{b}")
             for part, name in (("__lo", "l"), ("__hi", "h"))
             for b in range(32)
-        ]
+        ],
     )
 
     def assemble(name: str):
         acc = F.lit(0).cast("long")
         for b in range(32):
-            acc = acc + F.when(F.col(f"v{name}{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
+            acc = acc + F.when(
+                2 * F.col(f"v{name}{b}") > F.col("__n"), F.lit(1 << b)
+            ).otherwise(F.lit(0))
         return acc
 
     return votes.select(
@@ -648,55 +622,100 @@ def simhash_portable(
     )
 
 
-def simhash_pairs_portable(
+def _simhash_piece_bounds(chunks: int) -> list[tuple[int, int]]:
+    """Split 64 bits into ``chunks`` contiguous pieces as evenly as possible
+    (the first ``64 % chunks`` pieces get the extra bit). Returns
+    (shift, width) per piece."""
+    base, extra = divmod(64, chunks)
+    bounds, shift = [], 0
+    for ci in range(chunks):
+        width = base + (1 if ci < extra else 0)
+        bounds.append((shift, width))
+        shift += width
+    return bounds
+
+
+def _simhash_piece_keys(max_hamming: int) -> list[tuple[int, list[tuple[str, int, int, int]]]]:
+    """The complete pigeonhole split of the two-half signature (Manku et
+    al., WWW'07 "Detecting near-duplicates for web crawling"): max_hamming
+    differing bits corrupt at most max_hamming of ``max_hamming + 1``
+    pieces, so every pair within the bound agrees on at least one.
+
+    Bit b < 32 is sim_lo bit b; bit b >= 32 is sim_hi bit b - 32. Each
+    piece is (tag, terms), and its join key is ``tag`` OR-ed with every
+    ``((half >> shift) & mask) << lshift`` term; only the piece that
+    crosses bit 32 has two terms. ``tag`` = piece index << 32 keeps the
+    pieces' keys apart inside ONE long: no piece is wider than 32 bits
+    unless it is the only one. A single long key lets Spark build its
+    long-keyed hash relation: on 50k docs (4 vCPUs, local[4]) the pair
+    stage took about half the time of a (piece index, value) key. The
+    Spark join and the DuckDB oracle are both generated from this list."""
+    if not 0 <= max_hamming <= 63:
+        raise ValueError(
+            f"max_hamming={max_hamming} outside [0, 63]: a 64-bit signature has "
+            "no complete split into max_hamming + 1 pieces"
+        )
+    keys = []
+    for ci, (lo_bit, width) in enumerate(_simhash_piece_bounds(max_hamming + 1)):
+        end = lo_bit + width
+        terms = []
+        if lo_bit < 32:
+            terms.append(("sim_lo", lo_bit, (1 << (min(end, 32) - lo_bit)) - 1, 0))
+        if end > 32:
+            start = max(lo_bit, 32)
+            terms.append(("sim_hi", start - 32, (1 << (end - start)) - 1, start - lo_bit))
+        keys.append((ci << 32, terms))
+    return keys
+
+
+def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 8,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming, fully
-    engine-portable: nibble pieces (16 chunks of 4 bits — no half-straddle,
-    complete for max_hamming ≤ 15 by pigeonhole) over the two-half
-    signature; hamming = bit_count(hi⊕hi) + bit_count(lo⊕lo). The DuckDB
-    twin is :func:`simhash_pairs_oracle_sql`."""
-    if max_hamming > 15:
-        raise ValueError("nibble pigeonhole is complete only for max_hamming <= 15")
-    sh = simhash_portable(df, text_col, id_col)
+    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming, every pair
+    found: candidates come from an equi-join on the keys of the
+    max_hamming + 1 pigeonhole pieces (:func:`_simhash_piece_keys`), then
+    hamming = bit_count(hi⊕hi) + bit_count(lo⊕lo) filters them. The DuckDB
+    twin is :func:`simhash_pairs_oracle_sql`.
 
-    def piece(ci: int):
-        part = F.col("sim_lo") if ci < 8 else F.col("sim_hi")
-        return F.shiftright(part, 4 * (ci % 8)).bitwiseAND(F.lit(15))
+    Scale note: candidate volume per piece bucket is ~n²/2^width, so loose
+    thresholds (max_hamming ≳ 12 of 64) force narrow pieces and drift
+    toward quadratic — keep max_hamming small at corpus scale."""
+    piece_keys = _simhash_piece_keys(max_hamming)
+    sh = simhash(df, text_col, id_col)
+
+    def key(tag, terms):
+        acc = F.lit(tag).cast("long")
+        for half, shift, mask, lshift in terms:
+            acc = acc.bitwiseOR(
+                F.shiftleft(F.shiftright(F.col(half), shift).bitwiseAND(F.lit(mask)), lshift)
+            )
+        return acc
 
     pieces = sh.select(
         F.col(id_col),
         "sim_hi",
         "sim_lo",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(ci).alias("chunk"), piece(ci).alias("piece"))
-                    for ci in range(16)
-                ]
-            )
-        ).alias("p"),
-    ).select(
-        F.col(id_col), "sim_hi", "sim_lo",
-        F.col("p.chunk").alias("chunk"), F.col("p.piece").alias("piece"),
+        F.explode(F.array(*[key(tag, terms) for tag, terms in piece_keys])).alias("key"),
     )
 
+    # both join sides read the pieces: persist so the token → signature
+    # pipeline executes once
     from pyspark.storagelevel import StorageLevel
 
     pieces = pieces.persist(StorageLevel.MEMORY_AND_DISK)
     lhs = pieces.select(
         F.col(id_col).alias("id_a"), F.col("sim_hi").alias("hi_a"),
-        F.col("sim_lo").alias("lo_a"), "chunk", "piece",
+        F.col("sim_lo").alias("lo_a"), "key",
     )
     rhs = pieces.select(
         F.col(id_col).alias("id_b"), F.col("sim_hi").alias("hi_b"),
-        F.col("sim_lo").alias("lo_b"), "chunk", "piece",
+        F.col("sim_lo").alias("lo_b"), "key",
     )
     cand = (
-        lhs.join(rhs, ["chunk", "piece"])
+        lhs.join(rhs, "key")
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", "hi_a", "lo_a", "hi_b", "lo_b")
         .distinct()
@@ -718,23 +737,32 @@ def simhash_pairs_oracle_sql(
     max_hamming: int = 8,
     token_re: str = "[a-z0-9]+",
 ) -> str:
-    """DuckDB SQL reproducing ``simhash_pairs_portable`` exactly — generated
-    alongside the Spark form so the bit layout cannot drift."""
+    """DuckDB SQL reproducing :func:`simhash_pairs` exactly — votes and
+    pieces generated from the same bit layout, so the two cannot drift."""
     votes = ",\n         ".join(
-        f"sum(CASE WHEN ({part} >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{n}{b}"
+        f"sum(({part} >> {b}) & 1) AS v{n}{b}"
         for part, n in (("lo", "l"), ("hi", "h"))
         for b in range(32)
     )
 
     def assemble(n: str) -> str:
         return " + ".join(
-            f"CASE WHEN v{n}{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(32)
+            f"CASE WHEN 2 * v{n}{b} > n THEN {1 << b} ELSE 0 END" for b in range(32)
         )
 
+    # UBIGINT and `*` for `<<`: the lone piece of max_hamming = 0 moves
+    # sim_hi into bit 63, which DuckDB's signed and unsigned `<<` both reject
     piece_selects = "\n  UNION ALL\n  ".join(
-        f"SELECT {id_col}, sim_hi, sim_lo, {ci} AS chunk, "
-        f"({'sim_lo' if ci < 8 else 'sim_hi'} >> {4 * (ci % 8)}) & 15 AS piece FROM sig"
-        for ci in range(16)
+        f"SELECT {id_col}, sim_hi, sim_lo, "
+        + " | ".join(
+            [f"CAST({tag} AS UBIGINT)"]
+            + [
+                f"(CAST(({half} >> {shift}) & {mask} AS UBIGINT) * {1 << lshift})"
+                for half, shift, mask, lshift in terms
+            ]
+        )
+        + " AS key FROM sig"
+        for tag, terms in _simhash_piece_keys(max_hamming)
     )
     return f"""
 WITH tok AS (
@@ -748,7 +776,7 @@ h AS (
          CAST('0x' || substr(md5(tok), 9, 8) AS BIGINT) AS lo
   FROM tok
 ),
-v AS (SELECT {id_col},
+v AS (SELECT {id_col}, count(*) AS n,
          {votes}
       FROM h GROUP BY {id_col}),
 sig AS (
@@ -764,126 +792,13 @@ cand AS (
   SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b,
          a.sim_hi AS hi_a, a.sim_lo AS lo_a, b.sim_hi AS hi_b, b.sim_lo AS lo_b
   FROM pieces a
-  JOIN pieces b ON a.chunk = b.chunk AND a.piece = b.piece AND a.{id_col} < b.{id_col}
+  JOIN pieces b ON a.key = b.key AND a.{id_col} < b.{id_col}
 )
 SELECT id_a, id_b,
        CAST(bit_count(xor(hi_a, hi_b)) + bit_count(xor(lo_a, lo_b)) AS BIGINT) AS hamming
 FROM cand
 WHERE bit_count(xor(hi_a, hi_b)) + bit_count(xor(lo_a, lo_b)) <= {max_hamming}
 """
-
-
-def _simhash_piece_bounds(chunks: int) -> list[tuple[int, int]]:
-    """Split 64 bits into ``chunks`` contiguous pieces as evenly as possible
-    (the first ``64 % chunks`` pieces get the extra bit). Returns
-    (shift, width) per piece."""
-    base, extra = divmod(64, chunks)
-    bounds, shift = [], 0
-    for ci in range(chunks):
-        width = base + (1 if ci < extra else 0)
-        bounds.append((shift, width))
-        shift += width
-    return bounds
-
-
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-    chunks: int | None = None,
-    agree_pieces: int = 1,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
-
-    Candidate generation is the block-split pigeonhole (Manku et al.,
-    WWW'07 "Detecting near-duplicates for web crawling"): split the 64-bit
-    hash into ``chunks`` contiguous pieces; a pair with ≤ ``max_hamming``
-    differing bits can corrupt at most ``max_hamming`` pieces, so it agrees
-    on ≥ ``chunks − max_hamming`` pieces. Joining on every
-    ``agree_pieces``-sized piece-combination therefore finds ALL qualifying
-    pairs iff ``chunks − max_hamming ≥ agree_pieces``; anything less is
-    approximate-recall and raises unless the caller split the bits that way
-    explicitly.
-
-    Defaults: ``chunks=None`` auto-selects ``max_hamming + agree_pieces``
-    (the minimal complete split). ``agree_pieces=1`` is a plain per-piece
-    equi-join; larger values concatenate ``agree_pieces`` piece values into
-    one wider key — C(chunks, agree_pieces)× row replication traded for
-    exponentially smaller candidate buckets (the scale lever for small
-    distance thresholds, e.g. d=3, chunks=6, agree=3 → 20 combos of
-    ~32-bit keys).
-
-    Scale note: candidate volume per piece-key bucket is ~n²/2^key_width,
-    so loose thresholds (max_hamming ≳ 12 of 64) force narrow pieces and
-    drift toward quadratic — keep max_hamming small at corpus scale or
-    raise agree_pieces.
-    """
-    from itertools import combinations
-
-    if chunks is None:
-        chunks = max_hamming + agree_pieces
-    if chunks - max_hamming < agree_pieces:
-        raise ValueError(
-            f"incomplete candidate generation: chunks={chunks}, "
-            f"max_hamming={max_hamming}, agree_pieces={agree_pieces} — "
-            "pigeonhole completeness needs chunks - max_hamming >= "
-            "agree_pieces (pairs spreading their differing bits across all "
-            "pieces would be silently dropped). Pass chunks=None to "
-            "auto-select, or lower max_hamming."
-        )
-    if chunks > 64:
-        raise ValueError(f"chunks={chunks} > 64 bits: max_hamming too loose for a 64-bit signature")
-
-    sh = simhash(df, text_col, id_col)
-    bounds = _simhash_piece_bounds(chunks)
-
-    def piece_expr(ci: int):
-        shift, width = bounds[ci]
-        return F.shiftrightunsigned(F.col("simhash"), shift).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
-
-    # one key per agree_pieces-sized combination: combo id + concatenated
-    # piece values (as a string key — widths vary per piece)
-    combos = list(combinations(range(chunks), agree_pieces))
-    keys = sh.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(gi).alias("combo"),
-                        F.concat_ws(
-                            ":", *[piece_expr(ci).cast("string") for ci in combo]
-                        ).alias("key"),
-                    )
-                    for gi, combo in enumerate(combos)
-                ]
-            )
-        ).alias("p"),
-    ).select(F.col(id_col), "simhash", F.col("p.combo").alias("combo"), F.col("p.key").alias("key"))
-
-    # both join sides read keys (docs × C(chunks, agree) rows): persist so
-    # the token → simhash pipeline executes once
-    from pyspark.storagelevel import StorageLevel
-
-    keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
-
-    lhs = keys.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("h_a"), "combo", "key")
-    rhs = keys.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("h_b"), "combo", "key")
-    cand = (
-        lhs.join(rhs, ["combo", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "h_a", "h_b")
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -262,12 +262,18 @@ def scatter_sort_merge_collect(
     (like MPI_Scatterv's arbitrary block split), per-partition hybrid sort,
     gather-to-driver, driver-side min-heap merge. Deliberately an
     anti-pattern at scale (the rank-0 bottleneck §4.2) — tests use it to
-    prove the distributed path computes the same result."""
+    prove the distributed path computes the same result. Nulls go last, as
+    in :func:`hybrid_ranked`."""
     build_kernel()
     arranged = df.select(F.col(value_col).cast("long").alias("value")).repartition(
         num_partitions
     )
-    runs = arranged.rdd.mapPartitions(
-        lambda rows: iter([hybrid_quickinsertion_sort([r[0] for r in rows], threshold)])
-    ).collect()
-    return list(k_way_merge(runs))
+
+    def sort_run(rows):
+        values = [r[0] for r in rows]
+        run = [v for v in values if v is not None]
+        yield hybrid_quickinsertion_sort(run, threshold), len(values) - len(run)
+
+    parts = arranged.rdd.mapPartitions(sort_run).collect()
+    nulls = sum(n for _, n in parts)
+    return [*k_way_merge([run for run, _ in parts]), *[None] * nulls]

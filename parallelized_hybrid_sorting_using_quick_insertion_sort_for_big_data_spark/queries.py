@@ -28,7 +28,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    sql: str | None  # DuckDB oracle; None → driver does a rows-only check
+    sql: str | None  # DuckDB oracle; every registered query has one
     doc: str = ""
 
 
@@ -95,22 +95,20 @@ _DRIVER_WINDOW = 50
 # oldest-driver-row-first, FILL = pinned names oldest-checked-first. The
 # committed tuple is verified by
 # tests/test_session.py::test_driver_window_survives_this_rounds_artifact
-# via the invariant registry ⊆ (window ∪ pins ∪ rows-only), which holds (or
+# via the invariant registry ⊆ (window ∪ pins), which holds (or
 # fails) identically no matter which CORRECTNESS artifacts are on disk.
 _DRIVER_PRIORITY: tuple[str, ...] = (
     # Output of
-    #   scripts/rotate_window.py --front <6 names>
-    # FRONT (6): the substring-dedup, decontamination and exact near-dup
-    # queries, whose operators now have one implementation each (hash-keyed
-    # span windows, raw-gram decontam join, blocked GEMM only). MUST = the
-    # full unpinned set (time-invariant cover), FILL = pinned names
+    #   scripts/rotate_window.py --front <4 names>
+    # FRONT (4): the two SimHash names, now one oracle-checked form on the
+    # complete 9-piece split; the dataset card, whose dup rate is NULL on
+    # an empty corpus; and the hybrid sort, whose kernel became C. MUST =
+    # the full unpinned set (time-invariant cover), FILL = pinned names
     # oldest-checked-first.
-    "dedup_duplicate_spans",
-    "dedup_duplicate_spans_fast",
-    "pipeline_span_dedup_rewrite",
-    "decontam_ngram_overlap",
-    "pipeline_pretraining_corpus",
-    "vec_ann_recall",
+    "dedup_simhash",
+    "dedup_simhash_portable",
+    "pipeline_dataset_card",
+    "sort_hybrid_quickinsertion",
     "events_outlier_robust",
     "events_resample_gapfill",
     "events_stream_dedup",
@@ -155,6 +153,8 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "rel_yoy_revenue",
     "search_hybrid_rrf",
     "text_bigram_fluency",
+    "text_fertility_by_lang",
+    "text_phrase_search",
 )
 
 

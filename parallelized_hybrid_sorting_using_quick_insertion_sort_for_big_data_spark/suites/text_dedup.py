@@ -269,23 +269,21 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.winnow_fingerprints(docs, k=_NGRAM_N, w=4, seed=42)
 
 
-@query("dedup_simhash", sql=None)
+_SIMHASH_ORACLE = dedup.simhash_pairs_oracle_sql(max_hamming=8)
+
+
+@query("dedup_simhash", sql=_SIMHASH_ORACLE)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash-64 near-dup pairs at Hamming ≤ 8 via the complete pigeonhole
-    candidate join (auto 9-piece split: any pair within distance 8 must
-    agree on ≥1 of 9 pieces — no qualifying pair can be missed)."""
+    """SimHash-64 near-dup pairs at Hamming ≤ 8 (md5-prefix token hash, two
+    32-bit signature halves) via the complete pigeonhole candidate join:
+    any pair within distance 8 agrees on ≥1 of 9 pieces, so no qualifying
+    pair can be missed. The whole approximate pipeline is value-hash-checked
+    against generated DuckDB SQL."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash_pairs(docs, max_hamming=8)
 
 
-@query("dedup_simhash_portable", sql=dedup.simhash_pairs_oracle_sql(max_hamming=8))
-def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with the engine-portable construction
-    (md5-prefix token hash, two 32-bit signature halves, 16 nibble pieces —
-    complete for Hamming ≤ 15): the whole approximate pipeline is
-    value-hash-checked against generated DuckDB SQL."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_pairs_portable(docs, max_hamming=8)
+query("dedup_simhash_portable", sql=_SIMHASH_ORACLE)(dedup_simhash)
 
 
 # ---------------------------------------------------------------------------
@@ -1608,7 +1606,7 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total_chars",
         "median_tokens",
         "dup_docs",
-        F.round(F.col("dup_docs").cast("double") / F.col("n_docs"), 9).alias(
+        F.round(F.try_divide(F.col("dup_docs").cast("double"), F.col("n_docs")), 9).alias(
             "dup_rate"
         ),
     )

@@ -78,7 +78,7 @@ def main() -> int:
     if unknown:
         print(f"MARKER unknown query names: {unknown}")
         return 2
-    fails, no_oracle = [], []
+    fails = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -89,8 +89,8 @@ def main() -> int:
             print(f"MARKER {name} SPARK-ERROR {ex}")
             continue
         if name not in oracles:
-            no_oracle.append((name, len(sdf)))
-            print(f"MARKER {name} rows-only rows={len(sdf)}")
+            fails.append((name, "NO-ORACLE"))
+            print(f"MARKER {name} NO-ORACLE rows={len(sdf)}")
             continue
         try:
             odf = con.execute(oracles[name]).fetch_df()
@@ -114,7 +114,7 @@ def main() -> int:
                 diff = s.compare(o) if s.shape == o.shape else None
                 detail = f"first-diff:\n{diff.head(5) if diff is not None else 'shape'}"
             fails.append((name, detail))
-    print(f"MARKER summary fails={len(fails)} no_oracle={len(no_oracle)}")
+    print(f"MARKER summary fails={len(fails)}")
     for name, d in fails:
         print(f"MARKER FAILED {name}: {d}")
     return 1 if fails else 0

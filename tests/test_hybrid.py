@@ -203,3 +203,7 @@ def test_scatter_sort_merge_collect_matches(spark):
     merged = hybrid.scatter_sort_merge_collect(ints, "value", num_partitions=4)
     expected = sorted(r["value"] for r in ints.collect())
     assert merged == expected
+    # nulls sort last, as in hybrid_ranked
+    with_nulls = spark.createDataFrame([(1,), (None,), (0,)], "value long")
+    merged = hybrid.scatter_sort_merge_collect(with_nulls, "value", num_partitions=2)
+    assert merged == [0, 1, None]

@@ -83,18 +83,13 @@ def test_driver_window_is_exactly_the_priority_prefix():
     assert list(Q.REGISTRY)[: Q._DRIVER_WINDOW] == list(Q._DRIVER_PRIORITY)
 
 
-def test_rows_only_set_is_exactly_the_documented_three():
-    """Every queries() entry must carry a DuckDB oracle except
-    dedup_simhash, the one xxhash64 fast path left (pinned by its
-    oracle-exact portable twin + property tests). The name dates from when
-    the MinHash and hyperplane-LSH fast paths were rows-only too; both now
-    run their oracle-checked implementation. A new query landing without
-    an oracle is a coverage regression, not a choice this guard lets
-    happen silently."""
+def test_every_query_has_an_oracle():
+    """Every queries() entry must carry a DuckDB oracle. A new query
+    landing without one is a coverage regression, not a choice this guard
+    lets happen silently."""
     import __spark_entry__ as E
 
-    rows_only = set(E.queries()) - set(E.oracle_sql())
-    assert rows_only == {"dedup_simhash"}, rows_only
+    assert set(E.queries()) - set(E.oracle_sql()) == set()
 
 
 def test_planted_row_shifts_clear_real_id_ranges():
@@ -187,13 +182,7 @@ def test_every_query_is_recently_checked_or_parity_pinned():
         for list_name in consumed & set(module_lists):
             pinned.update(module_lists[list_name])
 
-    # The one rows-only fast path cannot be oracle-parity pinned by
-    # construction; it is value-pinned through its oracle-exact portable
-    # twin + property tests (see
-    # test_rows_only_set_is_exactly_the_documented_three).
-    rows_only_by_design = {"dedup_simhash"}
-
-    uncovered = sorted(set(Q.REGISTRY) - recent - pinned - rows_only_by_design)
+    uncovered = sorted(set(Q.REGISTRY) - recent - pinned)
     assert not uncovered, (
         f"{len(uncovered)} queries have neither a driver row in the last 3 "
         f"rounds (nor a slot in the current window) nor an ORACLE_QUERIES "
@@ -207,8 +196,8 @@ def test_driver_window_survives_this_rounds_artifact():
     sessions twice, and the first mechanized check a third time — its
     "last TWO on-disk rounds" cover slid when the round's own CORRECTNESS
     artifact landed. The invariant is now TIME-INVARIANT: every registry
-    query must be covered by (the committed window ∪ parity pins ∪ the
-    rows-only set) — no on-disk-round term at all. The recency guard's
+    query must be covered by (the committed window ∪ parity pins) — no
+    on-disk-round term at all. The recency guard's
     "recent" set is always a superset of the window (the driver checks
     exactly the window each round), so if this cover holds at commit time
     it holds at judge time no matter how many artifacts land in between."""

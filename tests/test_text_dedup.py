@@ -38,6 +38,7 @@ ORACLE_QUERIES = [
     "dedup_components",
     "dedup_minhash_portable",
     "dedup_minhash_lsh",
+    "dedup_simhash",
     "dedup_simhash_portable",
     "pipeline_clean_corpus",
     "pipeline_dedup_keep_best",
@@ -192,6 +193,21 @@ def test_oracle_parity(spark, name):
     assert_matches_oracle(qs[name](spark, SF_DIR), oracles[name], SF_DIR)
 
 
+def test_dataset_card_on_empty_corpus(spark, tmp_path):
+    """On an empty corpus the dup rate is 0/0: NULL in both engines, not an
+    ANSI DIVIDE_BY_ZERO. Every sf0.001 table is written with zero rows, one
+    file each, so the oracle's DuckDB views resolve."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    for f in Path(SF_DIR).glob("*.parquet"):
+        pq.write_table(pq.read_table(f).slice(0, 0), tmp_path / f.name)
+    empty = str(tmp_path)
+    card = entrymod.queries()["pipeline_dataset_card"](spark, empty)
+    assert_matches_oracle(card, entrymod.oracle_sql()["pipeline_dataset_card"], empty)
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -251,58 +267,60 @@ def test_simhash_is_deterministic(spark, docs):
 
 
 def test_simhash_pairs_complete_vs_bruteforce(spark, docs):
-    """Pigeonhole candidate generation must find EVERY pair within the
-    Hamming bound — verified against a brute-force cross of the signatures,
-    for both the plain per-piece join and the multi-piece (Manku) keys."""
+    """The pigeonhole candidate join must find EVERY pair within the
+    Hamming bound — verified against a brute-force cross of the two-half
+    signatures. At d = 4 and 6 one of the d + 1 pieces crosses bit 32, so
+    the piece assembled from both halves is exercised too."""
     import itertools
 
-    sigs = dedup.simhash(docs.limit(120)).collect()
     sub = docs.limit(120)
-
-    def brute(d):
-        out = set()
-        for a, b in itertools.combinations(sigs, 2):
-            ham = bin((a["simhash"] ^ b["simhash"]) & (2**64 - 1)).count("1")
-            if ham <= d:
-                key = (min(a["doc_id"], b["doc_id"]), max(a["doc_id"], b["doc_id"]))
-                out.add(key)
-        return out
-
-    for d, agree in ((6, 1), (4, 2)):
+    sigs = dedup.simhash(sub).collect()
+    hams = {
+        (min(a["doc_id"], b["doc_id"]), max(a["doc_id"], b["doc_id"])): bin(
+            a["sim_hi"] ^ b["sim_hi"]
+        ).count("1")
+        + bin(a["sim_lo"] ^ b["sim_lo"]).count("1")
+        for a, b in itertools.combinations(sigs, 2)
+    }
+    for d in (4, 6):
+        assert any(s < 32 < s + w for s, w in dedup._simhash_piece_bounds(d + 1)), d
         got = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.simhash_pairs(sub, max_hamming=d, agree_pieces=agree).collect()
+            (r["id_a"], r["id_b"]): r["hamming"]
+            for r in dedup.simhash_pairs(sub, max_hamming=d).collect()
         }
-        assert got == brute(d), f"d={d} agree={agree}"
-
-
-def test_simhash_pairs_rejects_incomplete_split(spark, docs):
-    with pytest.raises(ValueError):
-        dedup.simhash_pairs(docs, max_hamming=12, chunks=4)
-    with pytest.raises(ValueError):
-        dedup.simhash_pairs(docs, max_hamming=8, chunks=10, agree_pieces=3)
+        assert got == {p: h for p, h in hams.items() if h <= d}, f"d={d}"
 
 
 def test_portable_simhash_pairs_complete_vs_bruteforce(spark, docs):
-    """The nibble-piece candidate join must find every pair within the
-    Hamming bound of the two-half portable signature."""
+    """At max_hamming = 8, the bound of the ``dedup_simhash`` and
+    ``dedup_simhash_portable`` registry queries, the candidate join must
+    find every pair within the Hamming bound of the two-half signature
+    (formerly the portable SimHash, now the only one)."""
     import itertools
 
     sub = docs.limit(120)
-    sigs = dedup.simhash_portable(sub).collect()
+    sigs = dedup.simhash(sub).collect()
     d = 8
-    brute = set()
+    assert any(s < 32 < s + w for s, w in dedup._simhash_piece_bounds(d + 1))
+    brute = {}
     for a, b in itertools.combinations(sigs, 2):
         ham = bin(a["sim_hi"] ^ b["sim_hi"]).count("1") + bin(
             a["sim_lo"] ^ b["sim_lo"]
         ).count("1")
         if ham <= d:
-            brute.add((min(a["doc_id"], b["doc_id"]), max(a["doc_id"], b["doc_id"])))
+            brute[(min(a["doc_id"], b["doc_id"]), max(a["doc_id"], b["doc_id"]))] = ham
     got = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.simhash_pairs_portable(sub, max_hamming=d).collect()
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in dedup.simhash_pairs(sub, max_hamming=d).collect()
     }
+    assert brute, "expected near-dup pairs within d = 8 in testdata"
     assert got == brute
+
+
+def test_simhash_pairs_rejects_out_of_range_hamming(spark, docs):
+    for d in (-1, 64):
+        with pytest.raises(ValueError):
+            dedup.simhash_pairs(docs, max_hamming=d)
 
 
 def test_minhash_slots_are_independent_permutations(spark):
