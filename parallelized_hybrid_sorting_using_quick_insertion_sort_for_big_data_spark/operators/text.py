@@ -45,10 +45,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text)).cast("bigint")
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text).cast("bigint")
-
-
 def _marker_hits(toks: Column, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(*markers))).cast("bigint")
 

@@ -99,22 +99,25 @@ _DRIVER_WINDOW = 50
 # fails) identically no matter which CORRECTNESS artifacts are on disk.
 _DRIVER_PRIORITY: tuple[str, ...] = (
     # Output of
-    #   scripts/rotate_window.py --front <4 names>
-    # FRONT (4): the two SimHash names, now one oracle-checked form on the
-    # complete 9-piece split; the dataset card, whose dup rate is NULL on
-    # an empty corpus; and the hybrid sort, whose kernel became C. MUST =
+    #   scripts/rotate_window.py --front <12 names>
+    # FRONT (12): every events_stream_* name, now replayed and drained
+    # through the one streaming source and sink (streaming/sink.py). MUST =
     # the full unpinned set (time-invariant cover), FILL = pinned names
     # oldest-checked-first.
-    "dedup_simhash",
-    "dedup_simhash_portable",
-    "pipeline_dataset_card",
-    "sort_hybrid_quickinsertion",
+    "events_stream_tumbling",
+    "events_stream_sessionize",
+    "events_stream_user_profile",
+    "events_stream_cms",
+    "events_stream_late_drop",
+    "events_stream_dedup",
+    "events_stream_enrich",
+    "events_stream_stream_join",
+    "events_stream_scd2_enrich",
+    "events_stream_attribution",
+    "events_stream_hll_daily",
+    "events_stream_windowed_topk",
     "events_outlier_robust",
     "events_resample_gapfill",
-    "events_stream_dedup",
-    "events_stream_sessionize",
-    "events_stream_stream_join",
-    "events_stream_tumbling",
     "events_zorder_code",
     "graph_adamic_adar",
     "graph_assortativity",
@@ -151,10 +154,6 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "rel_window_value_functions",
     "rel_winsorized_stats",
     "rel_yoy_revenue",
-    "search_hybrid_rrf",
-    "text_bigram_fluency",
-    "text_fertility_by_lang",
-    "text_phrase_search",
 )
 
 

@@ -134,10 +134,18 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+def read_raw_events(spark: SparkSession, path: str) -> DataFrame:
+    """Read an events parquet file as stored, INT64 TIMESTAMP(NANOS) as
+    LongType nanos (``nanosAsLong``; Spark rejects the type otherwise) —
+    an encoding :func:`normalize_event_ts` accepts. The setting stays on
+    the session, so a streaming replay of the same file reads the same
+    schema."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path)
+
+
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load the events table, normalizing ``ts`` to TIMESTAMP via
     :func:`normalize_event_ts` (the testdata's physical encoding has varied
     across driver rounds: INT64 nanos, then naive micros)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
-    return normalize_event_ts(df)
+    return normalize_event_ts(read_raw_events(spark, table_path(sf_dir, "events")))

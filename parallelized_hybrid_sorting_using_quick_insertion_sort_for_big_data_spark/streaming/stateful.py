@@ -16,19 +16,18 @@ production deployment sets a TTL timeout for key churn.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .sink import drain, replay
 
 # value doubles carry <= 2 decimals in the events table; scale to integer
 # hundredths so cross-batch accumulation is exact in int64
@@ -123,42 +122,17 @@ def run_user_profile_stream(
     n_chunks: int = 3,
 ) -> DataFrame:
     """Execute the stateful operator as a REAL multi-micro-batch streaming
-    job: stage the static source into ``n_chunks`` files, feed them one per
-    trigger (``maxFilesPerTrigger=1``) so state demonstrably carries across
-    batches, drain through ``foreachBatch`` → parquet (executor-side writes
-    — no driver-resident update history, unlike a ``memory`` sink), and
-    return the FINAL state per user as a distributed reduction over the
-    sink files. The staged source and checkpoint are removed once the
-    stream stops."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_state_{uuid.uuid4().hex[:8]}"
-    stage_dir = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(stage_dir, exist_ok=True)
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = spark.read.parquet(events_parquet)
-    # split deterministically into n_chunks files to force several triggers
-    src.withColumn("__c", F.pmod(F.col("event_id"), F.lit(n_chunks))).repartition(
-        n_chunks, "__c"
-    ).drop("__c").write.mode("overwrite").parquet(stage_dir)
-
-    from ..sources.tables import normalize_event_ts
-
-    events = normalize_event_ts(
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
-
-    out = user_profile_stream(events)
-    try:
-        with stream_shuffle_partitions(spark, _stateful_shuffle_partitions(src.count())):
-            out_dir = drain_stream_to_parquet(out, name, output_mode="update")
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-    updates = read_sink(spark, out_dir, OUTPUT_SCHEMA)
+    job: replay the static source as ``n_chunks`` chunks by ``event_id %
+    n_chunks``, one per trigger, so state demonstrably carries across
+    batches, drain the updates executor-side (no driver-resident update
+    history, unlike a ``memory`` sink), and return the FINAL state per user
+    as a distributed reduction over the sink files."""
+    n_rows = pq.read_metadata(events_parquet).num_rows
+    chunk = F.pmod(F.col("event_id"), F.lit(n_chunks))
+    with replay(spark, events_parquet, chunk=chunk) as events:
+        updates = drain(
+            user_profile_stream(events), "update", _stateful_shuffle_partitions(n_rows)
+        )[0]
     # final state per user = the update with the highest n_events (monotone)
     w_last = F.struct("n_events", "total_value_c", "last_seen_us")
     return (
@@ -208,9 +182,10 @@ _TOUCH_TYPES = ("click", "view")
 def _update_attribution_rowloop(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Original per-row form, kept as the A/B reference for the vectorized
-    path (VERDICT r12 item 4) and as executable documentation of the
-    semantics. Select with PHSQIS_ATTR_IMPL=rowloop."""
+    """Per-row reference form of :func:`_update_attribution`: executable
+    documentation of the semantics, which
+    tests/test_events.py::test_attribution_vectorized_matches_rowloop_unit
+    compares the vectorized form against. No query runs it."""
     (user_id,) = key
     tid, ttype, tus = state.get if state.exists else (None, None, None)
     pdf = pd.concat(list(pdfs), ignore_index=True)
@@ -301,10 +276,8 @@ def _update_attribution(
 def attribution_stream(events: DataFrame) -> DataFrame:
     """Wire the order-sensitive attributor onto a streaming events frame:
     groupBy(user_id) → applyInPandasWithState, append mode (each purchase
-    is emitted exactly once, in the micro-batch that contains it).
-
-    The state function defaults to the vectorized-columns form; set
-    PHSQIS_ATTR_IMPL=rowloop to run the per-row reference (A/B harness)."""
+    is emitted exactly once, in the micro-batch that contains it), with
+    the vectorized-columns state function :func:`_update_attribution`."""
     slim = events.select(
         "user_id",
         "event_id",
@@ -312,13 +285,8 @@ def attribution_stream(events: DataFrame) -> DataFrame:
         "event_type",
         "value",
     )
-    impl = (
-        _update_attribution_rowloop
-        if os.environ.get("PHSQIS_ATTR_IMPL") == "rowloop"
-        else _update_attribution
-    )
     return slim.groupBy("user_id").applyInPandasWithState(
-        impl,
+        _update_attribution,
         outputStructType=ATTR_OUTPUT_SCHEMA,
         stateStructType=ATTR_STATE_SCHEMA,
         outputMode="append",
@@ -333,41 +301,14 @@ def run_attribution_stream(
 ) -> DataFrame:
     """Execute streaming attribution as a real multi-micro-batch job over a
     TIME-ORDERED replay: ntile(ts, event_id) splits the source into
-    n_chunks contiguous time ranges, maxFilesPerTrigger=1 feeds them in
-    order, and the drained sink holds one row per purchase. The staging
-    ntile is a replay-harness artifact (test scale); a production source
-    is already time-ordered per key."""
+    n_chunks contiguous time ranges, triggered in order, and the drained
+    sink holds one row per purchase. The ntile is a replay-harness artifact
+    (test scale); a production source is already time-ordered per key."""
     from pyspark.sql import Window
 
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_attr_{uuid.uuid4().hex[:8]}"
-    stage_dir = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(stage_dir, exist_ok=True)
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = spark.read.parquet(events_parquet)
-    w = Window.orderBy("ts", "event_id")
-    staged = src.withColumn("__c", F.ntile(n_chunks).over(w))
-    for c in range(1, n_chunks + 1):
-        staged.where(F.col("__c") == c).drop("__c").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage_dir, f"chunk={c:03d}"))
-
-    from ..sources.tables import normalize_event_ts
-
-    events = normalize_event_ts(
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(stage_dir)
-    )
-
-    out = attribution_stream(events)
-    try:
-        with stream_shuffle_partitions(spark, _stateful_shuffle_partitions(src.count())):
-            out_dir = drain_stream_to_parquet(out, name, output_mode="append")
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-    return read_sink(spark, out_dir, ATTR_OUTPUT_SCHEMA)
+    n_rows = pq.read_metadata(events_parquet).num_rows
+    chunk = F.ntile(n_chunks).over(Window.orderBy("ts", "event_id"))
+    with replay(spark, events_parquet, chunk=chunk) as events:
+        return drain(
+            attribution_stream(events), "append", _stateful_shuffle_partitions(n_rows)
+        )[0]

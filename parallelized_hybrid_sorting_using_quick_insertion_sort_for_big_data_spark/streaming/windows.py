@@ -13,15 +13,11 @@ are partial-agg friendly (count/sum); session windows use Spark's native
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import normalize_event_ts
+from ..sources.tables import normalize_event_ts, read_raw_events
+from .sink import drain, replay
 
 _DEC = "decimal(27,8)"
 
@@ -72,62 +68,28 @@ def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
 
 def stream_tumbling_agg(
     spark: SparkSession,
-    source_dir: str,
-    schema,
+    events_parquet: str,
     window: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Run the tumbling aggregation as a real Structured Streaming job over
-    a parquet directory source with an event-time watermark, drain it
-    through ``foreachBatch`` → parquet (complete mode: each trigger
-    overwrites with the full result, written executor-side — never a
-    driver-resident memory sink), and return the final materialized result.
+    the replayed events file with an event-time watermark, drain it
+    (complete mode: each trigger overwrites the sink with the full result,
+    written executor-side — never a driver-resident memory sink), and
+    return the final materialized result.
 
     The watermark bounds state: windows older than (max event time -
     watermark) are finalized and evicted — the late-data contract a
     continuous pipeline needs. With a static source, processAllAvailable
     drains everything, so the result equals the batch aggregation (asserted
     in tests)."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_stream_{uuid.uuid4().hex[:8]}"
-    staged = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(source_dir):
-        # the file-stream source only accepts directories: stage the single
-        # parquet file into a scratch dir (test-scale convenience; a real
-        # deployment streams from a directory/Kafka anyway)
-        staged = os.path.join(tempfile.gettempdir(), name + "_src")
-        os.makedirs(staged, exist_ok=True)
-        shutil.copy(source_dir, os.path.join(staged, os.path.basename(source_dir)))
-        source_dir = staged
-    events = normalize_event_ts(spark.readStream.schema(schema).parquet(source_dir))
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"), "event_type", "n_events", "total_value"
-        )
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(
-                agg, name, output_mode="complete", overwrite_each_batch=True
-            )
-    finally:
-        if staged is not None:
-            shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, agg.schema)
+    with replay(spark, events_parquet) as events:
+        return drain(tumbling_agg(events.withWatermark("ts", watermark), window), "complete")[0]
 
 
 def stream_sessionize(
     spark: SparkSession,
-    source_dir: str,
-    schema,
+    events_parquet: str,
     gap: str = "30 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
@@ -138,45 +100,16 @@ def stream_sessionize(
     State shape at scale: the store holds OPEN sessions per user — sessions
     whose latest event is within the watermark horizon; a session closes
     (and its state is evicted) once the watermark passes its end. Complete
-    mode + overwrite-per-batch drains the full result for oracle parity
-    with the batch form (a production job runs append mode and emits each
-    session exactly once, on close)."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_ssess_{uuid.uuid4().hex[:8]}"
-    staged = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(source_dir):
-        staged = os.path.join(tempfile.gettempdir(), name + "_src")
-        os.makedirs(staged, exist_ok=True)
-        shutil.copy(source_dir, os.path.join(staged, os.path.basename(source_dir)))
-        source_dir = staged
-    events = normalize_event_ts(spark.readStream.schema(schema).parquet(source_dir))
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros(F.col("win.start")).alias("session_start_us"),
-            F.unix_micros(F.col("win.end")).alias("session_end_us"),
-            "n_events",
-        )
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(
-                agg, name, output_mode="complete", overwrite_each_batch=True
-            )
-    finally:
-        if staged is not None:
-            shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, agg.schema)
+    mode drains the full result for oracle parity with the batch form (a
+    production job runs append mode and emits each session exactly once,
+    on close)."""
+    with replay(spark, events_parquet) as events:
+        return drain(sessionize(events.withWatermark("ts", watermark), gap), "complete")[0]
 
 
 def stream_late_drop(
     spark: SparkSession,
-    source_file: str,
+    events_parquet: str,
     window: str = "1 hour",
     watermark: str = "2 hours",
     n_chunks: int = 3,
@@ -186,15 +119,15 @@ def stream_late_drop(
     events were DROPPED because they arrived behind the watermark, and what
     was actually emitted.
 
-    The source is split into ``n_chunks`` files by ``event_id % n_chunks``
-    and fed ONE PER TRIGGER — each chunk spans the full time range, so
-    from micro-batch 2 on, the watermark (max event time seen so far minus
-    the delay) is near the END of the range and most of the incoming chunk
-    is genuinely late. The job runs in APPEND mode: a window is emitted
+    The source is replayed as ``n_chunks`` chunks by ``event_id % n_chunks``,
+    ONE PER TRIGGER — each chunk spans the full time range, so from
+    micro-batch 2 on, the watermark (max event time seen so far minus the
+    delay) is near the END of the range and most of the incoming chunk is
+    genuinely late. The job runs in APPEND mode: a window is emitted
     exactly once, when the watermark passes its end; late input rows for
     closed (or about-to-be-unreachable) windows are filtered by the state
     operator and counted in the engine's ``numRowsDroppedByWatermark``
-    metric, which this runner reads from the query progress.
+    metric, which this runner sums over the drained query's progress.
 
     Output is ONE row: (emitted_windows, emitted_events, late_dropped).
     All three are reproduced exactly by the DuckDB oracle
@@ -205,83 +138,25 @@ def stream_late_drop(
     (state eviction uses the current one — so a batch can merge late rows
     into the very windows it finalizes at its own end), and the drop
     counter measures rows after the map-side partial aggregate, i.e.
-    distinct late windows per batch here (each chunk is one file, read as
-    one partition via the coalesce(1) below — keep it, the oracle's
-    accounting depends on it).
+    distinct late windows per batch here. That count relies on each chunk
+    being one file, read as one partition — the replay's chunk contract
+    (``sink.replay``), which the oracle's accounting depends on.
 
     Scale shape: identical to ``stream_tumbling_agg`` (bounded state,
     partial-agg counts); the drop accounting is driver-side metadata from
     StreamingQueryProgress, not a data collect."""
-    from .sink import _scratch_dir, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_slate_{uuid.uuid4().hex[:8]}"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    staged = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(staged, exist_ok=True)
-    src = spark.read.parquet(source_file)
-    # one file per chunk, ascending mtimes so FileStreamSource triggers
-    # them in chunk order (same device as stream_dedup's replay copies)
-    for i in range(n_chunks):
-        tmp_i = os.path.join(tempfile.gettempdir(), f"{name}_c{i}")
-        src.where(F.pmod(F.col("event_id"), F.lit(n_chunks)) == i).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp_i)
-        part = next(
-            f for f in sorted(os.listdir(tmp_i)) if f.endswith(".parquet")
+    chunk = F.pmod(F.col("event_id"), F.lit(n_chunks))
+    with replay(spark, events_parquet, chunk=chunk) as events:
+        agg = (
+            events.withWatermark("ts", watermark)
+            .groupBy(F.window("ts", window).alias("win"))
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(F.unix_micros(F.col("win.start")).alias("win_start_us"), "n_events")
         )
-        dst = os.path.join(staged, f"chunk_{i}.parquet")
-        shutil.copy(os.path.join(tmp_i, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-        shutil.rmtree(tmp_i, ignore_errors=True)
-
-    events = normalize_event_ts(
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+        sink, progress = drain(agg, "append")
+    dropped = sum(
+        int(op["numRowsDroppedByWatermark"]) for p in progress for op in p["stateOperators"]
     )
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.unix_micros(F.col("win.start")).alias("win_start_us"), "n_events")
-    )
-
-    out_dir = _scratch_dir(name + "_out")
-    checkpoint = os.path.join(tempfile.gettempdir(), name + "_ckpt")
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    dropped = 0
-    try:
-        with stream_shuffle_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("append")
-                .foreachBatch(_write_batch)
-                .option("checkpointLocation", checkpoint)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-                for p in q.recentProgress:
-                    ops = (
-                        p.get("stateOperators", [])
-                        if isinstance(p, dict)
-                        else p.stateOperators
-                    )
-                    for op in ops:
-                        dropped += int(
-                            op.get("numRowsDroppedByWatermark", 0)
-                            if isinstance(op, dict)
-                            else op.numRowsDroppedByWatermark
-                        )
-            finally:
-                q.stop()
-    finally:
-        shutil.rmtree(checkpoint, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
-
-    sink = read_sink(spark, out_dir, agg.schema)
     return sink.agg(
         F.count(F.lit(1)).cast("bigint").alias("emitted_windows"),
         F.coalesce(F.sum("n_events"), F.lit(0)).cast("bigint").alias("emitted_events"),
@@ -290,8 +165,7 @@ def stream_late_drop(
 
 def stream_static_enrich(
     spark: SparkSession,
-    source_dir: str,
-    schema,
+    events_parquet: str,
     dim: DataFrame,
     window: str = "1 hour",
     watermark: str = "2 hours",
@@ -306,51 +180,32 @@ def stream_static_enrich(
     stream-side shuffle before the aggregation. State is only held for the
     windowed agg (bounded by the watermark horizon); the join itself is
     stateless — the scale contract that makes dimension enrichment safe on
-    an unbounded stream. Drained via foreachBatch → parquet (complete
-    mode), never a driver-resident sink."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_senrich_{uuid.uuid4().hex[:8]}"
-    staged = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(source_dir):
-        staged = os.path.join(tempfile.gettempdir(), name + "_src")
-        os.makedirs(staged, exist_ok=True)
-        shutil.copy(source_dir, os.path.join(staged, os.path.basename(source_dir)))
-        source_dir = staged
-    events = normalize_event_ts(spark.readStream.schema(schema).parquet(source_dir))
-    enriched = events.join(F.broadcast(dim), "user_id")
-    agg = (
-        enriched.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
-        )
-        .select(F.col("win.start").alias("win_start"), "segment", "n_events", "total_value")
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(
-                agg, name, output_mode="complete", overwrite_each_batch=True
+    an unbounded stream. Drained in complete mode, never a driver-resident
+    sink."""
+    with replay(spark, events_parquet) as events:
+        agg = (
+            events.join(F.broadcast(dim), "user_id")
+            .withWatermark("ts", watermark)
+            .groupBy(F.window("ts", window).alias("win"), "segment")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
             )
-    finally:
-        if staged is not None:
-            shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, agg.schema)
+            .select(F.col("win.start").alias("win_start"), "segment", "n_events", "total_value")
+        )
+        return drain(agg, "complete")[0]
 
 
 def stream_stream_join(
     spark: SparkSession,
-    source_file: str,
-    schema,
+    events_parquet: str,
     left_type: str = "purchase",
     right_type: str = "click",
     tolerance: str = "10 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream–stream inner join: two watermarked streaming relations (two
-    independent readers over the replay) joined on user_id with a bounded
+    filtered sides of the replay) joined on user_id with a bounded
     event-time constraint — right events in the ``tolerance`` window at or
     before each left event.
 
@@ -361,99 +216,68 @@ def stream_stream_join(
     the time constraint in the join condition for cleanup. Without the
     bound the buffers grow forever on an unbounded stream. Append mode:
     each matched pair is emitted exactly once."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
+    with replay(spark, events_parquet) as events:
 
-    name = f"phsqis_ssjoin_{uuid.uuid4().hex[:8]}"
-    staged = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(staged, exist_ok=True)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    shutil.copy(source_file, os.path.join(staged, os.path.basename(source_file)))
-
-    def side(event_type: str, prefix: str):
-        return (
-            normalize_event_ts(spark.readStream.schema(schema).parquet(staged))
-            .where(F.col("event_type") == event_type)
-            .select(
-                F.col("event_id").alias(f"{prefix}_event_id"),
-                F.col("user_id").alias(f"{prefix}_user_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
+        def side(event_type: str, prefix: str) -> DataFrame:
+            return (
+                events.where(F.col("event_type") == event_type)
+                .select(
+                    F.col("event_id").alias(f"{prefix}_event_id"),
+                    F.col("user_id").alias(f"{prefix}_user_id"),
+                    F.col("ts").alias(f"{prefix}_ts"),
+                )
+                .withWatermark(f"{prefix}_ts", watermark)
             )
-            .withWatermark(f"{prefix}_ts", watermark)
-        )
 
-    left = side(left_type, "l")
-    right = side(right_type, "r")
-    joined = left.join(
-        right,
-        (F.col("l_user_id") == F.col("r_user_id"))
-        & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"interval {tolerance}"))
-        & (F.col("r_ts") <= F.col("l_ts")),
-    ).select(
-        F.col("l_event_id").alias("purchase_id"),
-        F.col("r_event_id").alias("click_id"),
-        F.col("l_user_id").alias("user_id"),
-        (F.unix_micros("l_ts") - F.unix_micros("r_ts")).alias("delta_us"),
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(joined, name, output_mode="append")
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, joined.schema)
+        left = side(left_type, "l")
+        right = side(right_type, "r")
+        joined = left.join(
+            right,
+            (F.col("l_user_id") == F.col("r_user_id"))
+            & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"interval {tolerance}"))
+            & (F.col("r_ts") <= F.col("l_ts")),
+        ).select(
+            F.col("l_event_id").alias("purchase_id"),
+            F.col("r_event_id").alias("click_id"),
+            F.col("l_user_id").alias("user_id"),
+            (F.unix_micros("l_ts") - F.unix_micros("r_ts")).alias("delta_us"),
+        )
+        return drain(joined, "append")[0]
 
 
 def stream_dedup(
     spark: SparkSession,
-    source_file: str,
-    schema,
+    events_parquet: str,
     key_cols: list[str] | None = None,
     watermark: str = "2 hours",
     copies: int = 2,
 ) -> DataFrame:
     """Streaming exact deduplication with bounded state:
     ``dropDuplicatesWithinWatermark`` keyed on ``key_cols``, exercised over a
-    source that REALLY contains duplicates — the input file is staged
-    ``copies`` times and read one file per trigger, so the second copy
-    arrives in a later micro-batch and dedup must happen through the state
-    store, not within a batch.
+    source that REALLY contains duplicates — the input file is replayed
+    ``copies`` times, one copy per trigger, so the second copy arrives in a
+    later micro-batch and dedup must happen through the state store, not
+    within a batch.
 
     Scale shape: state holds one entry per key seen within the watermark
     horizon (evicted after), the contract that makes exactly-once event
     ingestion feasible on an unbounded stream — a plain
     ``dropDuplicates(key)`` would grow state forever. Deduped rows are
-    drained executor-side (append mode, foreachBatch → parquet); callers
-    aggregate the returned frame distributed. Rows older than the watermark
-    in later copies are dropped as late data — for exact replays (this
-    demo) that coincides with dedup; a production source with genuinely
-    late NON-duplicate data needs the watermark sized to its lateness
-    bound."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    key_cols = key_cols or ["event_id"]
-    name = f"phsqis_sdedup_{uuid.uuid4().hex[:8]}"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    staged = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(staged, exist_ok=True)
-    for i in range(copies):
-        shutil.copy(source_file, os.path.join(staged, f"copy{i}.parquet"))
-    events = normalize_event_ts(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(key_cols)
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(deduped, name, output_mode="append")
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, deduped.schema)
+    drained executor-side (append mode); callers aggregate the returned
+    frame distributed. Rows older than the watermark in later copies are
+    dropped as late data — for exact replays (this demo) that coincides
+    with dedup; a production source with genuinely late NON-duplicate data
+    needs the watermark sized to its lateness bound."""
+    with replay(spark, events_parquet, copies=copies) as events:
+        deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+            key_cols or ["event_id"]
+        )
+        return drain(deduped, "append")[0]
 
 
 def stream_windowed_cms(
     spark: SparkSession,
-    source_dir: str,
-    schema,
+    events_parquet: str,
     window: str = "6 hours",
     window_s: int = 21600,
     watermark: str = "2 hours",
@@ -476,61 +300,43 @@ def stream_windowed_cms(
     cell — identical to the batch ``cms_build`` per window, which is what
     the generated DuckDB oracle recomputes cell-for-cell."""
     from ..operators.sketch import _cell_of, _digest
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
 
-    name = f"phsqis_scms_{uuid.uuid4().hex[:8]}"
-    staged = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(source_dir):
-        staged = os.path.join(tempfile.gettempdir(), name + "_src")
-        os.makedirs(staged, exist_ok=True)
-        shutil.copy(source_dir, os.path.join(staged, os.path.basename(source_dir)))
-        source_dir = staged
-    events = normalize_event_ts(spark.readStream.schema(schema).parquet(source_dir))
     v = F.col(value_col)
     n_blocks = (depth + 3) // 4
-    digests = events.where(v.isNotNull()).select(
-        "ts", *[_digest(v, b).alias(f"__d{b}") for b in range(n_blocks)]
-    )
-    fanned = digests.select(
-        "ts",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        _cell_of(F.col(f"__d{j // 4}"), j, width).alias("cell"),
-                    )
-                    for j in range(depth)
-                ]
-            )
-        ).alias("__c"),
-    )
-    agg = (
-        fanned.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", window).alias("win"),
-            F.col("__c.j").alias("j"),
-            F.col("__c.cell").alias("cell"),
+    with replay(spark, events_parquet) as events:
+        digests = events.where(v.isNotNull()).select(
+            "ts", *[_digest(v, b).alias(f"__d{b}") for b in range(n_blocks)]
         )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("win.start").alias("win_start"), "j", "cell", "n")
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(
-                agg, name, output_mode="complete", overwrite_each_batch=True
+        fanned = digests.select(
+            "ts",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(j).alias("j"),
+                            _cell_of(F.col(f"__d{j // 4}"), j, width).alias("cell"),
+                        )
+                        for j in range(depth)
+                    ]
+                )
+            ).alias("__c"),
+        )
+        agg = (
+            fanned.withWatermark("ts", watermark)
+            .groupBy(
+                F.window("ts", window).alias("win"),
+                F.col("__c.j").alias("j"),
+                F.col("__c.cell").alias("cell"),
             )
-    finally:
-        if staged is not None:
-            shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, agg.schema)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.col("win.start").alias("win_start"), "j", "cell", "n")
+        )
+        return drain(agg, "complete")[0]
 
 
 def stream_scd2_enrich(
     spark: SparkSession,
-    source_dir: str,
-    schema,
+    events_parquet: str,
     dim: DataFrame,
     key: str = "user_id",
 ) -> DataFrame:
@@ -547,38 +353,19 @@ def stream_scd2_enrich(
 
     Dim contract: (key, segment, valid_from_us, valid_to_us) with
     half-open [from, to) validity — the scd.py convention."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
-
-    name = f"phsqis_scd2e_{uuid.uuid4().hex[:8]}"
-    staged = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(source_dir):
-        staged = os.path.join(tempfile.gettempdir(), name + "_src")
-        os.makedirs(staged, exist_ok=True)
-        shutil.copy(source_dir, os.path.join(staged, os.path.basename(source_dir)))
-        source_dir = staged
-    events = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(source_dir)
-    ).withColumn("__ts_us", F.unix_micros(F.col("ts")))
-    cond = (
-        (events[key] == dim[key])
-        & (events["__ts_us"] >= dim["valid_from_us"])
-        & (events["__ts_us"] < dim["valid_to_us"])
-    )
-    enriched = events.join(F.broadcast(dim), cond).drop(dim[key])
-    agg = enriched.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(
-                agg, name, output_mode="complete", overwrite_each_batch=True
-            )
-    finally:
-        if staged is not None:
-            shutil.rmtree(staged, ignore_errors=True)
-    return read_sink(spark, out_dir, agg.schema)
+    with replay(spark, events_parquet) as stream:
+        events = stream.withColumn("__ts_us", F.unix_micros(F.col("ts")))
+        cond = (
+            (events[key] == dim[key])
+            & (events["__ts_us"] >= dim["valid_from_us"])
+            & (events["__ts_us"] < dim["valid_to_us"])
+        )
+        enriched = events.join(F.broadcast(dim), cond).drop(dim[key])
+        agg = enriched.groupBy("segment").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
+        )
+        return drain(agg, "complete")[0]
 
 
 def stream_hll_daily(
@@ -598,54 +385,33 @@ def stream_hll_daily(
 
     Output per day: (day, n_exact, est_ok, stream_eq_batch); day = -1 is
     the corpus row, where stream_eq_batch asserts the union of the
-    drained daily sketches equals the single-pass batch estimate."""
-    from .sink import drain_stream_to_parquet, read_sink, stream_shuffle_partitions
+    drained daily sketches equals the single-pass batch sketch.
 
-    name = f"phsqis_shll_{uuid.uuid4().hex[:8]}"
-    stage_dir = os.path.join(tempfile.gettempdir(), name + "_src")
-    os.makedirs(stage_dir, exist_ok=True)
+    Sketches are compared by the estimate of their registers alone,
+    ``hll_sketch_estimate(hll_union(sk, sk))``: a union result always uses
+    the register-only composite estimator, whereas a sketch built by
+    updates in ONE task keeps its HIP estimate, which depends on update
+    order (at sf0.1 a day's single-task batch sketch reads 1335 and the
+    same registers 1329)."""
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = spark.read.parquet(events_parquet)
-    src.withColumn("__c", F.pmod(F.col("event_id"), F.lit(n_chunks))).repartition(
-        n_chunks, "__c"
-    ).drop("__c").write.mode("overwrite").parquet(stage_dir)
+    def registers_estimate(sk):
+        return F.hll_sketch_estimate(F.hll_union(sk, sk))
 
-    events = normalize_event_ts(
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
     day = (F.unix_micros(F.col("ts")) / F.lit(day_us)).cast("bigint").alias("day")
-    agg = events.select(day, "user_id").groupBy("day").agg(
-        F.hll_sketch_agg("user_id").alias("sk"),
-        F.count(F.lit(1)).alias("n_seen"),  # monotone per day → picks last update
-    )
-    from pyspark.sql import types as T
-
-    sink_schema = T.StructType(
-        [
-            T.StructField("day", T.LongType()),
-            T.StructField("sk", T.BinaryType()),
-            T.StructField("n_seen", T.LongType()),
-        ]
-    )
-    try:
-        with stream_shuffle_partitions(spark):
-            out_dir = drain_stream_to_parquet(agg, name, output_mode="update")
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-    updates = read_sink(spark, out_dir, sink_schema)
+    chunk = F.pmod(F.col("event_id"), F.lit(n_chunks))
+    with replay(spark, events_parquet, chunk=chunk) as events:
+        agg = events.select(day, "user_id").groupBy("day").agg(
+            F.hll_sketch_agg("user_id").alias("sk"),
+            F.count(F.lit(1)).alias("n_seen"),  # monotone per day → picks last update
+        )
+        updates = drain(agg, "update")[0]
     finals = updates.groupBy("day").agg(
         F.max_by(F.col("sk"), F.col("n_seen")).alias("sk")
     )
 
-    ev = normalize_event_ts(spark.read.parquet(events_parquet)).select(
-        day, "user_id"
-    )
+    ev = normalize_event_ts(read_raw_events(spark, events_parquet)).select(day, "user_id")
     batch_daily = ev.groupBy("day").agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("__best"),
+        registers_estimate(F.hll_sketch_agg("user_id")).alias("__best"),
         F.countDistinct("user_id").cast("bigint").alias("n_exact"),
     )
     bandc = F.lit(float(band))
@@ -659,14 +425,12 @@ def stream_hll_daily(
                 F.abs(F.col("__sest") - F.col("n_exact"))
                 <= bandc * F.col("n_exact")
             ).alias("est_ok"),
-            (F.col("__sest") == F.col("__best")).alias("stream_eq_batch"),
+            (registers_estimate(F.col("sk")) == F.col("__best")).alias("stream_eq_batch"),
         )
     )
-    union_est = finals.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("__u")
-    )
+    union_est = finals.agg(registers_estimate(F.hll_union_agg("sk")).alias("__u"))
     single = ev.agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("__s"),
+        registers_estimate(F.hll_sketch_agg("user_id")).alias("__s"),
         F.countDistinct("user_id").cast("bigint").alias("n_exact"),
     )
     total_row = union_est.crossJoin(F.broadcast(single)).select(

@@ -116,10 +116,8 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions held per user, closed and evicted as the watermark passes).
     Fully drained over the static replay, the stream result must equal the
     batch form, so both share one oracle."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     return W.stream_sessionize(
-        spark, f"{sf_dir}/events.parquet", schema, gap="30 minutes", watermark="2 hours"
+        spark, f"{sf_dir}/events.parquet", gap="30 minutes", watermark="2 hours"
     )
 
 
@@ -177,7 +175,6 @@ def events_stream_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation. Exact int64 accumulation (value scaled to hundredths)."""
     from ..streaming import stateful as S
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return S.run_user_profile_stream(spark, f"{sf_dir}/events.parquet", n_chunks=3)
 
 
@@ -203,12 +200,8 @@ def events_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact per-window counts would churn. The generated DuckDB oracle
     rebuilds every (window, j, cell, n) cell from the same md5 family and
     epoch-floor windows — streaming execution, batch-exact answer."""
-    from ..streaming import windows as W
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     return W.stream_windowed_cms(
-        spark, f"{sf_dir}/events.parquet", schema,
+        spark, f"{sf_dir}/events.parquet",
         window="6 hours", window_s=_SCMS_WINDOW_S, watermark="2 hours",
         value_col="user_id", depth=_SCMS_DEPTH, width=_SCMS_WIDTH,
     )
@@ -217,15 +210,11 @@ def events_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("events_stream_tumbling", sql=_TUMBLING_ORACLE)
 def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME tumbling aggregation as events_tumbling_window but executed
-    as a real readStream → watermark → writeStream(memory) job, drained
+    as a real readStream → watermark → writeStream job, drained
     synchronously. Oracle: the identical epoch-floor SQL the batch form uses
     (stream==batch parity also pytest-pinned)."""
-    # raw file schema: ts arrives as INT64 nanos (read via nanosAsLong);
-    # stream_tumbling_agg converts it to a proper event-time column
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     return W.stream_tumbling_agg(
-        spark, f"{sf_dir}/events.parquet", schema, window="1 hour", watermark="2 hours"
+        spark, f"{sf_dir}/events.parquet", window="1 hour", watermark="2 hours"
     )
 
 
@@ -292,7 +281,6 @@ def events_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the query progress, and the oracle REPLAYS the micro-batch
     schedule in SQL — value-checking the engine's internal late-data
     accounting against an independent implementation."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return W.stream_late_drop(
         spark, f"{sf_dir}/events.parquet",
         window="1 hour", watermark="2 hours", n_chunks=3,
@@ -316,12 +304,8 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id removes the replay through the state store, and the deduped
     rows — drained executor-side — aggregate back to exactly the
     single-copy batch totals (the oracle)."""
-    from ..streaming import windows as W
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     deduped = W.stream_dedup(
-        spark, f"{sf_dir}/events.parquet", schema, key_cols=["event_id"], copies=2
+        spark, f"{sf_dir}/events.parquet", key_cols=["event_id"], copies=2
     )
     return deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -348,14 +332,12 @@ def events_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarked tumbling rollup per (hour, segment). Oracle: the identical
     batch join + epoch-floor aggregation — with a static replay fully
     drained, stream output must equal the batch join exactly."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     dim = (
         load_table(spark, sf_dir, "customer")
         .select(F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment"))
     )
     return W.stream_static_enrich(
-        spark, f"{sf_dir}/events.parquet", schema, dim, window="1 hour", watermark="2 hours"
+        spark, f"{sf_dir}/events.parquet", dim, window="1 hour", watermark="2 hours"
     )
 
 
@@ -381,10 +363,8 @@ def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffered rows, keeping state finite on an unbounded stream. Fully
     drained over the static replay, the append-mode output must equal the
     batch range join (the oracle)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     return W.stream_stream_join(
-        spark, f"{sf_dir}/events.parquet", schema,
+        spark, f"{sf_dir}/events.parquet",
         left_type="purchase", right_type="click",
         tolerance="10 minutes", watermark="2 hours",
     )
@@ -984,8 +964,6 @@ def events_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked against the identical batch range join. See
     streaming/windows.py:stream_scd2_enrich for the scale contract
     (equality-keyed broadcast join, range residual, stateless join)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     cust = load_table(spark, sf_dir, "customer")
     v1 = cust.select(
         F.col("c_custkey").alias("user_id"),
@@ -1000,7 +978,7 @@ def events_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_SCD2E_HI_US).cast("long").alias("valid_to_us"),
     )
     return W.stream_scd2_enrich(
-        spark, f"{sf_dir}/events.parquet", schema, v1.unionByName(v2)
+        spark, f"{sf_dir}/events.parquet", v1.unionByName(v2)
     )
 
 
@@ -1874,10 +1852,8 @@ def events_stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only watermark-bounded per-window counters."""
     from pyspark.sql import Window
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     drained = W.stream_tumbling_agg(
-        spark, f"{sf_dir}/events.parquet", schema, window="1 hour", watermark="2 hours"
+        spark, f"{sf_dir}/events.parquet", window="1 hour", watermark="2 hours"
     )
     w = Window.partitionBy("win_start").orderBy(
         F.col("n_events").desc(), F.col("event_type")

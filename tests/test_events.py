@@ -48,6 +48,10 @@ ORACLE_QUERIES = [
     "events_funnel",
     "events_funnel_counts",
     "events_transition_matrix",
+    "events_stream_tumbling",
+    "events_stream_sessionize",
+    "events_stream_stream_join",
+    "events_stream_dedup",
 ]
 
 
@@ -162,11 +166,7 @@ def test_stream_dedup_restores_single_copy(spark):
         windows as W,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{SF_DIR}/events.parquet").schema
-    deduped = W.stream_dedup(
-        spark, f"{SF_DIR}/events.parquet", schema, key_cols=["event_id"], copies=2
-    )
+    deduped = W.stream_dedup(spark, f"{SF_DIR}/events.parquet", key_cols=["event_id"], copies=2)
     got = [r["event_id"] for r in deduped.select("event_id").collect()]
     want = [r["event_id"] for r in load_table(spark, SF_DIR, "events").select("event_id").collect()]
     assert sorted(got) == sorted(want)  # every id exactly once, none lost

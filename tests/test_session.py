@@ -32,7 +32,9 @@ def test_shipped_zip_is_removed_at_exit(tmp_path):
     """A driver process leaves no ``phsqis_pkg_*.zip`` in its temp dir once
     its interpreter exits, even without stopping the session; neither a
     streaming query's ``phsqis_*`` temp dir nor the hybrid kernel's
-    ``phsqis_kernel_*.so`` built by ``hybrid_ranked`` is left behind."""
+    ``phsqis_kernel_*.so`` built by ``hybrid_ranked`` is left behind. The
+    three chunk- or copy-staging runners, pointed at a missing events file,
+    raise and leave no staged source behind either."""
     import os
     import subprocess
     import sys
@@ -52,6 +54,19 @@ def test_shipped_zip_is_removed_at_exit(tmp_path):
         ".operators import hybrid\n"
         "hybrid.hybrid_ranked(spark.range(5).selectExpr('id AS value'), num_partitions=2).collect()\n"
         "print(len(glob.glob(os.path.join(tempfile.gettempdir(), 'phsqis_kernel_*.so'))))\n"
+        "from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark"
+        ".streaming import stateful, windows\n"
+        "missing = os.path.join(tempfile.gettempdir(), 'no_such_events.parquet')\n"
+        "runs = [lambda: stateful.run_user_profile_stream(spark, missing),\n"
+        "        lambda: windows.stream_hll_daily(spark, missing, day_us=86_400_000_000),\n"
+        "        lambda: windows.stream_dedup(spark, missing)]\n"
+        "raised = 0\n"
+        "for run in runs:\n"
+        "    try:\n"
+        "        run()\n"
+        "    except Exception:\n"
+        "        raised += 1\n"
+        "print(raised)\n"
     )
     env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g")
     root = S.Path(S.__file__).resolve().parent.parent
@@ -59,8 +74,9 @@ def test_shipped_zip_is_removed_at_exit(tmp_path):
         [sys.executable, "-c", code], cwd=root, env=env, capture_output=True, text=True, timeout=300
     )
     assert run.returncode == 0, run.stderr[-2000:]
-    # the zip, then the kernel, existed while the driver ran
-    assert run.stdout.split()[-2:] == ["1", "1"]
+    # the zip, then the kernel, existed while the driver ran; all three
+    # runners raised on the missing source
+    assert run.stdout.split()[-3:] == ["1", "1", "3"]
     assert not list(tmp_path.glob("phsqis_*"))
 
 
