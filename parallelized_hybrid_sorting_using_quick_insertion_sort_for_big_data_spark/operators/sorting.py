@@ -6,9 +6,17 @@ k-way merge; /root/reference/QuickInsertionHeap.c:146-242). Spark-first, that
 topology maps to:
 
   MPI_Scatterv block split     → range-partition exchange (repartitionByRange)
-  per-rank hybrid quicksort    → per-partition sort (SortExec / TimSort+radix,
-                                 which already small-run-switches to insertion
-                                 sort — the reference's THRESHOLD idea)
+  per-rank hybrid quicksort    → per-partition sort (SortExec). Spark
+                                 radix-sorts only one key whose 64-bit prefix
+                                 decides the order; any other order is a
+                                 TimSort (which small-run-switches to
+                                 insertion sort — the reference's THRESHOLD
+                                 idea) with a full-row compare on every
+                                 prefix tie. ``total_sort`` gives a
+                                 multi-key integer order over a parquet scan
+                                 the radix sort by packing its keys into one
+                                 BIGINT (``_sort_order``, ranges from the
+                                 files' footers)
   MPI_Gatherv + rank-0 k-way   → UNNECESSARY: with range partitioning,
   min-heap merge                 partition i's keys all precede partition
                                  i+1's, so concatenation in partition order IS
@@ -24,16 +32,27 @@ the whole dataset in one task.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+import math
+from typing import Iterable
+from urllib.parse import urlparse
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 from pyspark.storagelevel import StorageLevel
 
 _PID = "__phsqis_pid"
 _LRN = "__phsqis_local_rn"
 _OFF = "__phsqis_offset"
+
+
+def _flags(keys: list, ascending: bool | Iterable[bool]) -> list[bool]:
+    flags = list(ascending) if isinstance(ascending, (list, tuple)) else [ascending] * len(keys)
+    if len(flags) != len(keys):
+        raise ValueError("ascending must be a bool or match len(keys)")
+    return flags
 
 
 def _sort_columns(
@@ -42,17 +61,134 @@ def _sort_columns(
     nulls_last: bool = True,
 ) -> list[Column]:
     keys = list(keys)
-    flags = list(ascending) if isinstance(ascending, (list, tuple)) else [ascending] * len(keys)
-    if len(flags) != len(keys):
-        raise ValueError("ascending must be a bool or match len(keys)")
     cols = []
-    for key, asc in zip(keys, flags):
+    for key, asc in zip(keys, _flags(keys, ascending)):
         col = F.col(key) if isinstance(key, str) else key
         if asc:
             cols.append(col.asc_nulls_last() if nulls_last else col.asc_nulls_first())
         else:
             cols.append(col.desc_nulls_last() if nulls_last else col.desc_nulls_first())
     return cols
+
+
+_PACKABLE = (ByteType, ShortType, IntegerType, LongType)
+_PACKED_MAX = (1 << 63) - 1
+
+
+def _footer_ranges(df: DataFrame, keys: list[str]) -> tuple[int, list[tuple]] | None:
+    """``(rows, [(min, max, non-null count) per key])`` of a parquet scan,
+    read from its files' footers on the driver: no Spark job. None unless
+    ``df`` is a parquet file relation under Filters and Projects that pass
+    every key through unchanged, the keys are data (not partition) columns,
+    every file is local and every row group carries the keys' statistics
+    as integers.
+    A Filter only narrows the ranges, so the files' ranges still bound it."""
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.nodeName() in ("Filter", "Project"):
+        if plan.nodeName() == "Project":
+            exprs = plan.projectList()
+            kinds = {e.name(): e.nodeName() for e in map(exprs.apply, range(exprs.size()))}
+            if any(kinds.get(k) != "AttributeReference" for k in keys):
+                return None
+        plan = plan.child()
+    if plan.nodeName() != "LogicalRelation":
+        return None
+    relation = plan.relation()
+    if relation.getClass().getSimpleName() != "HadoopFsRelation" or (
+        relation.fileFormat().toString() != "Parquet"
+    ):
+        return None
+    if set(keys) & set(relation.partitionSchema().fieldNames()):
+        return None
+    rows, ranges = 0, [[None, None, 0] for _ in keys]
+    for uri in df.inputFiles():
+        url = urlparse(uri)
+        if url.scheme != "file":
+            return None
+        meta = pq.read_metadata(url.path)
+        index = {meta.schema.column(i).path: i for i in range(meta.num_columns)}
+        if not all(k in index for k in keys):
+            return None
+        for group in map(meta.row_group, range(meta.num_row_groups)):
+            rows += group.num_rows
+            for k, r in zip(keys, ranges):
+                stats = group.column(index[k]).statistics
+                if stats is None or not stats.has_null_count:
+                    return None
+                seen = group.num_rows - stats.null_count
+                if seen:
+                    # a TIMESTAMP column read as a long (nanosAsLong) has
+                    # timestamp statistics, not its long values
+                    if not stats.has_min_max or not isinstance(stats.min, int):
+                        return None
+                    r[0] = stats.min if r[2] == 0 else min(r[0], stats.min)
+                    r[1] = stats.max if r[2] == 0 else max(r[1], stats.max)
+                    r[2] += seen
+    return rows, [tuple(r) for r in ranges]
+
+
+def _sort_order(
+    df: DataFrame,
+    keys: Iterable[str | Column],
+    ascending: bool | Iterable[bool] = True,
+    nulls_last: bool = True,
+) -> list[Column]:
+    """The sort order of ``total_sort``.
+
+    Two or more keys that are all Byte/Short/Integer/Long columns of a
+    parquet scan (``_footer_ranges``) become ONE non-null BIGINT (a
+    normalized key; Graefe, "Implementing Sorting in Database Systems", ACM
+    CSUR 2006): the mixed-radix number whose digit i is key i's offset in
+    its footer range — ``v - min`` ascending, ``max - v`` descending — with
+    one more slot for null when the key has nulls (after the values for
+    nulls-last, before them for nulls-first). Its numeric order is the
+    keys' lexicographic order, and Spark radix-sorts a single long key,
+    where a multi-key order is a TimSort that compares full rows on every
+    prefix tie.
+
+    The digit widths' product must fit in 63 bits (checked with exact
+    ints), so the key never overflows. A value outside the footer range (or
+    a null where the footers count none) — only possible when the files
+    change after this call — raises instead of mis-ordering. Anything else
+    (one key, a Column key, another type, an input that is not a parquet
+    scan, an empty input, too wide a range) keeps ``_sort_columns``.
+    """
+    keys = list(keys)
+    flags = _flags(keys, ascending)
+    cols = _sort_columns(keys, flags, nulls_last)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    if len(keys) < 2 or not all(
+        isinstance(k, str) and isinstance(types.get(k), _PACKABLE) for k in keys
+    ):
+        return cols
+    footer = _footer_ranges(df, keys)
+    if footer is None:
+        return cols
+    rows, ranges = footer
+    widths = [(hi - lo + 1 if seen else 0) + (seen < rows) for lo, hi, seen in ranges]
+    if rows == 0 or math.prod(widths) > _PACKED_MAX:
+        return cols
+
+    packed, scale = None, 1
+    for key, asc, (lo, hi, seen), width in reversed(list(zip(keys, flags, ranges, widths))):
+        v = F.col(key).cast("long")
+        has_nulls = seen < rows
+        shift = int(has_nulls and not nulls_last)  # nulls first: null is digit 0
+        error = F.raise_error(
+            f"sort key {key!r} is outside its parquet footer range [{lo}, {hi}] "
+            f"(nulls counted: {has_nulls}); the files changed after the sort was planned"
+        )
+        if not seen:  # an all-null key: no value is in range
+            lo, hi = 0, -1
+        digit = (
+            F.when(v.between(lo, hi), (v - lo if asc else hi - v) + shift)
+            .when(v.isNull() & F.lit(has_nulls), 0 if shift else width - 1)
+            .otherwise(error)
+        )
+        term = digit * scale if scale > 1 else digit
+        packed = term if packed is None else packed + term
+        scale *= width
+    return [packed.asc()]
 
 
 def total_sort(
@@ -66,9 +202,14 @@ def total_sort(
     Catalyst plans this as ``Exchange rangepartitioning(...) → Sort`` — the
     distributed replacement for the reference's gather + rank-0 k-way merge
     (QuickInsertionHeap.c:211-215). Scales with partition count; no driver
-    materialization.
+    materialization. On a parquet scan, two or more integer column keys
+    whose footer ranges fit in 63 bits are sorted on one packed BIGINT
+    (``_sort_order``), which Spark radix-sorts; this call reads those
+    ranges from the files' footers on the driver, before it returns, and
+    runs no Spark job for them. Rows, columns and order are those of the
+    lexicographic sort either way.
     """
-    return df.orderBy(*_sort_columns(keys, ascending, nulls_last))
+    return df.orderBy(*_sort_order(df, keys, ascending, nulls_last))
 
 
 def partition_sort(

@@ -48,6 +48,14 @@ def count_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"^\(\d+\) Exchange\b", formatted_plan(df), re.M))
 
 
+def sort_key_counts(df: DataFrame) -> list[int]:
+    """The number of sort orders of every `Sort` node, from the node's
+    `Arguments` line in EXPLAIN FORMATTED (one `ASC|DESC NULLS FIRST|LAST`
+    per order)."""
+    args = re.findall(r"^\(\d+\) Sort\b.*\n(?:.*\n)*?Arguments: (.*)$", formatted_plan(df), re.M)
+    return [len(re.findall(r" (?:ASC|DESC) NULLS (?:FIRST|LAST)\b", a)) for a in args]
+
+
 def scan_read_schemas(df: DataFrame) -> list[str]:
     """The ReadSchema spec of every file scan in the plan."""
     return re.findall(r"ReadSchema: (struct<[^>]*>)", formatted_plan(df))

@@ -99,23 +99,18 @@ _DRIVER_WINDOW = 50
 # fails) identically no matter which CORRECTNESS artifacts are on disk.
 _DRIVER_PRIORITY: tuple[str, ...] = (
     # Output of
-    #   scripts/rotate_window.py --front <12 names>
-    # FRONT (12): every events_stream_* name, now replayed and drained
-    # through the one streaming source and sink (streaming/sink.py). MUST =
-    # the full unpinned set (time-invariant cover), FILL = pinned names
+    #   scripts/rotate_window.py --front <5 names>
+    # FRONT (5): the four sort cells, whose multi-key orders stay
+    # lexicographic beside total_sort's packed key (sorting._sort_order),
+    # and events_hll_daily_merge, whose merge check now reads
+    # register-only estimates on both sides. MUST = the full
+    # unpinned set (time-invariant cover), FILL = pinned names
     # oldest-checked-first.
-    "events_stream_tumbling",
-    "events_stream_sessionize",
-    "events_stream_user_profile",
-    "events_stream_cms",
-    "events_stream_late_drop",
-    "events_stream_dedup",
-    "events_stream_enrich",
-    "events_stream_stream_join",
-    "events_stream_scd2_enrich",
-    "events_stream_attribution",
-    "events_stream_hll_daily",
-    "events_stream_windowed_topk",
+    "sort_seeded_ints",
+    "sort_total_lineitem",
+    "sort_multikey_orders",
+    "sort_within_partitions",
+    "events_hll_daily_merge",
     "events_outlier_robust",
     "events_resample_gapfill",
     "events_zorder_code",
@@ -137,7 +132,6 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "rel_window_running_totals",
     "sample_weighted_topk",
     "skew_twophase_share",
-    "sort_within_partitions",
     "text_bpe_merges",
     "text_bpe_segmentation",
     "text_crossdup_coverage",
@@ -154,6 +148,14 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "rel_window_value_functions",
     "rel_winsorized_stats",
     "rel_yoy_revenue",
+    "search_hybrid_rrf",
+    "text_bigram_fluency",
+    "text_fertility_by_lang",
+    "text_phrase_search",
+    "text_pmi_cooccurrence",
+    "text_tfidf_keywords",
+    "text_zipf_slope",
+    "vec_matryoshka_recall",
 )
 
 

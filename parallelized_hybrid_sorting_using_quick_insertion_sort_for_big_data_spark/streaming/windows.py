@@ -13,7 +13,7 @@ are partial-agg friendly (count/sum); session windows use Spark's native
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import normalize_event_ts, read_raw_events
@@ -368,6 +368,17 @@ def stream_scd2_enrich(
         return drain(agg, "complete")[0]
 
 
+def hll_registers_estimate(sk) -> Column:
+    """The estimate of a sketch's registers alone,
+    ``hll_sketch_estimate(hll_union(sk, sk))``: a union result always uses
+    the register-only composite estimator, whereas a sketch built by
+    updates in ONE task keeps its HIP estimate, which depends on update
+    order (at sf0.1 a day's single-task batch sketch reads 1335 and the
+    same registers 1329). Compare sketches built in different ways with
+    this, never with ``hll_sketch_estimate`` alone."""
+    return F.hll_sketch_estimate(F.hll_union(sk, sk))
+
+
 def stream_hll_daily(
     spark: SparkSession,
     events_parquet: str,
@@ -385,18 +396,8 @@ def stream_hll_daily(
 
     Output per day: (day, n_exact, est_ok, stream_eq_batch); day = -1 is
     the corpus row, where stream_eq_batch asserts the union of the
-    drained daily sketches equals the single-pass batch sketch.
-
-    Sketches are compared by the estimate of their registers alone,
-    ``hll_sketch_estimate(hll_union(sk, sk))``: a union result always uses
-    the register-only composite estimator, whereas a sketch built by
-    updates in ONE task keeps its HIP estimate, which depends on update
-    order (at sf0.1 a day's single-task batch sketch reads 1335 and the
-    same registers 1329)."""
-
-    def registers_estimate(sk):
-        return F.hll_sketch_estimate(F.hll_union(sk, sk))
-
+    drained daily sketches equals the single-pass batch sketch. Sketches
+    are compared with ``hll_registers_estimate``."""
     day = (F.unix_micros(F.col("ts")) / F.lit(day_us)).cast("bigint").alias("day")
     chunk = F.pmod(F.col("event_id"), F.lit(n_chunks))
     with replay(spark, events_parquet, chunk=chunk) as events:
@@ -411,7 +412,7 @@ def stream_hll_daily(
 
     ev = normalize_event_ts(read_raw_events(spark, events_parquet)).select(day, "user_id")
     batch_daily = ev.groupBy("day").agg(
-        registers_estimate(F.hll_sketch_agg("user_id")).alias("__best"),
+        hll_registers_estimate(F.hll_sketch_agg("user_id")).alias("__best"),
         F.countDistinct("user_id").cast("bigint").alias("n_exact"),
     )
     bandc = F.lit(float(band))
@@ -425,12 +426,12 @@ def stream_hll_daily(
                 F.abs(F.col("__sest") - F.col("n_exact"))
                 <= bandc * F.col("n_exact")
             ).alias("est_ok"),
-            (registers_estimate(F.col("sk")) == F.col("__best")).alias("stream_eq_batch"),
+            (hll_registers_estimate(F.col("sk")) == F.col("__best")).alias("stream_eq_batch"),
         )
     )
-    union_est = finals.agg(registers_estimate(F.hll_union_agg("sk")).alias("__u"))
+    union_est = finals.agg(hll_registers_estimate(F.hll_union_agg("sk")).alias("__u"))
     single = ev.agg(
-        registers_estimate(F.hll_sketch_agg("user_id")).alias("__s"),
+        hll_registers_estimate(F.hll_sketch_agg("user_id")).alias("__s"),
         F.countDistinct("user_id").cast("bigint").alias("n_exact"),
     )
     total_row = union_est.crossJoin(F.broadcast(single)).select(

@@ -1378,7 +1378,8 @@ def events_hll_daily_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day HLL distinct-user sketches + their union: every day's
     estimate must sit within 5% of that day's exact count (est_ok), and
     the union-of-daily-sketches estimate must EQUAL the single-pass
-    estimate over all events (merge_ok — register-max associativity, the
+    estimate over all events, both read from the registers alone
+    (``W.hll_registers_estimate``; merge_ok — register-max associativity, the
     property that makes sketch stores sound). The hashed relation carries
     the exact counts and the two proofs; the oracle recomputes the exacts
     and asserts the booleans. At 100 TB the daily relation IS the stored
@@ -1397,11 +1398,13 @@ def events_hll_daily_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_exact",
         F.hll_sketch_estimate(F.col("sk")).alias("__est"),
     )
+    # both sides through the register-only estimator: a single-task
+    # sketch's own estimate is its order-dependent HIP one
     union_est = daily.agg(
-        F.hll_sketch_estimate(F.hll_union_agg(F.col("sk"))).alias("__u")
+        W.hll_registers_estimate(F.hll_union_agg(F.col("sk"))).alias("__u")
     )
     single = ev.agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("__s"),
+        W.hll_registers_estimate(F.hll_sketch_agg("user_id")).alias("__s"),
         F.countDistinct("user_id").cast("bigint").alias("n_exact"),
     )
     merge_ok_row = union_est.crossJoin(F.broadcast(single)).select(

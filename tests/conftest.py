@@ -14,6 +14,7 @@ from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.s
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MID = "/root/testdata/sf0.01"
+SF_DIR_LARGE = str(Path(SF_DIR).with_name("sf0.1"))
 
 
 def pytest_terminal_summary(terminalreporter):

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, SF_DIR_LARGE, assert_matches_oracle
 
 ORACLE_QUERIES = [
     "events_tumbling_window",
@@ -525,6 +525,17 @@ def test_attribution_vectorized_matches_rowloop_unit():
         b_rows, b_state = run(st._update_attribution, chunks, carried)
         assert a_rows == b_rows, (case, a_rows, b_rows)
         assert a_state == b_state, (case, a_state, b_state)
+
+
+@pytest.mark.slow
+def test_hll_daily_merge_matches_oracle_at_sf01(spark):
+    """At sf0.1 the single-pass sketch is built in one task, so its own
+    estimate is the update-order-dependent HIP one while the union of the
+    daily sketches reads the register-only estimate: merge_ok holds only
+    when both sides are read from the registers."""
+    name = "events_hll_daily_merge"
+    df = entrymod.queries()[name](spark, SF_DIR_LARGE)
+    assert_matches_oracle(df, entrymod.oracle_sql()[name], SF_DIR_LARGE)
 
 
 @pytest.mark.slow

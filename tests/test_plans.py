@@ -58,6 +58,27 @@ def test_total_sort_is_range_exchange(spark, qs):
     PI.assert_max_exchanges(df, 1)
 
 
+def test_multikey_integer_sort_is_one_packed_key(spark, qs, tmp_path):
+    """(value, id) longs read from parquet sort on ONE packed key (one sort
+    order, which Spark radix-sorts); generated ints, a string or a double
+    key keep the lexicographic order."""
+    from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.operators import (
+        sorting,
+    )
+    from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.sources import (
+        datagen,
+    )
+
+    generated = datagen.seeded_ints(spark, 1_000)
+    generated.write.parquet(str(tmp_path / "ints"))
+    ints = spark.read.parquet(str(tmp_path / "ints"))
+    assert PI.sort_key_counts(sorting.total_sort(ints, ["value", "id"])) == [1]
+    assert PI.sort_key_counts(sorting.total_sort(generated, ["value", "id"])) == [2]
+    assert set(PI.sort_key_counts(qs["sort_multikey_orders"](spark, SF_DIR))) == {3}
+    doubles = ints.withColumn("value", ints["value"].cast("double"))
+    assert PI.sort_key_counts(sorting.total_sort(doubles, ["value", "id"])) == [2]
+
+
 def test_topk_plans_take_ordered(spark, qs):
     df = qs["sort_topk_lineitem"](spark, SF_DIR)
     assert "TakeOrderedAndProject" in PI.formatted_plan(df)
