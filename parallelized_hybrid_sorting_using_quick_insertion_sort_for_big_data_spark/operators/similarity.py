@@ -648,72 +648,42 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int | None = 9,
-    strategy: str = "packed",
 ) -> DataFrame:
     """Assign every vector to its nearest (max-cosine) centroid cell.
-    Output: corpus columns + ``cell``.
+    Output: ``id_col``, ``vec_col`` and ``cell``.
 
-    ``strategy="packed"`` (default): the whole codebook is aggregated into
-    ONE row — array<struct(cell, centroid)> — broadcast, and the argmax is
-    a per-row ``array_max(transform(...))`` over it: ZERO corpus shuffle
-    and no row fan-out. The broadcast-join + groupBy(id) form
-    (``strategy="grouped"``) replicates every vector k times and then
-    re-shuffles the WHOLE corpus to pick the max — once per call, i.e.
-    once per Lloyd round inside ``kmeans_fit``; at 100 TB the packed form
-    deletes 3 full-corpus exchanges from the fit (and measures ~1.6x
-    faster locally). ``grouped`` remains for codebooks too large to pack
-    into one broadcast row (k*dim beyond ~100M doubles), where paying the
-    shuffle is the honest cost of the codebook size. (A third form —
-    unrolling the codebook into k literal-array expressions — was tried
-    and rejected: 30-60% SLOWER than either, the per-row expression tree
-    grows with k and falls out of efficient evaluation.)
+    The whole codebook is aggregated into ONE row — array<struct(cell,
+    centroid)> — broadcast, and the argmax is a per-row
+    ``array_max(transform(...))`` over it: ZERO corpus shuffle and no row
+    fan-out. A broadcast join + groupBy(id) would replicate every vector k
+    times and then re-shuffle the WHOLE corpus to pick the max, once per
+    Lloyd round inside ``kmeans_fit``. (Unrolling the codebook into k
+    literal-array expressions was tried and rejected: 30-60% SLOWER, the
+    per-row expression tree grows with k and falls out of efficient
+    evaluation.)
 
     Deterministic and engine-portable: the similarity is rounded before the
     argmax and exact ties resolve to the LOWEST cell id (struct-max on
-    (sim, -cell)), matching the DuckDB oracle's ORDER BY sim DESC, cell.
-    Both strategies compute the identical rounded sequential-fold cosine,
-    so results are bitwise-equal (pytest-pinned)."""
+    (sim, -cell)), matching the DuckDB oracle's ORDER BY sim DESC, cell."""
 
     def sim_of(c):
         s = cosine(_as_double(F.col(vec_col)), c)
         return F.round(s, round_digits) if round_digits is not None else s
 
-    if strategy == "packed":
-        packed = centroids.agg(
-            F.collect_list(F.struct("cell", "centroid")).alias("__cb")
+    packed = centroids.agg(F.collect_list(F.struct("cell", "centroid")).alias("__cb"))
+    best = F.array_max(
+        F.transform(
+            F.col("__cb"),
+            lambda c: F.struct(
+                sim_of(c["centroid"]).alias("s"),
+                (-c["cell"].cast("long")).alias("nc"),
+                c["cell"].alias("c"),
+            ),
         )
-        best = F.array_max(
-            F.transform(
-                F.col("__cb"),
-                lambda c: F.struct(
-                    sim_of(c["centroid"]).alias("s"),
-                    (-c["cell"].cast("long")).alias("nc"),
-                    c["cell"].alias("c"),
-                ),
-            )
-        )
-        return corpus.crossJoin(F.broadcast(packed)).select(
-            F.col(id_col), F.col(vec_col), best["c"].alias("cell")
-        )
-    if strategy != "grouped":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    scored = corpus.join(
-        F.broadcast(centroids.select(F.col("cell").alias("__cell"), F.col("centroid").alias("__cent")))
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.struct(
-            sim_of(F.col("__cent")).alias("s"),
-            (-F.col("__cell").cast("long")).alias("nc"),
-            F.col("__cell").alias("c"),
-        ).alias("__sc"),
     )
-    return (
-        scored.groupBy(id_col)
-        .agg(F.max("__sc").alias("__best"), F.first(vec_col).alias(vec_col))
-        .select(F.col(id_col), F.col(vec_col), F.col("__best.c").alias("cell"))
+    return corpus.crossJoin(F.broadcast(packed)).select(
+        F.col(id_col), F.col(vec_col), best["c"].alias("cell")
     )
-
 
 
 def kmeans_fit(

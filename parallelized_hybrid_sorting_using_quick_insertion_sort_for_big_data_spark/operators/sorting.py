@@ -316,7 +316,6 @@ def ranked(
     keys: Iterable[str | Column],
     ascending: bool | Iterable[bool] = True,
     rank_col: str = "rnk",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Total sort with a materialized global 1-based rank column — WITHOUT a
     single-partition window.
@@ -330,7 +329,7 @@ def ranked(
     is the only sort in the whole plan.
     """
     sort_cols = _sort_columns(keys, ascending)
-    n = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     arranged = df.repartitionByRange(max(1, n), *sort_cols).sortWithinPartitions(*sort_cols)
     return rank_arranged(arranged, rank_col)
 

@@ -26,22 +26,20 @@ def default_cpus() -> int:
 def get_spark(
     app_name: str = "phsqis-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession.
 
-    ``spark.sql.shuffle.partitions`` defaults to the core count — the
+    ``spark.sql.shuffle.partitions`` is the core count — the
     published guidance for local mode (the 200 default over-parallelizes
     small local data and under-parallelizes huge data; on a real cluster
     AQE coalescing makes the initial number less critical).
     """
     cpus = cpus or default_cpus()
-    shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

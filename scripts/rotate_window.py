@@ -61,8 +61,10 @@ def _strings(node) -> list[str]:
 
 
 def parity_pinned() -> set[str]:
-    """Same AST walk as the recency guard: names in *_QUERIES lists consumed
-    by a test_oracle_parity parametrize, or inline parametrize lists."""
+    """Names pinned by a parity test (also read by the recency guard): an
+    inline parametrize list on a test_oracle_parity function, or a
+    module-level *_QUERIES list that such a decorator references by name.
+    An unrelated *_QUERIES list (e.g. PLAN_QUERIES) pins nothing."""
     pinned: set[str] = set()
     for tf in (REPO / "tests").glob("test_*.py"):
         tree = ast.parse(tf.read_text())

@@ -12,8 +12,10 @@ sf0.1 (the five measured queries read only `documents`).
 
 Run:  python scripts/scale_check.py
 Writes SCALE_CHECK_r{ROUND}.json (SPARK_GRAFT_ROUND, default 09) at the
-repo root: per query, one untimed warm-up then median-of-3
-times at sf0.1 and sf1 and the slope vs the 10× row ratio. Round 7 adds a
+repo root: per query and scale, ``profile_registry.time_reps`` runs one
+warm-up rep (its wall time kept as ``warmup_sec``) and 3 timed reps, each
+after ``bench.clear_caches``; the row holds the median at sf0.1 and sf1 and
+the slope vs the 10× row ratio. Round 7 adds a
 10× embeddings synth (dim-rolled copies) for the vector-family queries.
 """
 
@@ -22,9 +24,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import string
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -273,24 +275,6 @@ def build_sf1(spark) -> None:
         ev_marker.touch()
 
 
-def median_time(fn, reps=3, warmup=1) -> tuple[float, list[float], float]:
-    """One UNTIMED warm-up precedes the timed reps (VERDICT r12 item 8):
-    a cell's first execution carries the Python/Arrow worker spin-up +
-    codegen transient (r12 example: events_stream_tumbling sf0.1 reps
-    11.9/2.36/2.33 — median-of-3 only just absorbed the 11.9). The warm-up
-    duration is still recorded for transparency."""
-    t0 = time.perf_counter()
-    for _ in range(warmup):
-        fn()
-    warm = round(time.perf_counter() - t0, 3)
-    ts = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn()
-        ts.append(round(time.perf_counter() - t0, 3))
-    return sorted(ts)[len(ts) // 2], ts, warm
-
-
 def main() -> None:
     from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark import (
         queries as registry,
@@ -299,7 +283,7 @@ def main() -> None:
         get_spark,
     )
 
-    import bench
+    from profile_registry import time_reps
 
     spark = get_spark("phsqis-scale-check")
     build_sf1(spark)
@@ -317,11 +301,13 @@ def main() -> None:
         fn = qs[name]
         row = {}
         for label, sf_dir in (("sf0.1", str(SF01)), ("sf1", str(SF1))):
-            bench.clear_caches(spark)
-            med, reps, warm = median_time(
-                lambda: fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            )
-            row[label] = {"median_sec": med, "reps": reps, "warmup_sec": warm}
+            recs, _ = time_reps(spark, fn, sf_dir, 3, f"{name}-{label}")
+            reps = [r["wall_s"] for r in recs[1:]]
+            row[label] = {
+                "median_sec": statistics.median(reps),
+                "reps": reps,
+                "warmup_sec": recs[0]["wall_s"],
+            }
         ratio = round(row["sf1"]["median_sec"] / row["sf0.1"]["median_sec"], 2)
         row["slope_vs_10x_rows"] = ratio
         row["superlinear"] = ratio > 15.0  # 1.5× headroom over the 10× row ratio

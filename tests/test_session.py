@@ -80,6 +80,37 @@ def test_shipped_zip_is_removed_at_exit(tmp_path):
     assert not list(tmp_path.glob("phsqis_*"))
 
 
+def test_profiler_counts_jobs_per_rep_and_cleans_up(tmp_path):
+    """scripts/profile_registry.py prints one JSON line per query with the
+    event-log job count of the warm-up and of each timed rep (the seeded
+    sort runs 7 jobs: the gate for a change in its job structure), writes
+    the formatted plan, and leaves no ``phsqis_*`` entry (its event-log dir,
+    the package zip) in its temp dir."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import SF_DIR
+
+    root = S.Path(S.__file__).resolve().parent.parent
+    plans = tmp_path / "plans"
+    run = subprocess.run(
+        [sys.executable, "scripts/profile_registry.py", "--sf", SF_DIR, "--reps", "1",
+         "--plans", str(plans), "sort_seeded_ints"],
+        cwd=root, env=dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g"),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    lines = [ln for ln in run.stdout.splitlines() if ln.startswith("{")]
+    assert len(lines) == 1, run.stdout
+    rec = json.loads(lines[0])
+    assert rec["query"] == "sort_seeded_ints"
+    assert [r["jobs"] for r in (rec["warmup"], *rec["reps"])] == [7, 7], rec
+    assert "AdaptiveSparkPlan" in (plans / "sort_seeded_ints.txt").read_text()
+    assert not list(tmp_path.glob("phsqis_*"))
+
+
 def test_driver_window_is_exactly_the_priority_prefix():
     """The correctness driver checks the FIRST 50 queries() entries, so
     ordering is a public contract: the priority list must hold exactly 50
@@ -145,7 +176,7 @@ def test_every_query_is_recently_checked_or_parity_pinned():
     DuckDB oracle in-session). The r08 guard checked only oracle
     PRESENCE; this one checks check-RECENCY, so a query can no longer
     drift for five rounds between value checks without a test failing."""
-    import ast
+    import importlib.util
     import json
     from pathlib import Path
 
@@ -160,43 +191,12 @@ def test_every_query_is_recently_checked_or_parity_pinned():
     # queries in the CURRENT driver window get their row this round
     recent |= set(Q._DRIVER_PRIORITY)
 
-    def strings(node) -> list[str]:
-        if isinstance(node, (ast.List, ast.Tuple)):
-            return [
-                e.value
-                for e in node.elts
-                if isinstance(e, ast.Constant) and isinstance(e.value, str)
-            ]
-        return []
-
-    # Two parity conventions exist across the suite files: a module-level
-    # <X>_QUERIES list consumed by a parametrized test_oracle_parity, and an
-    # inline parametrize list decorating test_oracle_parity itself. A
-    # module-level list counts ONLY if a test_oracle_parity decorator
-    # actually references it by name (ADVICE r09: a future unrelated
-    # *_QUERIES list — e.g. PLAN_QUERIES — must not satisfy the guard).
-    pinned: set[str] = set()
-    for tf in (repo / "tests").glob("test_*.py"):
-        tree = ast.parse(tf.read_text())
-        module_lists: dict[str, list[str]] = {}
-        consumed: set[str] = set()
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Assign):
-                for t in node.targets:
-                    if isinstance(t, ast.Name) and t.id.endswith("_QUERIES"):
-                        module_lists[t.id] = strings(node.value)
-            if isinstance(node, ast.FunctionDef) and node.name.startswith(
-                "test_oracle_parity"
-            ):
-                for deco in node.decorator_list:
-                    if isinstance(deco, ast.Call):
-                        for arg in deco.args:
-                            pinned.update(strings(arg))
-                            for ref in ast.walk(arg):
-                                if isinstance(ref, ast.Name):
-                                    consumed.add(ref.id)
-        for list_name in consumed & set(module_lists):
-            pinned.update(module_lists[list_name])
+    spec = importlib.util.spec_from_file_location(
+        "rotate_window_pins", repo / "scripts" / "rotate_window.py"
+    )
+    rw = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(rw)
+    pinned = rw.parity_pinned()
 
     uncovered = sorted(set(Q.REGISTRY) - recent - pinned)
     assert not uncovered, (
