@@ -15,9 +15,8 @@ regardless of corpus size — the whole point of operating on the frequency
 table instead of the corpus). Per round: one explode + partial-agg shuffle
 of (pair, freq) partials, a top-1 TakeOrderedAndProject, and a broadcast
 cross-join of the 1-row winner to rewrite representations — the corpus
-never participates again. Each round's vocabulary is pinned with an eager
-``localCheckpoint`` (same lineage cut as ``similarity.kmeans_fit``), so the
-plan stays flat at any ``rounds``.
+never participates again. The rounds run on ``fixpoint.iterate`` with
+eager pins of the vocabulary, so the plan stays flat at any ``rounds``.
 
 Merge application = expand / single-pass literal ``replace`` / collapse on
 the space-delimited symbol string: double every delimiter space, replace
@@ -43,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fixpoint import iterate
 from .text import TOKEN_RE
 
 
@@ -87,9 +87,9 @@ def bpe_fit(
     (token, freq, repr) vocabulary after all rounds)."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    cur = _vocab(df, text_col, token_re).localCheckpoint(eager=True)
     winners = []
-    for r in range(1, rounds + 1):
+
+    def merge_round(cur: DataFrame, r: int) -> DataFrame:
         syms = F.filter(F.split(F.col("repr"), " "), lambda x: x != "")
         with_syms = cur.select("freq", syms.alias("syms"))
         pairs = with_syms.where(F.size("syms") >= 2).select(
@@ -124,7 +124,7 @@ def bpe_fit(
         # vocabulary, so the winner attaches via a constant-key LEFT join
         # and a null winner makes the round a no-op (the oracle mirrors
         # this with a chr(0) never-matching pattern).
-        cur = (
+        return (
             cur.withColumn("__k", F.lit(1))
             .join(
                 F.broadcast(
@@ -157,9 +157,11 @@ def bpe_fit(
                 ).otherwise(F.col("repr")),
             )
             .drop("__k", "__pair", "__merged")
-            .localCheckpoint(eager=True)
         )
-    return winners, cur
+
+    vocab = _vocab(df, text_col, token_re).localCheckpoint(eager=True)
+    vocab = iterate(vocab, merge_round, rounds, eager=True)
+    return winners, vocab
 
 
 def bpe_merges(

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import text as T
+from .fixpoint import iterate
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -371,7 +372,6 @@ def winnow_fingerprints(
     k: int = 8,
     w: int = 4,
     seed: int = 42,
-    strategy: str = "pandas",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
     "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD'03 —
@@ -387,25 +387,16 @@ def winnow_fingerprints(
 
     Scale shape: the k-gram hash array is built with JVM built-ins (md5 —
     reproducible in any SQL engine, see ``winnow_oracle_sql``); the window
-    selection is O(len · w) per row. Fingerprints dedup per row BEFORE the
-    explode — ZERO shuffle end to end, both strategies.
-
-    ``strategy``:
-    - ``"pandas"`` (default): the selection runs as an Arrow-batched
-      ``mapInPandas`` over (id, hash-array) rows — numpy sliding-window
-      min over position-encoded keys. Higher-order-function expressions
-      are interpreted (no whole-stage codegen), so the per-window
-      slice/fold machinery costs ~10 s at sf0.1 where the numpy kernel
-      costs ~1 s; this is the sanctioned escape hatch: JVM built-ins for
-      what they express well (the scan + hashes), a vectorized kernel for
-      the part they don't.
-    - ``"expr"``: pure built-in expressions end to end (the SQL-portable
-      reference form). Byte-identical output — equality is pytest-pinned.
+    selection is O(len · w) per row and runs as an Arrow-batched
+    ``mapInPandas`` over (id, hash-array) rows — numpy sliding-window min
+    over position-encoded keys. Higher-order-function expressions are
+    interpreted (no whole-stage codegen), so a per-window slice/fold form
+    costs ~10 s at sf0.1 where the numpy kernel costs ~1 s. Fingerprints
+    dedup per row — ZERO shuffle end to end. The DuckDB oracle
+    (``winnow_oracle_sql``) is the reference form.
     """
     if k < 1 or w < 1:
         raise ValueError(f"k and w must be >= 1, got k={k}, w={w}")
-    if strategy not in ("pandas", "expr"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     from ..sources.tables import spread_scan
 
     t = F.trim(F.lower(F.col(text_col)))
@@ -424,34 +415,7 @@ def winnow_fingerprints(
         ),
     ).select(F.col(id_col), "__hs")
 
-    if strategy == "pandas":
-        return _winnow_select_pandas(prepared, id_col, w)
-
-    n = F.size(F.col("__hs"))
-    win_len = F.least(F.lit(w), n)
-    starts = F.sequence(F.lit(1), F.greatest(n - (w - 1), F.lit(1)))
-
-    def pick(j):
-        sl = F.slice(F.col("__hs"), j, win_len)
-        min_h = F.array_min(sl)
-        rel = F.array_max(
-            F.zip_with(
-                sl,
-                F.sequence(F.lit(1), F.size(sl)),
-                lambda h, idx: F.when(h == min_h, idx).otherwise(F.lit(0)),
-            )
-        )
-        return F.struct((j - 1 + rel).cast("bigint").alias("pos"), min_h.alias("fp"))
-
-    selected = F.array_distinct(F.transform(starts, pick))
-    return (
-        prepared.select(F.col(id_col), F.explode(selected).alias("__s"))
-        .select(
-            F.col(id_col),
-            F.col("__s.pos").alias("pos"),
-            F.col("__s.fp").alias("fingerprint"),
-        )
-    )
+    return _winnow_select_pandas(prepared, id_col, w)
 
 
 def _winnow_select_pandas(prepared: DataFrame, id_col: str, w: int) -> DataFrame:
@@ -837,15 +801,12 @@ def connected_components(
     cluster). Each round is 2 groupBy + 2 join shuffles on (node, node)
     pairs only — document bodies never enter the graph.
 
-    Scale notes:
-    - the edge list is ``localCheckpoint``-ed every round: iterative
-      DataFrame loops otherwise accumulate lineage and re-execute the
-      whole history each round (on a cluster, prefer
-      ``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()`` for
-      executor-loss resilience; localCheckpoint is the single-node form);
-    - convergence is detected by an O(1)-row checksum aggregate
-      (count + bit_xor of xxhash64(u, v) — overflow-free under ANSI mode
-      and reduction-order-independent), not by materializing a diff.
+    The rounds run on ``fixpoint.iterate`` with lazy pins and its
+    convergence checksum (an O(1)-row aggregate, not a materialized diff);
+    ``max_rounds`` caps them, and a graph that has not converged by then
+    raises instead of returning wrong labels. On a cluster, prefer
+    ``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()`` for
+    executor-loss resilience; localCheckpoint is the single-node form.
     """
     ua, ub = F.col(id_a), F.col(id_b)
     # canonical undirected edge set, oriented (hi, lo), no self loops/nulls
@@ -858,15 +819,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    def _checksum(e: DataFrame) -> tuple[int, int]:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    prev = _checksum(edges)
-    for _ in range(max_rounds):
+    def star_round(edges: DataFrame, _r: int) -> DataFrame:
         # -- large-star: both directions; larger neighbors link to the min
         nbr = edges.select("u", "v").unionAll(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -895,34 +848,15 @@ def connected_components(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionAll(m2.select(F.col("u"), F.col("m").alias("v")))
         )
-        edges = (
+        return (
             small.where(F.col("u") != F.col("v"))
-            .select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
+            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
             .distinct()
-            # lazy: the checksum aggregate right below is the materializing
-            # action, so each round pays ONE job (checkpoint + convergence
-            # check together) instead of two — on small edge sets the loop
-            # is job-overhead-bound, not data-bound
-            .localCheckpoint(eager=False)
         )
 
-        cur = _checksum(edges)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        # Exhausting max_rounds without the checksum stabilizing means the
-        # edge set never reached the star fixpoint — labels would be
-        # silently WRONG (some nodes still pointing at non-roots). Fail
-        # loudly; callers with adversarial graphs should raise max_rounds
-        # (convergence is O(log n) rounds, so 25 covers ~2^25 nodes).
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds; "
-            "raise max_rounds (rounds needed grow as O(log n))"
-        )
-
+    # convergence takes O(log n) rounds, so the default cap of 25 covers
+    # ~2^25 nodes
+    edges = iterate(edges, star_round, max_rounds, fixpoint=True)
     # fixpoint: every edge is (member, root-of-component)
     roots = edges.select(F.col("v").alias("node")).distinct()
     return (

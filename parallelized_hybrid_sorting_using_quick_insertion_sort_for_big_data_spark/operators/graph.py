@@ -37,7 +37,7 @@ At 100 TB: the Pregel shape. ``edges ⋈ outdeg`` materializes ONCE
 node-sized rank relation against it plus one groupBy(dst) shuffle —
 O(iters) shuffles of fixed-width bigint rows, never the payload.
 ``localCheckpoint`` per round cuts lineage so plan depth stays constant
-in the iteration count (same device as kmeans_fit / dedup components).
+in the iteration count (``fixpoint.iterate``).
 """
 
 from __future__ import annotations
@@ -45,9 +45,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .fixpoint import iterate
+
 SCALE = 10**12
 DAMP_NUM = 85
 DAMP_DEN = 100
+
+
+def _bigint_edges(edges: DataFrame) -> DataFrame:
+    """``edges(src, dst)`` with both columns cast to BIGINT (unpinned)."""
+    return edges.select(
+        F.col("src").cast("bigint").alias("src"), F.col("dst").cast("bigint").alias("dst")
+    )
+
+
+def _endpoints(e: DataFrame) -> DataFrame:
+    """The distinct src ∪ dst node set of ``e`` as ``(node)`` (unpinned)."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
 
 
 def pagerank(
@@ -65,36 +83,25 @@ def pagerank(
 
     The two scalars the driver computes (node count → BASE and the uniform
     initial rank) are O(1)-row aggregations, same budget class as the
-    components convergence checksum (operators/dedup.py) — everything else
-    stays distributed.
+    convergence checksum of ``fixpoint.iterate`` — everything else stays
+    distributed. The rounds run on ``iterate`` with eager pins.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     if not (0 < damp_num < damp_den):
         raise ValueError(f"need 0 < damp_num < damp_den, got {damp_num}/{damp_den}")
 
-    # r13: pin the normalized edge list ONCE before anything consumes it —
-    # the same up-front pin label_propagation and triangle_counts already
-    # carry. Unpinned, the `nodes` checkpoint and the `edges_deg` checkpoint
-    # each re-evaluated the caller's edge derivation (for the trade graph:
-    # the fact join + distinct) from the scan. Memory accounting at scale:
-    # this eagerly materializes the FULL normalized edge list to
-    # executor-local disk/memory for the whole iteration — edge-sized but
-    # fixed-width (16 B/edge), the standard Pregel working set; on a real
-    # cluster use spark.cleaner + DISK_ONLY-backed checkpoints if the edge
-    # list rivals executor storage.
-    e = edges.select(
-        F.col("src").cast("bigint").alias("src"), F.col("dst").cast("bigint").alias("dst")
-    ).localCheckpoint(eager=True)
-    # lazy: the n_nodes count right below is the materializing action, so
-    # the node set pays zero extra driver-blocking jobs (r14, guide §5 —
-    # the connected-components checksum device)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # Pin the normalized edge list ONCE before anything consumes it.
+    # Unpinned, the `nodes` checkpoint and the `edges_deg` checkpoint each
+    # re-evaluated the caller's edge derivation (for the trade graph: the
+    # fact join + distinct) from the scan. Memory accounting at scale: this
+    # materializes the FULL normalized edge list to executor-local
+    # disk/memory for the whole iteration — edge-sized but fixed-width
+    # (16 B/edge), the standard Pregel working set; on a real cluster use
+    # spark.cleaner + DISK_ONLY-backed checkpoints if the edge list rivals
+    # executor storage.
+    e = _bigint_edges(edges).localCheckpoint(eager=True)
+    nodes = _endpoints(e).localCheckpoint(eager=False)
     # one O(1)-row driver scalar: the node count (feeds the two literals)
     n_nodes = nodes.count()
     if n_nodes == 0:
@@ -107,32 +114,22 @@ def pagerank(
     # reuses this checkpointed, already-shuffled frame
     edges_deg = e.join(outdeg, "src").localCheckpoint(eager=True)
 
-    ranks = nodes.withColumn("rank", F.lit(init_rank).cast("bigint"))
-    for _ in range(iters):
+    def step(ranks: DataFrame, _r: int) -> DataFrame:
         contribs = (
             edges_deg.join(ranks.withColumnRenamed("node", "src"), "src")
             .select("dst", F.expr("rank div outdeg").alias("contrib"))
             .groupBy("dst")
             .agg(F.sum("contrib").alias("s"))
         )
-        ranks = (
-            nodes.join(contribs.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(f"({damp_num} * coalesce(s, 0L)) div {damp_den}")
-                )
-                .cast("bigint")
-                .alias("rank"),
-            )
-            # r14 measured NEGATIVE: lazy per-round checkpoints (the kcore/
-            # LPA conversion) were tried here and were consistently ~15-25%
-            # SLOWER in two same-session interleaved A/Bs (3.36→4.22 and
-            # 4.70→5.72 medians) — the per-round eager pin stays.
-            .localCheckpoint(eager=True)
+        return nodes.join(contribs.withColumnRenamed("dst", "node"), "node", "left").select(
+            "node",
+            (F.lit(base) + F.expr(f"({damp_num} * coalesce(s, 0L)) div {damp_den}"))
+            .cast("bigint")
+            .alias("rank"),
         )
-    return ranks
+
+    ranks = nodes.withColumn("rank", F.lit(init_rank).cast("bigint"))
+    return iterate(ranks, step, iters, eager=True)
 
 
 def pagerank_oracle_sql(
@@ -227,46 +224,25 @@ def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
     At 100 TB: the same Pregel shape as :func:`pagerank` — per round ONE
     join of the node-sized label relation against the (checkpointed) edge
     list and one (dst, label) count shuffle; lineage cut per round keeps
-    the plan flat. Community detection is the corpus-curation complement
-    to connected components: components finds the dedup clusters, LPA
-    finds the denser-than-chance neighborhoods (e.g. template families in
-    a link graph)."""
+    the plan flat (``fixpoint.iterate``, lazy pins). Community detection
+    is the corpus-curation complement to connected components: components
+    finds the dedup clusters, LPA finds the denser-than-chance
+    neighborhoods (e.g. template families in a link graph)."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    e = edges.select(
-        F.col("src").cast("bigint").alias("src"), F.col("dst").cast("bigint").alias("dst")
-    ).localCheckpoint(eager=True)
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for _ in range(iters):
-        nbr = e.join(labels.withColumnRenamed("node", "src"), "src").select(
-            "dst", "label"
-        )
+    e = _bigint_edges(edges).localCheckpoint(eager=True)
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
+        nbr = e.join(labels.withColumnRenamed("node", "src"), "src").select("dst", "label")
         cnt = nbr.groupBy("dst", "label").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
+        best = F.struct(F.col("c"), (-F.col("label")).alias("nl"), F.col("label").alias("l"))
+        return (
             cnt.groupBy("dst")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("c"),
-                        (-F.col("label")).alias("nl"),
-                        F.col("label").alias("l"),
-                    )
-                ).alias("b")
-            )
+            .agg(F.max(best).alias("b"))
             .select(F.col("dst").alias("node"), F.col("b.l").alias("label"))
-            # r14 (guide §5): lazy — plan depth is cut at build time either
-            # way; materialization joins the caller's single action instead
-            # of paying one driver-blocking job per round. Each round's
-            # labels feed exactly one consumer (the next round's nbr join),
-            # so laziness cannot duplicate work.
-            .localCheckpoint(eager=False)
         )
-    return labels
+
+    return iterate(_endpoints(e).withColumn("label", F.col("node")), step, iters)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -424,9 +400,7 @@ def bfs_levels(edges: DataFrame, seeds: DataFrame, max_level: int = 4) -> DataFr
     re-shuffles the payload, only node ids."""
     if max_level < 1:
         raise ValueError(f"max_level must be >= 1, got {max_level}")
-    e = edges.select(
-        F.col("src").cast("bigint").alias("src"), F.col("dst").cast("bigint").alias("dst")
-    ).localCheckpoint(eager=True)
+    e = _bigint_edges(edges).localCheckpoint(eager=True)
     frontier = (
         seeds.select(F.col("node").cast("bigint").alias("node"))
         .distinct()
@@ -497,28 +471,16 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
     function of (edges, k, rounds) so the unrolled DuckDB oracle replays
     every peel. Callers pick rounds ≥ the graph's peel depth (test-scale
     convergence is pytest-pinned; pathological chains need O(n) peels —
-    at scale you run until a cheap O(1)-row fixed-point check passes,
-    same device as connected components' convergence checksum).
+    at scale you run until a cheap O(1)-row fixed-point check passes:
+    ``fixpoint.iterate(..., fixpoint=True)``'s convergence checksum).
 
     At 100 TB: per round one degree aggregation plus two node-keyed
     semi-joins — fixed-width bigint relations, monotonically shrinking;
-    lineage cut per round (pagerank device).
-
-    r14 (guide §5): every per-round checkpoint is LAZY. The cut still
-    happens at build time (the returned frame scans a checkpoint RDD, so
-    plan depth stays constant in ``rounds``), but materialization moves
-    into the caller's action instead of one driver-blocking job per peel.
-    Each round's ``live`` has two consumers (degree agg + semi-join); the
-    checkpoint RDD's cache dedups their compute after the first partition
-    materializes, and a concurrent-stage overlap can at worst re-run one
-    round's reduce-side work — bounded, and strictly cheaper than the
-    per-round blocking job it replaces."""
+    the peels run on ``fixpoint.iterate`` with lazy pins."""
     if k < 1 or rounds < 1:
         raise ValueError(f"k >= 1 and rounds >= 1 required, got k={k}, rounds={rounds}")
-    live = edges.select(
-        F.col("src").cast("bigint").alias("src"), F.col("dst").cast("bigint").alias("dst")
-    ).localCheckpoint(eager=False)
-    for _ in range(rounds):
+
+    def peel(live: DataFrame, _r: int) -> DataFrame:
         # NOTE (r14, measured negative): an explicit repartition("src")
         # shared by the degree agg and the src-side semi-join was tried to
         # merge their exchanges — but AQE broadcasts `keep` at small keep
@@ -532,12 +494,13 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
             .where(F.col("__d") >= k)
             .select(F.col("src").alias("node"))
         )
-        live = (
+        return (
             live.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
             .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
         )
+
+    live = iterate(_bigint_edges(edges).localCheckpoint(eager=False), peel, rounds)
     return live.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )

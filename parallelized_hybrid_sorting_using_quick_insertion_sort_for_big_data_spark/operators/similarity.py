@@ -23,6 +23,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .fixpoint import iterate
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
@@ -712,21 +714,13 @@ def kmeans_fit(
     k-means-on-Spark topology. Cells that lose all members drop out (both
     engines aggregate only over occupied cells).
 
-    Each round's codebook is pinned with a LAZY ``localCheckpoint`` (the
-    same lineage cut ``connected_components`` applies to its edge set):
-    without it the logical plan nests one full assign+update under the
-    next, growing the plan — and Catalyst's analysis time — geometrically
-    with ``iters``. Lazy (r13, the pq_fit lesson) instead of eager: the
-    plan truncation is identical, but each round materializes inside the
-    next consumer's own job (the broadcast collect that ships the codebook)
-    rather than paying a separate driver-blocking checkpoint job per round.
-    The residue is ``iters`` checkpointed RDDs of k rows
-    each (kilobytes) that stay registered for the session under classic
-    PySpark (py4j never detaches the JVM dataset) — the right trade for a
-    codebook; long-running apps fitting many models should checkpoint to a
-    checkpoint dir instead. The returned codebook's plan is a
-    constant-size RDD scan regardless of ``iters`` (plan-size gate in
-    test_plans.py)."""
+    The rounds run on ``fixpoint.iterate`` with lazy pins, so the returned
+    codebook's plan is a constant-size RDD scan regardless of ``iters``
+    (plan-size gate in test_plans.py). The residue is ``iters``
+    checkpointed RDDs of k rows each (kilobytes) that stay registered for
+    the session under classic PySpark (py4j never detaches the JVM
+    dataset) — the right trade for a codebook; long-running apps fitting
+    many models should checkpoint to a checkpoint dir instead."""
     from ..sources.tables import spread_scan
 
     # each Lloyd round evaluates k cosine folds per corpus row map-side —
@@ -735,12 +729,12 @@ def kmeans_fit(
     cents = df.where(F.col(id_col) < k).select(
         F.col(id_col).alias("cell"), _as_double(F.col(vec_col)).alias("centroid")
     )
-    for _ in range(iters):
+
+    def lloyd(cents: DataFrame, _r: int) -> DataFrame:
         assigned = ivf_assign(df, cents, id_col, vec_col, round_digits)
-        cents = centroid_vectors(
-            assigned, label_col="cell", vec_col=vec_col
-        ).localCheckpoint(eager=False)
-    return cents
+        return centroid_vectors(assigned, label_col="cell", vec_col=vec_col)
+
+    return iterate(cents, lloyd, iters)
 
 
 def kmeans_ctes_sql(
@@ -1021,15 +1015,15 @@ def pq_fit(
     round_digits: int = 9,
     fit_sample: int | None = None,
     fit_salt: str = "pqfit",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Train the m per-subspace PQ codebooks (deterministic L2 Lloyd,
     init = the k lowest-id subvectors) as ONE (sub, cell, centroid)
     relation. Subspaces train concurrently inside shared jobs: each Lloyd
     round is one corpus pass (broadcast codebook join + argmin) plus one
     (sub, cell, dim) partial-sum shuffle — m never multiplies the job
-    count. The codebook (m·k rows) is pinned with localCheckpoint per
-    round so downstream plans stay constant-size regardless of ``iters``.
+    count. The rounds run on ``fixpoint.iterate`` with lazy pins of the
+    codebook (m·k rows), so downstream plans stay constant-size regardless
+    of ``iters`` and the codebook's consumers share its last checkpoint.
 
     ``fit_sample`` (r11, VERDICT r10 item 2): train each Lloyd round on
     the deterministic md5-coin sample ``hash_bucket(id) < fit_sample``
@@ -1039,16 +1033,7 @@ def pq_fit(
     the FULL corpus (engine-trivial either way); only the assign/update
     rounds shrink. This is how a 100 TB PQ deployment actually fits:
     codebooks converge on a few million training vectors — a full-corpus
-    Lloyd pass per round is pure waste at scale.
-
-    ``checkpoint=False`` (r11) returns the codebook as a LAZY plan instead
-    of eagerly pinning each round: zero driver-blocking jobs at build time,
-    so independent fits (e.g. a design sweep's 4 configs) all execute
-    inside ONE downstream action with stage-level parallelism. The
-    downstream plan then embeds ``iters`` nested rounds and each consumer
-    subtree re-derives the codebook — right when iters is small and the
-    training relation is a sample; keep the default (eager pin) for deep
-    fits or when the codebook feeds many consumers."""
+    Lloyd pass per round is pure waste at scale."""
     if dim % m:
         raise ValueError("dim must divide evenly into m subspaces")
     dl = dim // m
@@ -1059,15 +1044,18 @@ def pq_fit(
     train = sub
     if fit_sample is not None:
         train = sub.where(hash_bucket(F.col(id_col), fit_salt) < fit_sample)
+    # every Lloyd round re-reads the training relation: one pin lets the
+    # rounds share it instead of re-running the scan, the explode and the
+    # spread_scan exchange once per round
+    train = train.localCheckpoint(eager=False)
     cents = sub.where(F.col(id_col) < k).select(
         "sub", F.col(id_col).alias("cell"), F.col("__sv").alias("centroid")
     )
-    for _ in range(iters):
-        assigned = _pq_assign(train, cents, id_col, round_digits)
-        cents = _pq_update(assigned)
-        if checkpoint:
-            cents = cents.localCheckpoint(eager=True)
-    return cents
+
+    def lloyd(cents: DataFrame, _r: int) -> DataFrame:
+        return _pq_update(_pq_assign(train, cents, id_col, round_digits))
+
+    return iterate(cents, lloyd, iters)
 
 
 def pq_codes(
@@ -1120,7 +1108,6 @@ def pq_adc_topk(
     vec_col: str = "embedding",
     round_digits: int = 9,
     fit_sample: int | None = None,
-    checkpoint: bool = True,
     books: DataFrame | None = None,
 ) -> DataFrame:
     """PQ serving via asymmetric distance computation (ADC): the query
@@ -1139,15 +1126,11 @@ def pq_adc_topk(
     ``fit_sample``: md5-coin training sample for the codebook fit (see
     :func:`pq_fit`); the final code assignment and the ADC scan always
     cover the full corpus. ``books``: a pre-built codebook relation
-    (``pq_fit`` output) — the codebook feeds TWO consumers here (the code
-    assignment and the LUT), so callers composing several configs can
-    hand in ``pq_fit(..., checkpoint=False).localCheckpoint(eager=False)``:
-    the lazy checkpoint materializes once inside the first action and both
-    consumers reuse it, with no driver-blocking job at build time."""
+    (``pq_fit`` output); it feeds TWO consumers here (the code assignment
+    and the LUT), which share its last round's checkpoint."""
     if books is None:
         books = pq_fit(
-            df, m, k, iters, dim, id_col, vec_col, round_digits,
-            fit_sample=fit_sample, checkpoint=checkpoint,
+            df, m, k, iters, dim, id_col, vec_col, round_digits, fit_sample=fit_sample
         )
     codes = pq_codes(
         df, m, k, iters, dim, id_col, vec_col, round_digits, books=books

@@ -567,22 +567,7 @@ def mm_frame_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures leave the map side as 2 BIGINTs/frame (payload never
     shuffles); see operators/multimodal.py ahash_* for the band-join
     notes."""
-    sigs = (
-        _ahash_planted_sigs(spark, sf_dir)
-        .select(
-            (F.col("doc_id") * F.lit(M._PACK) + F.col("frame_no")).alias("k"),
-            "sig_hi",
-            "sig_lo",
-        )
-        .localCheckpoint(eager=True)
-    )
-    # pinned: consumed twice (members + reps / star + reps), and each
-    # unpinned use re-runs the distinct-signature agg over the sig relation
-    groups = (
-        sigs.groupBy("sig_hi", "sig_lo")
-        .agg(F.min("k").alias("rep"))
-        .localCheckpoint(eager=True)
-    )
+    sigs, groups, reps = _sig_groups(spark, sf_dir)
     members = sigs.join(groups, ["sig_hi", "sig_lo"]).select("rep", "k")
     # (a) intra-group ham=0 pairs, ordered by the packed key
     intra = (
@@ -592,12 +577,6 @@ def mm_frame_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("__ka", "__kb", F.lit(0).cast("bigint").alias("ham"))
     )
     # (b) band join over one rep per distinct signature
-    reps = groups.select(
-        F.expr(f"rep div {M._PACK}").cast("bigint").alias("doc_id"),
-        F.pmod(F.col("rep"), F.lit(M._PACK)).cast("bigint").alias("frame_no"),
-        "sig_hi",
-        "sig_lo",
-    )
     rep_pairs = M.ahash_near_dup_pairs(reps).select(
         (F.col("doc_a") * F.lit(M._PACK) + F.col("frame_a")).alias("__ra"),
         (F.col("doc_b") * F.lit(M._PACK) + F.col("frame_b")).alias("__rb"),
@@ -622,6 +601,37 @@ def mm_frame_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("__kb"), F.lit(M._PACK)).cast("bigint").alias("frame_b"),
         "ham",
     )
+
+
+def _sig_groups(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Exact-signature groups of the planted frames: ``sigs`` (k, sig_hi,
+    sig_lo) with k the packed (doc_id, frame_no) key, ``groups`` (sig_hi,
+    sig_lo, rep) with rep the min k per distinct signature, and ``reps``
+    (doc_id, frame_no, sig_hi, sig_lo), one representative frame per
+    distinct signature. ``sigs`` and ``groups`` are pinned: each is
+    consumed twice, and every unpinned use re-runs the signature pass or
+    the distinct-signature agg."""
+    sigs = (
+        _ahash_planted_sigs(spark, sf_dir)
+        .select(
+            (F.col("doc_id") * F.lit(M._PACK) + F.col("frame_no")).alias("k"),
+            "sig_hi",
+            "sig_lo",
+        )
+        .localCheckpoint(eager=True)
+    )
+    groups = (
+        sigs.groupBy("sig_hi", "sig_lo")
+        .agg(F.min("k").alias("rep"))
+        .localCheckpoint(eager=True)
+    )
+    reps = groups.select(
+        F.expr(f"rep div {M._PACK}").cast("bigint").alias("doc_id"),
+        F.pmod(F.col("rep"), F.lit(M._PACK)).cast("bigint").alias("frame_no"),
+        "sig_hi",
+        "sig_lo",
+    )
+    return sigs, groups, reps
 
 
 def _ahash_planted_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,28 +710,11 @@ def mm_frame_dedup_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edges — and the degenerate-signature hot bucket the band join's
     # docstring warns about collapses to ONE row per band. This is the
     # 100 TB shape: exact-dup contraction before the near-dup join.
-    sigs = _ahash_planted_sigs(spark, sf_dir).select(
-        (F.col("doc_id") * F.lit(M._PACK) + F.col("frame_no")).alias("k"),
-        "sig_hi",
-        "sig_lo",
-    ).localCheckpoint(eager=True)
-    # pinned: consumed twice (members + reps / star + reps), and each
-    # unpinned use re-runs the distinct-signature agg over the sig relation
-    groups = (
-        sigs.groupBy("sig_hi", "sig_lo")
-        .agg(F.min("k").alias("rep"))
-        .localCheckpoint(eager=True)
-    )
+    sigs, groups, reps = _sig_groups(spark, sf_dir)
     star = (
         sigs.join(groups, ["sig_hi", "sig_lo"])
         .where(F.col("k") != F.col("rep"))
         .select(F.col("k").alias("id_a"), F.col("rep").alias("id_b"))
-    )
-    reps = groups.select(
-        F.expr(f"rep div {M._PACK}").cast("bigint").alias("doc_id"),
-        F.pmod(F.col("rep"), F.lit(M._PACK)).cast("bigint").alias("frame_no"),
-        "sig_hi",
-        "sig_lo",
     )
     cross = M.ahash_near_dup_pairs(reps).select(
         (F.col("doc_a") * F.lit(M._PACK) + F.col("frame_a")).alias("id_a"),

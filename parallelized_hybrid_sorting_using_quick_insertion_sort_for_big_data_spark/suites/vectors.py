@@ -712,10 +712,7 @@ def vec_pq_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The exact top-10 is shared by all four legs; without the pin each
     # leg's join would re-run the brute-force ranking (lazy plans) — 4x the
-    # most expensive stage for a 10-row relation. r13: the pin is LAZY so
-    # the exact ranking materializes inside the same single job as the four
-    # fits + ADC rankings (one driver-blocking job for the whole sweep)
-    # instead of paying its own job boundary first.
+    # most expensive stage for a 10-row relation.
     exact = (
         similarity.brute_force_topk(qdf, emb, k=_PQ_RECALL_K)
         .select("vec_id")
@@ -723,22 +720,9 @@ def vec_pq_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for m, k in _PQ_SWEEP:
-        # checkpoint=False + a LAZY localCheckpoint on the codebook: no
-        # eager per-round pins, so all four configs' fits+ADC rankings
-        # execute inside the ONE materializing job with stage-level
-        # parallelism (8 sequential driver-blocking jobs otherwise — the
-        # r10 cell's 11.7 s was mostly that serial chain, not data
-        # volume); the lazy checkpoint materializes each config's fit
-        # once in-job and both its consumers (code assignment + LUT)
-        # reuse it instead of re-deriving the Lloyd rounds. Measured
-        # 11.7 -> 7.6 s with a tight spread.
-        books = similarity.pq_fit(
-            emb, m=m, k=k, iters=_PQ_ITERS, dim=_PQ_DIM,
-            fit_sample=_PQ_FIT_SAMPLE, checkpoint=False,
-        ).localCheckpoint(eager=False)
         adc = similarity.pq_adc_topk(
             emb, query_id=7, m=m, k=k, iters=_PQ_ITERS, dim=_PQ_DIM,
-            topk=_PQ_RECALL_K, books=books,
+            topk=_PQ_RECALL_K, fit_sample=_PQ_FIT_SAMPLE,
         ).select("vec_id")
         leg = (
             exact.join(adc, ["vec_id"])

@@ -100,21 +100,32 @@ def test_empty_edges_yields_empty_ranks(spark):
     assert [f.name for f in out.schema.fields] == ["node", "rank"]
 
 
-def test_lineage_flat_at_high_iters(spark):
-    """Every round localCheckpoints the node-sized rank relation, so the
-    returned plan is a constant-size RDD scan regardless of iteration
-    count (kmeans_fit device) — without the cut, 10 rounds nest 10
-    join+agg layers and the plan grows geometrically."""
+@pytest.mark.parametrize(
+    "run, result_is_state",
+    [
+        (lambda e: graph.pagerank(e, iters=10), True),
+        (lambda e: graph.label_propagation(e, iters=10), True),
+        (lambda e: graph.kcore(e, k=2, rounds=10), False),
+    ],
+    ids=["pagerank", "label_propagation", "kcore"],
+)
+def test_lineage_flat_at_high_iters(spark, run, result_is_state):
+    """Every round localCheckpoints the carried state (fixpoint.iterate),
+    so the returned plan stays constant-size regardless of round count —
+    without the cut, 10 rounds nest 10 join+agg layers and the plan grows
+    geometrically. kcore returns one degree aggregate over its pinned edge
+    state; pagerank and LPA return the pinned state itself."""
     from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.plans import (
         inspect as PI,
     )
 
-    edges = [(i, (i + 1) % 12) for i in range(12)]
-    out = graph.pagerank(_edges_df(spark, edges), iters=10)
+    ring = [(i, (i + 1) % 12) for i in range(12)]
+    out = run(_edges_df(spark, ring + [(d, s) for s, d in ring]))
     plan = PI.formatted_plan(out)
     assert len(plan) < 4000, f"plan not flattened: {len(plan)} chars"
     assert "Scan ExistingRDD" in plan
-    assert "Join" not in plan and "HashAggregate" not in plan
+    if result_is_state:
+        assert "Join" not in plan and "HashAggregate" not in plan
 
 
 def test_degree_stats_counts(spark):

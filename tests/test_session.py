@@ -80,12 +80,27 @@ def test_shipped_zip_is_removed_at_exit(tmp_path):
     assert not list(tmp_path.glob("phsqis_*"))
 
 
+# Event-log job counts per rep at sf0.001, the gate for a change in a
+# cell's job structure. The iterative cells run on fixpoint.iterate; their
+# counts are stable across runs (vec_pq_codes: lazy per-round pins plus a
+# pinned training relation, 15 jobs where eager per-round pins ran 18).
+PROFILED_JOBS = {
+    "sort_seeded_ints": 7,
+    "graph_kcore": 32,
+    "graph_pagerank_trade": 41,
+    "graph_lpa_communities": 25,
+    "vec_kmeans_centroids": 18,
+    "text_bpe_merges": 29,
+    "vec_pq_codes": 15,
+}
+
+
 def test_profiler_counts_jobs_per_rep_and_cleans_up(tmp_path):
     """scripts/profile_registry.py prints one JSON line per query with the
-    event-log job count of the warm-up and of each timed rep (the seeded
-    sort runs 7 jobs: the gate for a change in its job structure), writes
-    the formatted plan, and leaves no ``phsqis_*`` entry (its event-log dir,
-    the package zip) in its temp dir."""
+    event-log job count of the warm-up and of each timed rep (pinned in
+    ``PROFILED_JOBS``), writes the formatted plan, and leaves no
+    ``phsqis_*`` entry (its event-log dir, the package zip) in its temp
+    dir."""
     import json
     import os
     import subprocess
@@ -97,16 +112,16 @@ def test_profiler_counts_jobs_per_rep_and_cleans_up(tmp_path):
     plans = tmp_path / "plans"
     run = subprocess.run(
         [sys.executable, "scripts/profile_registry.py", "--sf", SF_DIR, "--reps", "1",
-         "--plans", str(plans), "sort_seeded_ints"],
+         "--plans", str(plans), *PROFILED_JOBS],
         cwd=root, env=dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g"),
         capture_output=True, text=True, timeout=300,
     )
     assert run.returncode == 0, run.stderr[-2000:]
-    lines = [ln for ln in run.stdout.splitlines() if ln.startswith("{")]
-    assert len(lines) == 1, run.stdout
-    rec = json.loads(lines[0])
-    assert rec["query"] == "sort_seeded_ints"
-    assert [r["jobs"] for r in (rec["warmup"], *rec["reps"])] == [7, 7], rec
+    recs = [json.loads(ln) for ln in run.stdout.splitlines() if ln.startswith("{")]
+    assert [r["query"] for r in recs] == list(PROFILED_JOBS), run.stdout
+    for rec in recs:
+        want = PROFILED_JOBS[rec["query"]]
+        assert [r["jobs"] for r in (rec["warmup"], *rec["reps"])] == [want, want], rec
     assert "AdaptiveSparkPlan" in (plans / "sort_seeded_ints.txt").read_text()
     assert not list(tmp_path.glob("phsqis_*"))
 

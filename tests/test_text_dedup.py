@@ -455,19 +455,9 @@ def test_winnow_known_values_and_coverage(spark):
         assert all(b - a <= w for a, b in zip(poss, poss[1:]))
 
 
-def test_winnow_strategies_identical(spark, docs):
-    """The numpy mapInPandas selection and the pure-expression form must be
-    byte-identical — same hashes, same rightmost-min rule, same dedup."""
-    a = {tuple(r) for r in dedup.winnow_fingerprints(docs, strategy="expr").collect()}
-    b = {tuple(r) for r in dedup.winnow_fingerprints(docs, strategy="pandas").collect()}
-    assert a == b and len(a) > 0
-    with pytest.raises(ValueError):
-        dedup.winnow_fingerprints(docs, strategy="nope")
-
-
 def test_winnow_zero_shuffle_plan(spark):
     """Winnowing is pure per-row array work: the per-doc dedup happens in
-    array_distinct, never a shuffle. The ONE allowed exchange is
+    the numpy window kernel, never a shuffle. The ONE allowed exchange is
     spread_scan's conditional round-robin widening of the single-partition
     local corpus file (r07) — absent on an already-parallel scan, i.e. at
     scale — so the algorithm itself stays exchange-free: an already-wide
