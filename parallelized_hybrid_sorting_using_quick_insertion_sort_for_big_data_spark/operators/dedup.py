@@ -12,8 +12,9 @@ Scale design (the whole point of these at 100 TB):
   equi-joins on (band, band-hash) — candidate count is controlled by the
   banding parameters, independent of corpus size;
 - SimHash reduces each doc to one 64-bit signature; near-dup = small
-  Hamming distance, bucketed by the max_hamming + 1 pigeonhole pieces for
-  join-based candidate generation;
+  Hamming distance, found by ``hamming_pairs``: a self-join on the keys of
+  the max_hamming + 1 pigeonhole pieces, then an exact popcount. The
+  multimodal aHash frame queries run the same join;
 - substring dedup (``duplicate_spans``, ``span_dedup_rewrite``) shares one
   L-token window relation keyed by ``xxhash64`` of the token slice
   (``_span_windows``): 8 bytes per window occurrence in the shuffle,
@@ -548,11 +549,12 @@ FROM lists
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash over word tokens, carried as TWO 32-bit halves
-    (sim_hi, sim_lo) of the md5-prefix token hash, so every bit is
+    (sig_hi, sig_lo) of the md5-prefix token hash, so every bit is
     reproducible in DuckDB (no signed-64 assembly; both halves stay
     non-negative). Bit b is the per-bit majority vote of the doc's token
     hashes: set iff more than half of its n tokens have it, ``2*ones > n``
     (the ±1 vote ``sum(±1) > 0`` counted as one ``count`` plus 64 bit-sums).
+    Near-dup pairs are ``hamming_pairs(simhash(df), id_col, d)``.
     """
     from ..sources.tables import spread_scan
 
@@ -582,11 +584,16 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
         return acc
 
     return votes.select(
-        F.col(id_col), assemble("h").alias("sim_hi"), assemble("l").alias("sim_lo")
+        F.col(id_col), assemble("h").alias("sig_hi"), assemble("l").alias("sig_lo")
     )
 
 
-def _simhash_piece_bounds(chunks: int) -> list[tuple[int, int]]:
+# ---------------------------------------------------------------------------
+# Hamming pair join (SimHash, aHash)
+# ---------------------------------------------------------------------------
+
+
+def _hamming_piece_bounds(chunks: int) -> list[tuple[int, int]]:
     """Split 64 bits into ``chunks`` contiguous pieces as evenly as possible
     (the first ``64 % chunks`` pieces get the extra bit). Returns
     (shift, width) per piece."""
@@ -599,13 +606,13 @@ def _simhash_piece_bounds(chunks: int) -> list[tuple[int, int]]:
     return bounds
 
 
-def _simhash_piece_keys(max_hamming: int) -> list[tuple[int, list[tuple[str, int, int, int]]]]:
+def _hamming_piece_keys(max_hamming: int) -> list[tuple[int, list[tuple[str, int, int, int]]]]:
     """The complete pigeonhole split of the two-half signature (Manku et
     al., WWW'07 "Detecting near-duplicates for web crawling"): max_hamming
     differing bits corrupt at most max_hamming of ``max_hamming + 1``
     pieces, so every pair within the bound agrees on at least one.
 
-    Bit b < 32 is sim_lo bit b; bit b >= 32 is sim_hi bit b - 32. Each
+    Bit b < 32 is sig_lo bit b; bit b >= 32 is sig_hi bit b - 32. Each
     piece is (tag, terms), and its join key is ``tag`` OR-ed with every
     ``((half >> shift) & mask) << lshift`` term; only the piece that
     crosses bit 32 has two terms. ``tag`` = piece index << 32 keeps the
@@ -620,35 +627,41 @@ def _simhash_piece_keys(max_hamming: int) -> list[tuple[int, list[tuple[str, int
             "no complete split into max_hamming + 1 pieces"
         )
     keys = []
-    for ci, (lo_bit, width) in enumerate(_simhash_piece_bounds(max_hamming + 1)):
+    for ci, (lo_bit, width) in enumerate(_hamming_piece_bounds(max_hamming + 1)):
         end = lo_bit + width
         terms = []
         if lo_bit < 32:
-            terms.append(("sim_lo", lo_bit, (1 << (min(end, 32) - lo_bit)) - 1, 0))
+            terms.append(("sig_lo", lo_bit, (1 << (min(end, 32) - lo_bit)) - 1, 0))
         if end > 32:
             start = max(lo_bit, 32)
-            terms.append(("sim_hi", start - 32, (1 << (end - start)) - 1, start - lo_bit))
+            terms.append(("sig_hi", start - 32, (1 << (end - start)) - 1, start - lo_bit))
         keys.append((ci << 32, terms))
     return keys
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming, every pair
-    found: candidates come from an equi-join on the keys of the
-    max_hamming + 1 pigeonhole pieces (:func:`_simhash_piece_keys`), then
-    hamming = bit_count(hi⊕hi) + bit_count(lo⊕lo) filters them. The DuckDB
-    twin is :func:`simhash_pairs_oracle_sql`.
+def hamming_pairs(sigs: DataFrame, id_col: str, max_hamming: int) -> DataFrame:
+    """Every pair of ``(id_col, sig_hi, sig_lo)`` rows whose 64-bit
+    signatures differ in at most ``max_hamming`` bits, as ``(id_a, id_b,
+    hamming)`` with ``id_a < id_b``. Each half is a non-negative 32-bit
+    value; which bit is called which does not change a Hamming distance,
+    so any 64-bit layout works (SimHash's :func:`simhash`, aHash's
+    ``multimodal.ahash_sigs_from_frames``).
+
+    Candidates come from a self-join on the keys of the max_hamming + 1
+    pigeonhole pieces (:func:`_hamming_piece_keys`), so no pair within the
+    bound is missed; ``distinct`` drops pairs that meet on several pieces
+    and hamming = bit_count(hi⊕hi) + bit_count(lo⊕lo) keeps the true ones.
+    The DuckDB twin of the SimHash form is :func:`simhash_pairs_oracle_sql`.
 
     Scale note: candidate volume per piece bucket is ~n²/2^width, so loose
     thresholds (max_hamming ≳ 12 of 64) force narrow pieces and drift
-    toward quadratic — keep max_hamming small at corpus scale."""
-    piece_keys = _simhash_piece_keys(max_hamming)
-    sh = simhash(df, text_col, id_col)
+    toward quadratic — keep max_hamming small at corpus scale. Rows with
+    one degenerate signature (constant payloads) share every bucket:
+    contract exact-signature duplicates first, as the multimodal frame
+    queries do."""
+    from pyspark.storagelevel import StorageLevel
+
+    piece_keys = _hamming_piece_keys(max_hamming)
 
     def key(tag, terms):
         acc = F.lit(tag).cast("long")
@@ -658,25 +671,21 @@ def simhash_pairs(
             )
         return acc
 
-    pieces = sh.select(
+    # both join sides read the pieces: persist so the signature pipeline
+    # executes once
+    pieces = sigs.select(
         F.col(id_col),
-        "sim_hi",
-        "sim_lo",
+        "sig_hi",
+        "sig_lo",
         F.explode(F.array(*[key(tag, terms) for tag, terms in piece_keys])).alias("key"),
-    )
-
-    # both join sides read the pieces: persist so the token → signature
-    # pipeline executes once
-    from pyspark.storagelevel import StorageLevel
-
-    pieces = pieces.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     lhs = pieces.select(
-        F.col(id_col).alias("id_a"), F.col("sim_hi").alias("hi_a"),
-        F.col("sim_lo").alias("lo_a"), "key",
+        F.col(id_col).alias("id_a"), F.col("sig_hi").alias("hi_a"),
+        F.col("sig_lo").alias("lo_a"), "key",
     )
     rhs = pieces.select(
-        F.col(id_col).alias("id_b"), F.col("sim_hi").alias("hi_b"),
-        F.col("sim_lo").alias("lo_b"), "key",
+        F.col(id_col).alias("id_b"), F.col("sig_hi").alias("hi_b"),
+        F.col("sig_lo").alias("lo_b"), "key",
     )
     cand = (
         lhs.join(rhs, "key")
@@ -701,8 +710,9 @@ def simhash_pairs_oracle_sql(
     max_hamming: int = 8,
     token_re: str = "[a-z0-9]+",
 ) -> str:
-    """DuckDB SQL reproducing :func:`simhash_pairs` exactly — votes and
-    pieces generated from the same bit layout, so the two cannot drift."""
+    """DuckDB SQL reproducing ``hamming_pairs(simhash(df), id_col,
+    max_hamming)`` exactly — votes and pieces generated from the same bit
+    layout, so the two cannot drift."""
     votes = ",\n         ".join(
         f"sum(({part} >> {b}) & 1) AS v{n}{b}"
         for part, n in (("lo", "l"), ("hi", "h"))
@@ -715,9 +725,9 @@ def simhash_pairs_oracle_sql(
         )
 
     # UBIGINT and `*` for `<<`: the lone piece of max_hamming = 0 moves
-    # sim_hi into bit 63, which DuckDB's signed and unsigned `<<` both reject
+    # sig_hi into bit 63, which DuckDB's signed and unsigned `<<` both reject
     piece_selects = "\n  UNION ALL\n  ".join(
-        f"SELECT {id_col}, sim_hi, sim_lo, "
+        f"SELECT {id_col}, sig_hi, sig_lo, "
         + " | ".join(
             [f"CAST({tag} AS UBIGINT)"]
             + [
@@ -726,7 +736,7 @@ def simhash_pairs_oracle_sql(
             ]
         )
         + " AS key FROM sig"
-        for tag, terms in _simhash_piece_keys(max_hamming)
+        for tag, terms in _hamming_piece_keys(max_hamming)
     )
     return f"""
 WITH tok AS (
@@ -745,8 +755,8 @@ v AS (SELECT {id_col}, count(*) AS n,
       FROM h GROUP BY {id_col}),
 sig AS (
   SELECT {id_col},
-         CAST({assemble('h')} AS BIGINT) AS sim_hi,
-         CAST({assemble('l')} AS BIGINT) AS sim_lo
+         CAST({assemble('h')} AS BIGINT) AS sig_hi,
+         CAST({assemble('l')} AS BIGINT) AS sig_lo
   FROM v
 ),
 pieces AS (
@@ -754,7 +764,7 @@ pieces AS (
 ),
 cand AS (
   SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b,
-         a.sim_hi AS hi_a, a.sim_lo AS lo_a, b.sim_hi AS hi_b, b.sim_lo AS lo_b
+         a.sig_hi AS hi_a, a.sig_lo AS lo_a, b.sig_hi AS hi_b, b.sig_lo AS lo_b
   FROM pieces a
   JOIN pieces b ON a.key = b.key AND a.{id_col} < b.{id_col}
 )
@@ -1425,8 +1435,8 @@ def duplicate_spans(
 
     The tokenized relation is pinned eagerly: the window relation feeds
     both the frequency agg and the position join, and without the pin
-    each side re-runs tokenization + windowing from the raw text (the
-    both-join-sides re-evaluation ahash_near_dup_pairs documents).
+    each side re-runs tokenization + windowing from the raw text (a
+    self-join reads its input once per side).
     Pinning the token arrays (one row per doc) is far cheaper than
     pinning the L-times-larger window expansion, which recomputes
     map-side from the pinned tokens."""

@@ -942,53 +942,11 @@ def sample_frames(
 
 
 # ---------------------------------------------------------------------------
-# Perceptual frame hashing (aHash) + Hamming-bucket near-dup
+# Perceptual frame hashing (aHash); near-dup pairs are dedup.hamming_pairs
 # ---------------------------------------------------------------------------
 
-#: Hamming radius of the near-dup decision; the band split below is the
-#: matching d+1 pigeonhole, so candidate generation is COMPLETE for ham<=d.
+#: Hamming radius of the frame near-dup decision.
 AHASH_MAX_HAM = 2
-_PACK = 4294967296  # doc_id * 2^32 + frame_no
-
-
-def ahash_frame_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    perturb_mod: int = 0,
-) -> DataFrame:
-    """Per-frame 64-bit average-hash: frame ``k`` = payload bytes
-    [64k, 64k+64); bit ``i`` is set iff ``n * byte_i > sum(frame bytes)``
-    (the integer-exact form of ``byte_i > mean`` — no division, identical
-    on both engines; short last frames compare against their own n/sum).
-    Returned as two 32-bit halves (``sig_hi`` bits 0-31, ``sig_lo`` bits
-    32-63) so XOR/bit_count stay inside signed BIGINT everywhere.
-
-    This is the aHash every image-dedup pipeline runs after resize-to-8x8:
-    here the "pixels" are payload bytes (this container decodes no real
-    codecs — operators/multimodal.py header), so the signature is exact
-    and oracle-checkable while the production swap-in is just a different
-    byte source.
-
-    ``perturb_mod`` > 0 re-encodes each byte as ``(byte + k % m) % 256``
-    (k = global byte offset) — the deterministic stand-in for a lossy
-    re-encode, used to PLANT near-identical frames: the mean shifts with
-    the bytes, so most bits survive and twin frames land within a few
-    bits of Hamming distance.
-
-    Scale shape: one narrow pass — the payload is hex-sliced per row, the
-    byte array lives only inside the projection, and ONLY (id, frame_no,
-    two BIGINTs) leave the map side. No shuffle, no payload replication.
-
-    Composition of :func:`frame_byte_arrays` (the hex-slice expansion) and
-    :func:`ahash_sigs_from_frames` (the signature aggregation) — callers
-    deriving SEVERAL signature variants of the same corpus (e.g. the
-    planted-twin union the near-dup queries build) should call the stages
-    directly and checkpoint the frame relation between them, so the
-    hex-slicing runs once, not once per variant."""
-    return ahash_sigs_from_frames(
-        frame_byte_arrays(df, id_col, text_col), id_col, perturb_mod=perturb_mod
-    )
 
 
 def frame_byte_arrays(
@@ -1044,22 +1002,31 @@ def frame_byte_arrays(
 def ahash_sigs_from_frames(
     frames: DataFrame,
     id_col: str = "doc_id",
-    perturb_mod: int = 0,
-    id_shift: int = 0,
     twin: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """The signature-aggregation half of :func:`ahash_frame_signatures`,
-    over a prebuilt (id, frame_no, __bytes) relation. ``perturb_mod``
-    re-encodes byte i of frame k as ``(b + (k*FRAME_SIZE + i) % m) % 256``
-    (identical to the fused form's global-offset perturbation);
-    ``id_shift`` relabels ids — together they derive the planted
-    'lossy re-encode' twin from the SAME frame relation, which is the
-    point of the split.
+    """Per-frame 64-bit average-hash over a (id, frame_no, __bytes)
+    relation from :func:`frame_byte_arrays`: frame ``k`` = payload bytes
+    [64k, 64k+64); bit ``i`` is set iff ``n * byte_i > sum(frame bytes)``
+    (the integer-exact form of ``byte_i > mean`` — no division, identical
+    on both engines; short last frames compare against their own n/sum).
+    Returned as two 32-bit halves (``sig_hi`` bits 0-31, ``sig_lo`` bits
+    32-63, MSB first) so XOR/bit_count stay inside signed BIGINT
+    everywhere; near-dup pairs are ``dedup.hamming_pairs``.
 
-    ``twin=(perturb_mod, id_shift)`` additionally emits a SECOND signature
-    variant from the same decoded byte matrix in the same pass — the rows
-    of ``base.unionAll(twin_variant)`` without shipping the frame bytes to
-    the Python workers twice (the planted-near-dup queries' shape)."""
+    This is the aHash every image-dedup pipeline runs after resize-to-8x8:
+    here the "pixels" are payload bytes (this container decodes no real
+    codecs — operators/multimodal.py header), so the signature is exact
+    and oracle-checkable while the production swap-in is just a different
+    byte source. Only (id, frame_no, two BIGINTs) leave the map side.
+
+    ``twin=(m, shift)`` additionally emits a SECOND signature variant
+    from the same decoded byte matrix in the same pass — byte i of frame
+    k re-encoded as ``(b + (k*FRAME_SIZE + i) % m) % 256`` (a
+    deterministic stand-in for a lossy re-encode: the mean shifts with the
+    bytes, so most bits survive) and ids shifted by ``shift`` —
+    the rows of ``base.unionAll(twin_variant)`` without shipping the frame
+    bytes to the Python workers twice (the planted-near-dup queries'
+    shape)."""
     # r13 (guide §4.2): the signature math — perturbation, frame sum, the
     # 64 bit comparisons and both Horner packs — moved from interpreted JVM
     # higher-order expressions (F.transform + three F.aggregate folds: a
@@ -1074,7 +1041,7 @@ def ahash_sigs_from_frames(
 
     id_type = dict(frames.dtypes)[id_col]
     fs = FRAME_SIZE
-    variants = [(perturb_mod, id_shift)] + ([twin] if twin is not None else [])
+    variants = [(0, 0)] + ([twin] if twin is not None else [])
 
     def _sigs(batches):
         import numpy as np
@@ -1121,97 +1088,4 @@ def ahash_sigs_from_frames(
 
     return frames.select(id_col, "frame_no", "__bytes").mapInPandas(
         _sigs, f"{id_col} {id_type}, frame_no bigint, sig_hi long, sig_lo long"
-    )
-
-
-def ahash_near_dup_pairs(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    max_ham: int = AHASH_MAX_HAM,
-) -> DataFrame:
-    """All frame pairs within Hamming distance ``max_ham`` of each other,
-    via the (max_ham+1)-band pigeonhole: the 64 signature bits split into
-    3 bands (22/21/21 bits); two signatures at ham<=2 MUST agree on at
-    least one whole band, so the band equi-join is a COMPLETE candidate
-    generator (same argument as the SimHash pigeonhole,
-    operators/dedup.py) — never an all-pairs cross join. Candidates are
-    then verified with the exact popcount and de-duplicated (a pair can
-    collide on several bands).
-
-    Output: (doc_a, frame_a, doc_b, frame_b, ham), pair ordered by the
-    packed (doc, frame) key so each pair appears exactly once.
-
-    Scale: band rows are 3 fixed-width rows per frame; the equi-join
-    shuffles on (band, value) — 2^21-value keyspace per band. Frames with
-    degenerate all-equal signatures (blank/constant payload regions) are
-    the skew risk: production corpora cap per-bucket membership the same
-    way the shingle join caps document frequency (operators/dedup.py) —
-    at this corpus's scale the hottest bucket holds a few hundred rows and
-    needs no cap.
-
-    The signature relation is pinned with an eager ``localCheckpoint``
-    before the self-join: sigs usually arrive as a live projection whose
-    per-byte hex-slicing is expensive, and the self-join + popcount
-    verify would otherwise re-evaluate that subtree on BOTH join sides
-    (measured 3.9x slower at sf0.1: 31.7s live vs 9.1s materialize +
-    8.3s join). Fixed-width (key, hi, lo) rows only — the payload never
-    reaches the checkpoint either."""
-    sigs = sigs.select(
-        F.col(id_col), F.col("frame_no"), F.col("sig_hi"), F.col("sig_lo")
-    ).localCheckpoint(eager=True)
-    key = (F.col(id_col) * F.lit(_PACK) + F.col("frame_no")).alias("__key")
-    bands = sigs.select(
-        key,
-        F.col("sig_hi"),
-        F.col("sig_lo"),
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("band"),
-                    F.expr("sig_hi div 1024").cast("long").alias("val"),
-                ),
-                F.struct(
-                    F.lit(1).alias("band"),
-                    (
-                        F.pmod(F.col("sig_hi"), F.lit(1024)) * F.lit(2097152)
-                        + F.expr("sig_lo div 2097152").cast("long")
-                    ).alias("val"),
-                ),
-                F.struct(
-                    F.lit(2).alias("band"),
-                    F.pmod(F.col("sig_lo"), F.lit(2097152)).alias("val"),
-                ),
-            )
-        ).alias("__b"),
-    ).select("__key", "sig_hi", "sig_lo", F.col("__b.band").alias("band"), F.col("__b.val").alias("val"))
-    a = bands.select(
-        F.col("band"),
-        F.col("val"),
-        F.col("__key").alias("__ka"),
-        F.col("sig_hi").alias("__ha"),
-        F.col("sig_lo").alias("__la"),
-    )
-    b = bands.select(
-        F.col("band"),
-        F.col("val"),
-        F.col("__key").alias("__kb"),
-        F.col("sig_hi").alias("__hb"),
-        F.col("sig_lo").alias("__lb"),
-    )
-    ham = F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb"))) + F.bit_count(
-        F.col("__la").bitwiseXOR(F.col("__lb"))
-    )
-    pairs = (
-        a.join(b, ["band", "val"])
-        .where(F.col("__ka") < F.col("__kb"))
-        .where(ham <= max_ham)
-        .select("__ka", "__kb", ham.cast("bigint").alias("ham"))
-        .distinct()
-    )
-    return pairs.select(
-        F.expr(f"__ka div {_PACK}").cast("bigint").alias("doc_a"),
-        F.pmod(F.col("__ka"), F.lit(_PACK)).cast("bigint").alias("frame_a"),
-        F.expr(f"__kb div {_PACK}").cast("bigint").alias("doc_b"),
-        F.pmod(F.col("__kb"), F.lit(_PACK)).cast("bigint").alias("frame_b"),
-        F.col("ham"),
     )

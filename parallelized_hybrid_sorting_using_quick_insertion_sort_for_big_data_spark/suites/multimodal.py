@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import dedup
 from ..operators import multimodal as M
 from ..queries import query
 from ..sources.tables import load_table
@@ -487,11 +488,12 @@ def mm_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    deterministically perturbed copy (byte + k%3 — a fake lossy re-encode:
 #    same frames land 0-5 bits apart, most within the ham<=2 decision).
 #    The ORACLE is the brute-force all-pairs sweep, so the hash check IS
-#    the completeness proof of the banded join: any pair the pigeonhole
+#    the completeness proof of dedup.hamming_pairs: any pair the pigeonhole
 #    missed would break the match.
 # ---------------------------------------------------------------------------
 
 _AHASH_PERTURB = 3
+_PACK = 4294967296  # frame key k = doc_id * 2^32 + frame_no
 
 # Shared CTE chain (byte expansion → frame stats → signatures) for the
 # near-dup and collapse oracles.
@@ -555,18 +557,17 @@ def mm_frame_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     which must still EMIT every pair): frames sharing an exact
     (sig_hi, sig_lo) are pairwise ham=0, so (a) intra-group pairs come
     from a plain equi-self-join on the signature — no band fan-out, no
-    popcount, output-bound; (b) the 3-band pigeonhole join runs over ONE
-    representative per DISTINCT signature (~10× fewer rows at sf0.1, and
-    the degenerate constant-payload signature that makes the hottest
-    band bucket collapses to one row); (c) each rep-rep pair at ham h
-    expands to all member×member cross pairs — same h, since members
+    popcount, output-bound; (b) the pigeonhole join ``dedup.hamming_pairs``
+    runs over ONE representative per DISTINCT signature (~10× fewer rows
+    at sf0.1, and the degenerate constant-payload signature that makes
+    the hottest piece bucket collapses to one row); (c) each rep-rep
+    pair at ham h expands to all member×member cross pairs — same h, since members
     carry identical signatures. Union of (a) and (c) is exactly the
     all-pairs ham<=2 set: intra pairs share both sig halves, cross pairs
     never do, so no pair is emitted twice. This is the 100 TB shape:
     exact-dup contraction before the near-dup join. Scale shape:
     signatures leave the map side as 2 BIGINTs/frame (payload never
-    shuffles); see operators/multimodal.py ahash_* for the band-join
-    notes."""
+    shuffles)."""
     sigs, groups, reps = _sig_groups(spark, sf_dir)
     members = sigs.join(groups, ["sig_hi", "sig_lo"]).select("rep", "k")
     # (a) intra-group ham=0 pairs, ordered by the packed key
@@ -576,29 +577,25 @@ def mm_frame_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("__ka") < F.col("__kb"))
         .select("__ka", "__kb", F.lit(0).cast("bigint").alias("ham"))
     )
-    # (b) band join over one rep per distinct signature
-    rep_pairs = M.ahash_near_dup_pairs(reps).select(
-        (F.col("doc_a") * F.lit(M._PACK) + F.col("frame_a")).alias("__ra"),
-        (F.col("doc_b") * F.lit(M._PACK) + F.col("frame_b")).alias("__rb"),
-        "ham",
-    )
+    # (b) pigeonhole join over one rep per distinct signature
+    rep_pairs = dedup.hamming_pairs(reps, "k", M.AHASH_MAX_HAM)
     # (c) expand each rep-rep pair to all member×member cross pairs
     cross = (
         rep_pairs.join(
-            members.select(F.col("rep").alias("__ra"), F.col("k").alias("ka")), "__ra"
+            members.select(F.col("rep").alias("id_a"), F.col("k").alias("ka")), "id_a"
         )
-        .join(members.select(F.col("rep").alias("__rb"), F.col("k").alias("kb")), "__rb")
+        .join(members.select(F.col("rep").alias("id_b"), F.col("k").alias("kb")), "id_b")
         .select(
             F.least("ka", "kb").alias("__ka"),
             F.greatest("ka", "kb").alias("__kb"),
-            "ham",
+            F.col("hamming").alias("ham"),
         )
     )
     return intra.unionAll(cross).select(
-        F.expr(f"__ka div {M._PACK}").cast("bigint").alias("doc_a"),
-        F.pmod(F.col("__ka"), F.lit(M._PACK)).cast("bigint").alias("frame_a"),
-        F.expr(f"__kb div {M._PACK}").cast("bigint").alias("doc_b"),
-        F.pmod(F.col("__kb"), F.lit(M._PACK)).cast("bigint").alias("frame_b"),
+        F.expr(f"__ka div {_PACK}").cast("bigint").alias("doc_a"),
+        F.pmod(F.col("__ka"), F.lit(_PACK)).cast("bigint").alias("frame_a"),
+        F.expr(f"__kb div {_PACK}").cast("bigint").alias("doc_b"),
+        F.pmod(F.col("__kb"), F.lit(_PACK)).cast("bigint").alias("frame_b"),
         "ham",
     )
 
@@ -607,14 +604,14 @@ def _sig_groups(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame,
     """Exact-signature groups of the planted frames: ``sigs`` (k, sig_hi,
     sig_lo) with k the packed (doc_id, frame_no) key, ``groups`` (sig_hi,
     sig_lo, rep) with rep the min k per distinct signature, and ``reps``
-    (doc_id, frame_no, sig_hi, sig_lo), one representative frame per
-    distinct signature. ``sigs`` and ``groups`` are pinned: each is
+    (k, sig_hi, sig_lo), one representative frame per distinct
+    signature. ``sigs`` and ``groups`` are pinned: each is
     consumed twice, and every unpinned use re-runs the signature pass or
     the distinct-signature agg."""
     sigs = (
         _ahash_planted_sigs(spark, sf_dir)
         .select(
-            (F.col("doc_id") * F.lit(M._PACK) + F.col("frame_no")).alias("k"),
+            (F.col("doc_id") * F.lit(_PACK) + F.col("frame_no")).alias("k"),
             "sig_hi",
             "sig_lo",
         )
@@ -625,12 +622,7 @@ def _sig_groups(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame,
         .agg(F.min("k").alias("rep"))
         .localCheckpoint(eager=True)
     )
-    reps = groups.select(
-        F.expr(f"rep div {M._PACK}").cast("bigint").alias("doc_id"),
-        F.pmod(F.col("rep"), F.lit(M._PACK)).cast("bigint").alias("frame_no"),
-        "sig_hi",
-        "sig_lo",
-    )
+    reps = groups.select(F.col("rep").alias("k"), "sig_hi", "sig_lo")
     return sigs, groups, reps
 
 
@@ -660,19 +652,21 @@ def _ahash_planted_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    perceptual cluster — the frame analog of pipeline_dedup_keep_best.
 # ---------------------------------------------------------------------------
 
+# edges is MATERIALIZED: inlined, DuckDB re-runs the brute-force fpairs sweep
+# in every step of the recursion (sf0.1: over 20 min against 82 s).
 _FRAME_COLLAPSE_ORACLE = f"""
 WITH RECURSIVE {_AHASH_CTES},
-edges AS (
+edges AS MATERIALIZED (
   SELECT id_a AS a, id_b AS b FROM fpairs
   UNION
   SELECT id_b AS a, id_a AS b FROM fpairs
 ),
-reach(node, r) AS (
+lbl(node, label) AS (
   SELECT DISTINCT a, a FROM edges
   UNION
-  SELECT reach.node, e.b FROM reach JOIN edges e ON reach.r = e.a
+  SELECT e.b, min(lbl.label) FROM lbl JOIN edges e ON e.a = lbl.node GROUP BY e.b
 ),
-comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
+comp AS (SELECT node, min(label) AS component FROM lbl GROUP BY node),
 csize AS (SELECT component, count(*) AS cluster_size FROM comp GROUP BY component)
 SELECT comp.node // 4294967296 AS doc_id,
        comp.node % 4294967296 AS frame_no,
@@ -691,24 +685,23 @@ def mm_frame_dedup_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py — O(log n) rounds of fixed-width shuffles) → the
     min packed (doc, frame) key as each cluster's canonical survivor.
     One row per clustered frame with its canonical owner and cluster
-    size; the oracle recomputes pairs brute-force and closes them with a
-    recursive transitive closure, so cluster membership AND canonical
-    choice are value-checked end to end."""
-    from ..operators import dedup
-
+    size; the oracle recomputes pairs brute-force and labels each node
+    with the min node it reaches by a recursive min-label propagation, so
+    cluster membership AND canonical choice are value-checked end to
+    end."""
     # Identical-signature pre-contraction: frames sharing an exact
     # (sig_hi, sig_lo) are pairwise ham=0 cliques — at sf0.1 they inflate
     # the raw pair graph to ~350k edges (~7 partners/frame) and dominate
-    # both the band join and the CC rounds. Component-equivalence:
+    # both the pair join and the CC rounds. Component-equivalence:
     # each group contracts to a star on its min packed key (all genuine
-    # ham-0 pairs), and the band join runs over one representative per
+    # ham-0 pairs), and the pair join runs over one representative per
     # DISTINCT signature (any member-member ham equals the rep-rep ham,
     # so rep-rep edges preserve exactly the cross-group connectivity).
     # Nodes with no ham<=2 partner still never enter the graph: a
     # singleton group emits no star edge and its rep only appears via a
     # cross pair. Same components, same min-node canonicals, ~10x fewer
-    # edges — and the degenerate-signature hot bucket the band join's
-    # docstring warns about collapses to ONE row per band. This is the
+    # edges — and the degenerate-signature hot bucket the pair join's
+    # docstring warns about collapses to ONE row per piece. This is the
     # 100 TB shape: exact-dup contraction before the near-dup join.
     sigs, groups, reps = _sig_groups(spark, sf_dir)
     star = (
@@ -716,17 +709,14 @@ def mm_frame_dedup_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("k") != F.col("rep"))
         .select(F.col("k").alias("id_a"), F.col("rep").alias("id_b"))
     )
-    cross = M.ahash_near_dup_pairs(reps).select(
-        (F.col("doc_a") * F.lit(M._PACK) + F.col("frame_a")).alias("id_a"),
-        (F.col("doc_b") * F.lit(M._PACK) + F.col("frame_b")).alias("id_b"),
-    )
+    cross = dedup.hamming_pairs(reps, "k", M.AHASH_MAX_HAM).select("id_a", "id_b")
     cc = dedup.connected_components(star.unionAll(cross))
     sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return cc.join(sizes, "component").select(
-        F.expr(f"node div {M._PACK}").cast("bigint").alias("doc_id"),
-        F.pmod(F.col("node"), F.lit(M._PACK)).cast("bigint").alias("frame_no"),
-        F.expr(f"component div {M._PACK}").cast("bigint").alias("canon_doc_id"),
-        F.pmod(F.col("component"), F.lit(M._PACK)).cast("bigint").alias("canon_frame_no"),
+        F.expr(f"node div {_PACK}").cast("bigint").alias("doc_id"),
+        F.pmod(F.col("node"), F.lit(_PACK)).cast("bigint").alias("frame_no"),
+        F.expr(f"component div {_PACK}").cast("bigint").alias("canon_doc_id"),
+        F.pmod(F.col("component"), F.lit(_PACK)).cast("bigint").alias("canon_frame_no"),
         "cluster_size",
         (F.col("node") == F.col("component")).alias("is_canonical"),
     )

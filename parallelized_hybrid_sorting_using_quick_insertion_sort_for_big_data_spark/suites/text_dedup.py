@@ -280,7 +280,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair can be missed. The whole approximate pipeline is value-hash-checked
     against generated DuckDB SQL."""
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_pairs(docs, max_hamming=8)
+    return dedup.hamming_pairs(dedup.simhash(docs), "doc_id", 8)
 
 
 query("dedup_simhash_portable", sql=_SIMHASH_ORACLE)(dedup_simhash)

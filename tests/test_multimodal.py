@@ -137,52 +137,6 @@ def test_frame_near_dup_oracle_parity(spark):
     )
 
 
-@pytest.mark.slow
-def test_ahash_banded_join_equals_brute_force(spark):
-    """Completeness of the 3-band pigeonhole at ham<=2, checked against an
-    in-Spark brute-force cross join on a small synthetic corpus that
-    includes planted near-identical, identical, and far-apart frames."""
-    from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.operators import (
-        multimodal as M,
-    )
-
-    # 3 frames worth of bytes per doc; doc 1 is doc 0 lightly perturbed
-    # (bytes sit FAR from the frame mean, so the +i%3 re-encode flips few
-    # bits and the twin frames stay within ham<=2), doc 2 is mean-adjacent
-    # everywhere so its own perturbation would scatter (kept unperturbed as
-    # the unrelated control)
-    base = (chr(40) * 4 + chr(120) * 4) * 24  # 192 bytes = 3 frames
-    pert = "".join(chr(ord(c) + (i % 3)) for i, c in enumerate(base))
-    other = "zyxwvuts" * 24
-    df = spark.createDataFrame(
-        [(0, base), (1, pert), (2, other)], "doc_id long, text string"
-    )
-    sigs = M.ahash_frame_signatures(df).cache()
-    got = {
-        (r["doc_a"], r["frame_a"], r["doc_b"], r["frame_b"], r["ham"])
-        for r in M.ahash_near_dup_pairs(sigs).collect()
-    }
-    a = sigs.toPandas()
-    brute = set()
-    for i in range(len(a)):
-        for j in range(len(a)):
-            ra, rb = a.iloc[i], a.iloc[j]
-            ka = ra.doc_id * M._PACK + ra.frame_no
-            kb = rb.doc_id * M._PACK + rb.frame_no
-            if ka >= kb:
-                continue
-            ham = bin((int(ra.sig_hi) ^ int(rb.sig_hi))).count("1") + bin(
-                (int(ra.sig_lo) ^ int(rb.sig_lo))
-            ).count("1")
-            if ham <= M.AHASH_MAX_HAM:
-                brute.add((ra.doc_id, ra.frame_no, rb.doc_id, rb.frame_no, ham))
-    assert got == brute
-    # the planted perturbed twin frames are actually found
-    twin_pairs = {(da, fa, db, fb) for da, fa, db, fb, _ in got if db == 1 and da == 0}
-    assert twin_pairs, "no perturbed twin frame was recovered"
-    sigs.unpersist()
-
-
 def test_ahash_signature_semantics(spark):
     """Hand-computed signature: a frame whose second half bytes are all
     larger than the first half -> bits 32..63 set (modulo the strict-mean
@@ -197,9 +151,22 @@ def test_ahash_signature_semantics(spark):
     df = spark.createDataFrame(
         [(0, low_high), (1, const)], "doc_id long, text string"
     )
-    rows = {r["doc_id"]: (r["sig_hi"], r["sig_lo"]) for r in M.ahash_frame_signatures(df).collect()}
+    sigs = M.ahash_sigs_from_frames(M.frame_byte_arrays(df))
+    rows = {r["doc_id"]: (r["sig_hi"], r["sig_lo"]) for r in sigs.collect()}
     assert rows[0] == (0, 4294967295)  # lo = all 32 bits set
     assert rows[1] == (0, 0)
+
+
+@pytest.mark.slow
+def test_frame_dedup_collapse_oracle_parity_at_sf01(spark):
+    """At sf0.1 the collapse oracle's min-label recursion closes the
+    brute-force pair graph (about 50k nodes), so cluster membership and
+    canonical choice are value-checked at the large scale too."""
+    from tests.conftest import SF_DIR_LARGE
+
+    name = "mm_frame_dedup_collapse"
+    df = entrymod.queries()[name](spark, SF_DIR_LARGE)
+    assert_matches_oracle(df, entrymod.oracle_sql()[name], SF_DIR_LARGE)
 
 
 @pytest.mark.slow

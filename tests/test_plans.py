@@ -418,16 +418,17 @@ def test_semantic_dedup_never_all_pairs(spark, qs):
 
 
 def test_frame_near_dup_banded_never_all_pairs(spark, qs):
-    """Perceptual frame near-dup must candidate-pair via the (band, value)
-    equi-join — never a cross join of the frame relation against itself —
-    and only fixed-width signature rows may reach the join (the payload
-    column must not appear in any exchange)."""
+    """Perceptual frame near-dup must candidate-pair via the pigeonhole
+    piece-key equi-join of ``dedup.hamming_pairs`` — never a cross join of
+    the frame relation against itself."""
+    import re
+
     df = qs["mm_frame_near_dup"](spark, SF_DIR)
     plan = PI.formatted_plan(df)
     assert not PI.has_cartesian(df)
     assert "BroadcastNestedLoopJoin" not in plan
-    # the join keys are the band split
-    assert "band" in plan and "val" in plan
+    # the pair join is keyed on the one long piece key
+    assert re.search(r"Left keys \[1\]: \[key#", plan), plan
 
 
 def test_q22_anti_join_with_scalar_thresholds(spark, qs):

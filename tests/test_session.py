@@ -84,6 +84,9 @@ def test_shipped_zip_is_removed_at_exit(tmp_path):
 # cell's job structure. The iterative cells run on fixpoint.iterate; their
 # counts are stable across runs (vec_pq_codes: lazy per-round pins plus a
 # pinned training relation, 15 jobs where eager per-round pins ran 18).
+# The two dedup.hamming_pairs cells are gated too; mm_frame_dedup_collapse
+# is not: it runs connected_components, and other CC cells change by one
+# job between reps.
 PROFILED_JOBS = {
     "sort_seeded_ints": 7,
     "graph_kcore": 32,
@@ -92,6 +95,8 @@ PROFILED_JOBS = {
     "vec_kmeans_centroids": 18,
     "text_bpe_merges": 29,
     "vec_pq_codes": 15,
+    "mm_frame_near_dup": 14,
+    "dedup_simhash": 7,
 }
 
 

@@ -9,6 +9,10 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entrymod
 from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.operators import (
     dedup,
+    multimodal as M,
+)
+from parallelized_hybrid_sorting_using_quick_insertion_sort_for_big_data_spark.suites.multimodal import (
+    _PACK,
 )
 from tests.conftest import SF_DIR, SF_DIR_MID, assert_matches_oracle
 
@@ -253,7 +257,7 @@ def test_simhash_near_dups_align_with_jaccard(spark, docs):
     exact = dedup.jaccard_pairs(docs, n=8, threshold=0.8).collect()
     sim = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.simhash_pairs(docs, max_hamming=20).collect()
+        for r in dedup.hamming_pairs(dedup.simhash(docs), "doc_id", 20).collect()
     }
     assert exact
     hits = sum(1 for r in exact if (r["id_a"], r["id_b"]) in sim)
@@ -266,61 +270,68 @@ def test_simhash_is_deterministic(spark, docs):
     assert a == b
 
 
-def test_simhash_pairs_complete_vs_bruteforce(spark, docs):
+def _simhash_sigs(spark, docs):
+    return dedup.simhash(docs.limit(120)), "doc_id", (4, 6, 8)
+
+
+def _ahash_sigs(spark, docs):
+    """Planted aHash frames: doc 1 is doc 0 lightly perturbed (bytes sit
+    FAR from the frame mean, so the +i%3 re-encode flips few bits and the
+    twin frames stay within ham<=2); doc 2 is an unrelated control. Keys
+    pack (doc_id, frame_no) as the frame queries do."""
+    base = (chr(40) * 4 + chr(120) * 4) * 24  # 192 bytes = 3 frames
+    pert = "".join(chr(ord(c) + (i % 3)) for i, c in enumerate(base))
+    other = "zyxwvuts" * 24
+    df = spark.createDataFrame([(0, base), (1, pert), (2, other)], "doc_id long, text string")
+    sigs = M.ahash_sigs_from_frames(M.frame_byte_arrays(df)).select(
+        (F.col("doc_id") * F.lit(_PACK) + F.col("frame_no")).alias("k"), "sig_hi", "sig_lo"
+    )
+    return sigs, "k", (M.AHASH_MAX_HAM,)
+
+
+@pytest.mark.parametrize(
+    "make_sigs",
+    [
+        pytest.param(_simhash_sigs, id="simhash"),
+        pytest.param(_ahash_sigs, id="ahash", marks=pytest.mark.slow),
+    ],
+)
+def test_hamming_pairs_complete_vs_bruteforce(spark, docs, make_sigs):
     """The pigeonhole candidate join must find EVERY pair within the
     Hamming bound — verified against a brute-force cross of the two-half
-    signatures. At d = 4 and 6 one of the d + 1 pieces crosses bit 32, so
-    the piece assembled from both halves is exercised too."""
+    signatures, for SimHash at d = 4, 6 and 8 (8 is the bound of the
+    ``dedup_simhash`` queries) and for planted aHash frames at d = 2. At
+    each d one of the d + 1 pieces crosses bit 32, so the piece assembled
+    from both halves is exercised too."""
     import itertools
 
-    sub = docs.limit(120)
-    sigs = dedup.simhash(sub).collect()
+    sigs, id_col, ds = make_sigs(spark, docs)
+    rows = sigs.collect()
     hams = {
-        (min(a["doc_id"], b["doc_id"]), max(a["doc_id"], b["doc_id"])): bin(
-            a["sim_hi"] ^ b["sim_hi"]
+        (min(a[id_col], b[id_col]), max(a[id_col], b[id_col])): bin(
+            a["sig_hi"] ^ b["sig_hi"]
         ).count("1")
-        + bin(a["sim_lo"] ^ b["sim_lo"]).count("1")
-        for a, b in itertools.combinations(sigs, 2)
+        + bin(a["sig_lo"] ^ b["sig_lo"]).count("1")
+        for a, b in itertools.combinations(rows, 2)
     }
-    for d in (4, 6):
-        assert any(s < 32 < s + w for s, w in dedup._simhash_piece_bounds(d + 1)), d
+    for d in ds:
+        assert any(s < 32 < s + w for s, w in dedup._hamming_piece_bounds(d + 1)), d
         got = {
             (r["id_a"], r["id_b"]): r["hamming"]
-            for r in dedup.simhash_pairs(sub, max_hamming=d).collect()
+            for r in dedup.hamming_pairs(sigs, id_col, d).collect()
         }
         assert got == {p: h for p, h in hams.items() if h <= d}, f"d={d}"
+    assert any(h <= max(ds) for h in hams.values()), "expected near-dup pairs"
+    if make_sigs is _ahash_sigs:
+        assert any(a // _PACK == 0 and b // _PACK == 1 for a, b in got), (
+            "no perturbed twin frame was recovered"
+        )
 
 
-def test_portable_simhash_pairs_complete_vs_bruteforce(spark, docs):
-    """At max_hamming = 8, the bound of the ``dedup_simhash`` and
-    ``dedup_simhash_portable`` registry queries, the candidate join must
-    find every pair within the Hamming bound of the two-half signature
-    (formerly the portable SimHash, now the only one)."""
-    import itertools
-
-    sub = docs.limit(120)
-    sigs = dedup.simhash(sub).collect()
-    d = 8
-    assert any(s < 32 < s + w for s, w in dedup._simhash_piece_bounds(d + 1))
-    brute = {}
-    for a, b in itertools.combinations(sigs, 2):
-        ham = bin(a["sim_hi"] ^ b["sim_hi"]).count("1") + bin(
-            a["sim_lo"] ^ b["sim_lo"]
-        ).count("1")
-        if ham <= d:
-            brute[(min(a["doc_id"], b["doc_id"]), max(a["doc_id"], b["doc_id"]))] = ham
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.simhash_pairs(sub, max_hamming=d).collect()
-    }
-    assert brute, "expected near-dup pairs within d = 8 in testdata"
-    assert got == brute
-
-
-def test_simhash_pairs_rejects_out_of_range_hamming(spark, docs):
+def test_hamming_pairs_rejects_out_of_range_hamming(spark, docs):
     for d in (-1, 64):
         with pytest.raises(ValueError):
-            dedup.simhash_pairs(docs, max_hamming=d)
+            dedup.hamming_pairs(dedup.simhash(docs), "doc_id", d)
 
 
 def test_minhash_slots_are_independent_permutations(spark):
