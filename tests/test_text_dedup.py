@@ -270,42 +270,18 @@ def test_simhash_is_deterministic(spark, docs):
     assert a == b
 
 
-def _simhash_sigs(spark, docs):
-    return dedup.simhash(docs.limit(120)), "doc_id", (4, 6, 8)
+def _simhash_sigs(docs):
+    return dedup.simhash(docs.limit(120)), "doc_id"
 
 
-def _ahash_sigs(spark, docs):
-    """Planted aHash frames: doc 1 is doc 0 lightly perturbed (bytes sit
-    FAR from the frame mean, so the +i%3 re-encode flips few bits and the
-    twin frames stay within ham<=2); doc 2 is an unrelated control. Keys
-    pack (doc_id, frame_no) as the frame queries do."""
-    base = (chr(40) * 4 + chr(120) * 4) * 24  # 192 bytes = 3 frames
-    pert = "".join(chr(ord(c) + (i % 3)) for i, c in enumerate(base))
-    other = "zyxwvuts" * 24
-    df = spark.createDataFrame([(0, base), (1, pert), (2, other)], "doc_id long, text string")
-    sigs = M.ahash_sigs_from_frames(M.frame_byte_arrays(df)).select(
-        (F.col("doc_id") * F.lit(_PACK) + F.col("frame_no")).alias("k"), "sig_hi", "sig_lo"
-    )
-    return sigs, "k", (M.AHASH_MAX_HAM,)
-
-
-@pytest.mark.parametrize(
-    "make_sigs",
-    [
-        pytest.param(_simhash_sigs, id="simhash"),
-        pytest.param(_ahash_sigs, id="ahash", marks=pytest.mark.slow),
-    ],
-)
-def test_hamming_pairs_complete_vs_bruteforce(spark, docs, make_sigs):
+def _assert_hamming_pairs_complete(sigs, id_col, ds):
     """The pigeonhole candidate join must find EVERY pair within the
-    Hamming bound — verified against a brute-force cross of the two-half
-    signatures, for SimHash at d = 4, 6 and 8 (8 is the bound of the
-    ``dedup_simhash`` queries) and for planted aHash frames at d = 2. At
-    each d one of the d + 1 pieces crosses bit 32, so the piece assembled
-    from both halves is exercised too."""
+    Hamming bound: check ``hamming_pairs`` against a brute-force cross of
+    the two-half signatures at each d. At each d one of the d + 1 pieces
+    crosses bit 32, so the piece assembled from both halves is exercised
+    too. Returns the brute-force distances and the last d's pairs."""
     import itertools
 
-    sigs, id_col, ds = make_sigs(spark, docs)
     rows = sigs.collect()
     hams = {
         (min(a[id_col], b[id_col]), max(a[id_col], b[id_col])): bin(
@@ -314,6 +290,7 @@ def test_hamming_pairs_complete_vs_bruteforce(spark, docs, make_sigs):
         + bin(a["sig_lo"] ^ b["sig_lo"]).count("1")
         for a, b in itertools.combinations(rows, 2)
     }
+    got = {}
     for d in ds:
         assert any(s < 32 < s + w for s, w in dedup._hamming_piece_bounds(d + 1)), d
         got = {
@@ -321,11 +298,42 @@ def test_hamming_pairs_complete_vs_bruteforce(spark, docs, make_sigs):
             for r in dedup.hamming_pairs(sigs, id_col, d).collect()
         }
         assert got == {p: h for p, h in hams.items() if h <= d}, f"d={d}"
-    assert any(h <= max(ds) for h in hams.values()), "expected near-dup pairs"
-    if make_sigs is _ahash_sigs:
-        assert any(a // _PACK == 0 and b // _PACK == 1 for a, b in got), (
-            "no perturbed twin frame was recovered"
-        )
+    return hams, got
+
+
+def test_simhash_pairs_complete_vs_bruteforce(spark, docs):
+    """SimHash near-dup pairs from ``hamming_pairs`` at d = 4 and 6 equal
+    the brute-force set."""
+    _assert_hamming_pairs_complete(*_simhash_sigs(docs), (4, 6))
+
+
+def test_portable_simhash_pairs_complete_vs_bruteforce(spark, docs):
+    """At max_hamming = 8, the bound of the ``dedup_simhash`` and
+    ``dedup_simhash_portable`` registry queries, ``hamming_pairs`` must
+    find every SimHash pair within the bound, and testdata has some."""
+    _, got = _assert_hamming_pairs_complete(*_simhash_sigs(docs), (8,))
+    assert got, "expected near-dup pairs within d = 8 in testdata"
+
+
+@pytest.mark.slow
+def test_ahash_frame_pairs_complete_vs_bruteforce(spark):
+    """Planted aHash frames: doc 1 is doc 0 lightly perturbed (bytes sit
+    FAR from the frame mean, so the +i%3 re-encode flips few bits and the
+    twin frames stay within ham<=2); doc 2 is an unrelated control. Keys
+    pack (doc_id, frame_no) as the frame queries do. ``hamming_pairs`` at
+    d = 2 equals the brute force and recovers a twin frame pair."""
+    base = (chr(40) * 4 + chr(120) * 4) * 24  # 192 bytes = 3 frames
+    pert = "".join(chr(ord(c) + (i % 3)) for i, c in enumerate(base))
+    other = "zyxwvuts" * 24
+    df = spark.createDataFrame([(0, base), (1, pert), (2, other)], "doc_id long, text string")
+    sigs = M.ahash_sigs_from_frames(M.frame_byte_arrays(df)).select(
+        (F.col("doc_id") * F.lit(_PACK) + F.col("frame_no")).alias("k"), "sig_hi", "sig_lo"
+    )
+    hams, got = _assert_hamming_pairs_complete(sigs, "k", (M.AHASH_MAX_HAM,))
+    assert any(h <= M.AHASH_MAX_HAM for h in hams.values()), "expected near-dup pairs"
+    assert any(a // _PACK == 0 and b // _PACK == 1 for a, b in got), (
+        "no perturbed twin frame was recovered"
+    )
 
 
 def test_hamming_pairs_rejects_out_of_range_hamming(spark, docs):
